@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import time
 import uuid
-from dataclasses import asdict
+from dataclasses import asdict, replace
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -444,11 +444,10 @@ class CheckpointedRun:
         # lineage — Iceberg's snapshot isolation gives this for free; on
         # parquet, localCheckpoint is the stand-in.
         todo = todo.localCheckpoint(eager=True)
-        res = run_pipeline(todo, self.config)
         # the extraction/chunk/mention UDF stages feed every downstream
-        # write — persist them once so the six appends don't recompute (on a
-        # cluster these would be intermediate Iceberg tables)
-        res.persist()
+        # write — materialize them once so the six appends don't recompute
+        # (on a cluster these would be intermediate Iceberg tables)
+        res = run_pipeline(todo, replace(self.config, materialize=True))
 
         run_id = uuid.uuid4().hex
         self._append_stages(res, run_id)

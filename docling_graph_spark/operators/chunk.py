@@ -31,6 +31,21 @@ DEFAULT_CONTEXT_LIMIT = 8000
 DEFAULT_MERGE_THRESHOLD = k_batch.DEFAULT_MERGE_THRESHOLD
 
 
+def batched_spans(text: str, max_tokens: int, available: int,
+                  merge_threshold: float, count):
+    """One document's chunk spans, each with its batching cost and batch id:
+    the per-document body shared by the chunk UDF and the fused
+    extract+chunk UDF (operators/extract.py).  ``count`` is the token
+    counter; ``available`` the per-batch token budget."""
+    spans = k_chunk.chunk_spans(text, max_tokens)
+    costs = [count(s.text) + k_batch.CHUNK_OVERHEAD_TOKENS for s in spans]
+    batch_of = {}
+    for b in k_batch.batch_chunks(costs, available, merge_threshold):
+        for idx in b.chunk_indices:
+            batch_of[idx] = b.batch_id
+    return [(s, costs[i], batch_of.get(i, 0)) for i, s in enumerate(spans)]
+
+
 def make_chunker_udf(max_tokens: int = DEFAULT_MAX_TOKENS,
                      context_limit: int = DEFAULT_CONTEXT_LIMIT,
                      merge_threshold: float = DEFAULT_MERGE_THRESHOLD,
@@ -44,33 +59,21 @@ def make_chunker_udf(max_tokens: int = DEFAULT_MAX_TOKENS,
         from ..kernels.tokenization import get_token_counter
 
         count = get_token_counter(tokenizer_name)
-        out = []
-        for text in texts:
-            if not text:
-                out.append([])
-                continue
-            spans = k_chunk.chunk_spans(text, max_tokens)
-            costs = [
-                count(s.text) + k_batch.CHUNK_OVERHEAD_TOKENS
-                for s in spans
-            ]
-            batches = k_batch.batch_chunks(costs, available, merge_threshold)
-            batch_of = {}
-            for b in batches:
-                for idx in b.chunk_indices:
-                    batch_of[idx] = b.batch_id
-            out.append([
+        return pd.Series([
+            [
                 {
                     "chunk_id": s.chunk_id,
                     "start": s.start,
                     "end": s.end,
                     "text": s.text,
-                    "token_est": costs[i],
-                    "batch_id": batch_of.get(i, 0),
+                    "token_est": cost,
+                    "batch_id": batch_id,
                 }
-                for i, s in enumerate(spans)
-            ])
-        return pd.Series(out)
+                for s, cost, batch_id in batched_spans(
+                    text, max_tokens, available, merge_threshold, count)
+            ] if text else []
+            for text in texts
+        ])
 
     return chunk_and_batch
 

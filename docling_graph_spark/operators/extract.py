@@ -145,7 +145,7 @@ def make_extract_chunk_udf(max_tokens: int, context_limit: int,
     construction (same kernels, same inputs); enforced by the oracle gate.
     """
     from ..kernels import batching as k_batch
-    from ..kernels import chunking as k_chunk
+    from .chunk import batched_spans
 
     schema = T.StructType(
         list(EXTRACTION_RESULT.fields)
@@ -166,17 +166,8 @@ def make_extract_chunk_udf(max_tokens: int, context_limit: int,
                                                             transport)
             chunks = []
             if err is None and text.strip():
-                cspans = k_chunk.chunk_spans(text, max_tokens)
-                costs = [
-                    count(s.text) + k_batch.CHUNK_OVERHEAD_TOKENS
-                    for s in cspans
-                ]
-                batches = k_batch.batch_chunks(costs, available,
-                                               merge_threshold)
-                batch_of = {}
-                for b in batches:
-                    for idx in b.chunk_indices:
-                        batch_of[idx] = b.batch_id
+                planned = batched_spans(text, max_tokens, available,
+                                        merge_threshold, count)
                 # no "text" field: chunk strings are exact slices
                 # text[start:end] (schemas.CHUNK_SPAN_LITE) — the JVM
                 # rebuilds them by BYTE-slicing the binary form, so the
@@ -185,11 +176,11 @@ def make_extract_chunk_udf(max_tokens: int, context_limit: int,
                 # ASCII text (one C-level isascii scan); otherwise one
                 # incremental encode pass over the document.
                 if text.isascii():
-                    offs = [(s.start, s.end) for s in cspans]
+                    offs = [(s.start, s.end) for s, _, _ in planned]
                 else:
                     offs = []
                     pos_c = pos_b = 0
-                    for s in cspans:
+                    for s, _, _ in planned:
                         pos_b += len(text[pos_c:s.start].encode("utf-8"))
                         b0 = pos_b
                         pos_b += len(text[s.start:s.end].encode("utf-8"))
@@ -200,12 +191,12 @@ def make_extract_chunk_udf(max_tokens: int, context_limit: int,
                         "chunk_id": s.chunk_id,
                         "start": s.start,
                         "end": s.end,
-                        "b_start": offs[i][0],
-                        "b_end": offs[i][1],
-                        "token_est": costs[i],
-                        "batch_id": batch_of.get(i, 0),
+                        "b_start": b0,
+                        "b_end": b1,
+                        "token_est": cost,
+                        "batch_id": batch_id,
                     }
-                    for i, s in enumerate(cspans)
+                    for (s, cost, batch_id), (b0, b1) in zip(planned, offs)
                 ]
             texts.append(text)
             spans_col.append(spans)

@@ -362,8 +362,8 @@ def clean_graph(nodes: DataFrame, edges: DataFrame,
                 content_dedup: bool = False,
                 edges_distinct: bool = False,
                 nodes_distinct: bool = False,
-                referential_integrity: bool = False,
-                broadcast_ids: bool = False) -> Tuple[DataFrame, DataFrame]:
+                referential_integrity: bool = False
+                ) -> Tuple[DataFrame, DataFrame]:
     """Full cleanup chain in reference order (`graph_cleaner.py:76-127`).
 
     The reference cleans because LLM extractions are messy: duplicate nodes,
@@ -382,8 +382,6 @@ def clean_graph(nodes: DataFrame, edges: DataFrame,
       `validate_web_graph` to CHECK the invariants instead of silently
       enforcing them (validation is an aggregation — cheap — where
       enforcement is a join — expensive).
-    * ``broadcast_ids``       — when the orphan check does run, broadcast
-      the narrow id set so the big edge relation never shuffles.
     """
     nodes = phantom_filter(nodes)
     if not nodes_distinct:
@@ -391,7 +389,7 @@ def clean_graph(nodes: DataFrame, edges: DataFrame,
     if content_dedup:
         nodes, edges = dedup_nodes_by_content(nodes, edges)
     if not referential_integrity:
-        edges = drop_orphan_edges(nodes, edges, broadcast_ids=broadcast_ids)
+        edges = drop_orphan_edges(nodes, edges)
     if not edges_distinct:
         edges = dedup_edges(edges)
     return nodes, edges

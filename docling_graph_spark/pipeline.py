@@ -14,8 +14,7 @@ available for host-keyed stages.
 
 from __future__ import annotations
 
-import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Dict, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,15 +53,6 @@ class PipelineConfig:
     add_reverse_edges: bool = False
     content_dedup: bool = False
     run_id: str = "run"
-    # input parallelism floor for the extraction UDF stage: True = ensure at
-    # least the cluster's default parallelism (a single fat parquet file
-    # otherwise serializes the whole parse on one task); int = exact target;
-    # False = leave the scan partitioning untouched
-    repartition_input: object = True
-    # attach the zero-job Observation counters (docs/bytes/errors) to the
-    # extraction relation; off only for micro-benchmarks that want the
-    # absolute minimal plan
-    observe_metrics: bool = True
     # persist the expensive intermediates (extraction / chunk / mention UDF
     # outputs) as part of building the result, so a caller that runs several
     # output actions (nodes AND edges AND metrics) parses each document once
@@ -94,11 +84,9 @@ class PipelineResult:
     combined: Optional[DataFrame] = None
 
     @property
-    def run_counters(self) -> Optional[Dict]:
+    def run_counters(self) -> Dict:
         """Global (docs_parsed, bytes_stripped, errors) observed on the
         first output action; blocks until one has run."""
-        if self.observation is None:
-            return None
         return dict(self.observation.get)
 
     def _persist_roots(self):
@@ -134,50 +122,68 @@ def salted_repartition(df: DataFrame, num_partitions: int,
     return df.repartition(num_partitions, F.xxhash64(host, salt))
 
 
-def ensure_parallel_input(web_pages: DataFrame,
-                          target: Optional[int] = None) -> DataFrame:
+def ensure_parallel_input(web_pages: DataFrame) -> DataFrame:
     """Guarantee the extraction stage can use the whole cluster.
 
     A Common-Crawl-style table read from few/fat files yields few input
     splits, and the Arrow UDF parse — the dominant cost — inherits that
-    parallelism.  When the scan has fewer partitions than the target
-    (default: the cluster's defaultParallelism), redistribute by the salted
-    url-host hash (north-rule skew handling: hot hosts spread across salt
-    buckets instead of hot-spotting one task)."""
-    spark = web_pages.sparkSession
+    parallelism.  When the scan has fewer partitions than the cluster's
+    defaultParallelism, redistribute by the salted url-host hash (north-rule
+    skew handling: hot hosts spread across salt buckets instead of
+    hot-spotting one task)."""
     # a source that already guarantees >= defaultParallelism partitions tags
     # itself, skipping the .rdd partition probe (several seconds of
-    # driver-side plan->RDD conversion); an explicit target still repartitions
-    if target is None and getattr(web_pages, "_dgspark_parallel_ok", False):
+    # driver-side plan->RDD conversion)
+    if getattr(web_pages, "_dgspark_parallel_ok", False):
         return web_pages
-    target = target or spark.sparkContext.defaultParallelism
+    target = web_pages.sparkSession.sparkContext.defaultParallelism
     if web_pages.rdd.getNumPartitions() >= target:
         return web_pages
     return salted_repartition(web_pages, target)
 
 
+def build_web_graph(extracted: DataFrame, chunks: DataFrame,
+                    doc_mentions: DataFrame,
+                    cfg: PipelineConfig) -> Tuple[DataFrame, DataFrame]:
+    """Graph half of the pipeline: document/chunk/term graph assembly plus
+    relational cleanup.  Shared by `run_pipeline` and the stream's graph
+    finalize (streaming/incremental.assemble_accumulated_graph)."""
+    nodes, edges = op_graph.assemble_web_graph(
+        extracted, chunks, doc_mentions,
+        id_mode=cfg.id_mode, add_reverse_edges=cfg.add_reverse_edges,
+    )
+    # the web graph is constructed: node ids derive from the same rows that
+    # emit the edges, edge/node sets come out of groupBys and unique-row
+    # projections — the dedup/orphan passes are no-ops and each would cost a
+    # full shuffle of the largest relation.  Declare the invariants and use
+    # op_graph.validate_web_graph to CHECK them (see graph_validation query).
+    return op_graph.clean_graph(nodes, edges,
+                                content_dedup=cfg.content_dedup,
+                                edges_distinct=True,
+                                nodes_distinct=True,
+                                referential_integrity=True)
+
+
 def run_pipeline(web_pages: DataFrame,
                  config: Optional[PipelineConfig] = None) -> PipelineResult:
+    """Compose the document-local operators (extract → chunk → mention →
+    metrics) and the graph half over ``web_pages``.  The one place the
+    operators are wired together: the oneshot job, `CheckpointedRun` and
+    every stream micro-batch (streaming/incremental.py) all run this."""
     cfg = config or PipelineConfig()
-    if cfg.repartition_input:
-        target = (cfg.repartition_input
-                  if isinstance(cfg.repartition_input, int)
-                  and not isinstance(cfg.repartition_input, bool) else None)
-        web_pages = ensure_parallel_input(web_pages, target)
+    web_pages = ensure_parallel_input(web_pages)
 
     max_tokens = (chunking.schema_adjusted_max_tokens(cfg.max_tokens,
                                                       cfg.schema_size)
                   if cfg.schema_size > 0 else cfg.max_tokens)
     from pyspark.sql import Observation
 
-    obs = Observation("run_counters") if cfg.observe_metrics else None
+    obs = Observation("run_counters")
 
     def _observe(df: DataFrame) -> DataFrame:
         # counters ride the first real action over the extraction relation
         # (df.observe is an identity node with aggregate side-channels) —
         # the run-level docs/bytes/errors totals arrive without a job
-        if obs is None:
-            return df
         return df.observe(
             obs,
             F.count(F.lit(1)).alias("docs_parsed"),
@@ -207,20 +213,7 @@ def run_pipeline(web_pages: DataFrame,
     mentions = op_entities.extract_mentions(chunks)
     doc_mentions = op_entities.doc_mentions(mentions)
 
-    nodes, edges = op_graph.assemble_web_graph(
-        extracted, chunks, doc_mentions,
-        id_mode=cfg.id_mode, add_reverse_edges=cfg.add_reverse_edges,
-    )
-    # the web graph is constructed: node ids derive from the same rows that
-    # emit the edges, edge/node sets come out of groupBys and unique-row
-    # projections — the dedup/orphan passes are no-ops and each would cost a
-    # full shuffle of the largest relation.  Declare the invariants and use
-    # op_graph.validate_web_graph to CHECK them (see graph_validation query).
-    nodes, edges = op_graph.clean_graph(nodes, edges,
-                                        content_dedup=cfg.content_dedup,
-                                        edges_distinct=True,
-                                        nodes_distinct=True,
-                                        referential_integrity=True)
+    nodes, edges = build_web_graph(extracted, chunks, doc_mentions, cfg)
     metrics = op_stats.partition_metrics(extracted_all, cfg.run_id)
     result = PipelineResult(extracted, chunks, doc_mentions, nodes, edges,
                             metrics, observation=obs,

@@ -5,7 +5,7 @@ exists to port).  At corpus scale, however, a Common-Crawl-style table grows
 by crawl batch, and the natural Spark expression of "process only what's
 new" is a file-source stream:
 
-    readStream(new parquet files) → foreachBatch(extract → chunk → mention)
+    readStream(new parquet files) → foreachBatch(run_pipeline)
     → append stage tables, offsets tracked in the stream checkpoint
 
 `Trigger.AvailableNow` drains everything currently unprocessed then stops —
@@ -15,22 +15,23 @@ input files were consumed) replaces the left_anti restart of
 different failure models — stream offsets track *input files*, the anti-join
 tracks *output keys* (and therefore also heals partially-written outputs).
 
-The per-batch work reuses the exact batch operators — one code path for
-batch and streaming, which is the point of foreachBatch.
+Each micro-batch runs `pipeline.run_pipeline` itself — one code path for
+batch and streaming, which is the point of foreachBatch — so the stream
+honors every `PipelineConfig` knob the oneshot job does (``chunker``,
+``tokenizer_name``, ``schema_size``, ...) and pays the fused extract+chunk
+Python pass once per micro-batch.  Graph finalize over the accumulated
+tables reuses `pipeline.build_web_graph`.
 """
 
 from __future__ import annotations
 
+import dataclasses
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import chunk as op_chunk
-from ..operators import entities as op_entities
-from ..operators import extract as op_extract
-from ..operators import stats as op_stats
-from ..pipeline import PipelineConfig
+from ..pipeline import PipelineConfig, build_web_graph, run_pipeline
 from ..schemas import WEB_PAGES
 
 
@@ -171,7 +172,7 @@ def run_incremental(spark: SparkSession, input_dir: str, output_root: str,
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if dedup_urls:
-            from pyspark.sql import Window, functions as F
+            from pyspark.sql import Window
 
             # newest capture per url within the batch (deterministic:
             # warc_ts desc, then the record's own order is irrelevant
@@ -202,39 +203,32 @@ def run_incremental(spark: SparkSession, input_dir: str, output_root: str,
                     batch_df = definite_new.unionByName(candidates)
                 else:
                     batch_df = batch_df.join(seen, "url", "left_anti")
-        # extract_main_text fills NULL lang from the extracted text
-        # (operators/extract._lang_col) — same on the batch path, so both
-        # ingestion modes produce identical stage-table lang values
-        extracted_all = op_extract.extract_main_text(batch_df)
-        extracted = op_extract.filter_extractable(extracted_all).persist()
-        chunks = op_chunk.chunk_documents(
-            extracted, cfg.max_tokens, cfg.context_limit, cfg.merge_threshold
-        )
-        mentions = op_entities.doc_mentions(op_entities.extract_mentions(chunks))
-        metrics = op_stats.partition_metrics(
-            extracted_all, f"{cfg.run_id}-b{batch_id}"
-        )
+        # the stage tables are four writes over one result: materialize so
+        # the extract+chunk pass and the mention aggregate run once
+        res = run_pipeline(batch_df, dataclasses.replace(
+            cfg, run_id=f"{cfg.run_id}-b{batch_id}", materialize=True))
         if dedup_urls and bloom_bits > 0:
             from ..operators import bloom as op_bloom
 
             # publish BEFORE the append: a crash between the two leaves the
             # filter over-approximating the ledger (harmless), never under
             delta = op_bloom.bloom_words(
-                extracted.select("url"), "url", bloom_bits)
+                res.extracted.select("url"), "url", bloom_bits)
             try:
                 existing = spark.read.parquet(_bloom_dir(root))
                 merged = op_bloom.bloom_update(existing, delta)
             except Exception:
                 merged = delta  # very first batch: no filter yet
             _publish_bloom_words(spark, root, bloom_bits, merged)
-        extracted.write.mode("append").parquet(f"{root}/extracted")
-        chunks.write.mode("append").parquet(f"{root}/chunks")
-        mentions.write.mode("append").parquet(f"{root}/doc_mentions")
-        metrics.write.mode("append").parquet(f"{root}/metrics")
+        res.extracted.write.mode("append").parquet(f"{root}/extracted")
+        res.chunks.write.mode("append").parquet(f"{root}/chunks")
+        res.doc_mentions.write.mode("append").parquet(f"{root}/doc_mentions")
+        res.metrics.write.mode("append").parquet(f"{root}/metrics")
         if wet_dir:
             from ..sources.warc import write_wet
 
-            write_wet(extracted, f"{wet_dir.rstrip('/')}/batch-{batch_id}")
+            write_wet(res.extracted,
+                      f"{wet_dir.rstrip('/')}/batch-{batch_id}")
         if link_edges:
             from ..operators import linkgraph as op_lg
 
@@ -261,7 +255,7 @@ def run_incremental(spark: SparkSession, input_dir: str, output_root: str,
                 edge_src.select("url").write.mode("append").parquet(
                     f"{root}/host_edges_urls")
                 edge_src.unpersist()
-        extracted.unpersist()
+        res.unpersist()
 
     query = (
         stream_web_pages(spark, input_dir, input_format=input_format)
@@ -299,8 +293,6 @@ def assemble_accumulated_graph(spark: SparkSession, output_root: str,
     (overwrite: finalize rebuilds the corpus-global snapshot; the stage
     tables stay append-only).  Returns ``(nodes, edges)``.
     """
-    from ..operators import graph as op_graph
-
     cfg = config or PipelineConfig()
     root = output_root.rstrip("/")
     extracted = spark.read.parquet(f"{root}/extracted")
@@ -320,18 +312,7 @@ def assemble_accumulated_graph(spark: SparkSession, output_root: str,
             f"{dup.limit(3).collect()}"
         )
 
-    nodes, edges = op_graph.assemble_web_graph(
-        extracted, chunks, doc_mentions,
-        id_mode=cfg.id_mode, add_reverse_edges=cfg.add_reverse_edges,
-    )
-    # same declared invariants as pipeline.run_pipeline: ids derive from
-    # the rows that emit the edges, so the dedup/orphan passes are no-ops —
-    # declare and (separately) validate instead of paying full shuffles
-    nodes, edges = op_graph.clean_graph(
-        nodes, edges, content_dedup=cfg.content_dedup,
-        edges_distinct=True, nodes_distinct=True,
-        referential_integrity=True,
-    )
+    nodes, edges = build_web_graph(extracted, chunks, doc_mentions, cfg)
     if write:
         nodes.write.mode("overwrite").parquet(f"{root}/nodes")
         edges.write.mode("overwrite").parquet(f"{root}/edges")

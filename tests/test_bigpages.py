@@ -54,8 +54,7 @@ def test_multi_megabyte_single_page(spark):
     pages = spark.createDataFrame(
         [("https://giant.example.com/p", ts, html, None, "en")],
         schema=schemas.WEB_PAGES)
-    res = run_pipeline(pages, PipelineConfig(id_mode="xxhash64",
-                                             repartition_input=False))
+    res = run_pipeline(pages, PipelineConfig(id_mode="xxhash64"))
     row = res.extracted.collect()[0]
     assert row.error is None
     assert row.text == body

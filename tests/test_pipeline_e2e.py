@@ -263,8 +263,7 @@ def test_malformed_payloads_never_crash(spark):
          b"<html><body><p>text with nulls</p></body></html>", None, None),
     ]
     pages = spark.createDataFrame(rows, schema=schemas.WEB_PAGES)
-    cfg = PipelineConfig(max_tokens=25, id_mode="xxhash64",
-                         repartition_input=False)
+    cfg = PipelineConfig(max_tokens=25, id_mode="xxhash64")
     res = run_pipeline(pages, cfg)
 
     # every input row is accounted for in the raw extraction relation
@@ -306,3 +305,67 @@ def test_observation_counters_ride_first_action(spark, sf_smoke_dir):
     assert (got["docs_parsed"], got["bytes_stripped"], got["errors"]) \
         == tuple(m)
     assert got["docs_parsed"] > 0
+
+
+# layer attributes perfbench/probes.instrument wraps: the traced benchmark
+# reroutes these module attributes, so run_pipeline / CheckpointedRun must
+# keep calling each one through its module
+_PROBED = {
+    "extract": ("extract_and_chunk",),
+    "chunk": ("chunks_from_combined",),
+    "entities": ("extract_mentions", "doc_mentions"),
+    "graph": ("assemble_web_graph", "clean_graph"),
+    "stats": ("partition_metrics",),
+    "checkpointing": ("pending_inputs",),
+}
+
+
+def test_probe_contract_each_layer_called_once(spark, sf_smoke_dir,
+                                               tmp_path, monkeypatch):
+    """Every layer attribute the benchmark tracer wraps is reached exactly
+    once per pipeline build; a refactor that bypasses one would silently
+    empty that layer's row of the `--trace 1` report."""
+    import importlib
+    import os
+    import re
+
+    from docling_graph_spark.checkpointing import CheckpointedRun
+    from docling_graph_spark.pipeline import run_pipeline
+
+    probes = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "perfbench", "probes.py")
+    with open(probes) as fh:
+        wrapped = set(re.findall(r'_patch\(patches, (\w+), "(\w+)"',
+                                 fh.read()))
+    assert wrapped == {(m, a) for m, attrs in _PROBED.items()
+                       for a in attrs}
+
+    calls = {}
+
+    def counting(key, orig):
+        def wrapped_fn(*a, **kw):
+            calls[key] = calls.get(key, 0) + 1
+            return orig(*a, **kw)
+        return wrapped_fn
+
+    for mod_name, attrs in _PROBED.items():
+        pkg = ("docling_graph_spark.checkpointing"
+               if mod_name == "checkpointing"
+               else f"docling_graph_spark.operators.{mod_name}")
+        mod = importlib.import_module(pkg)
+        for attr in attrs:
+            monkeypatch.setattr(mod, attr,
+                                counting(attr, getattr(mod, attr)))
+
+    pages = synthesize_web_pages(spark, sf_smoke_dir).limit(20)
+    cfg = PipelineConfig(max_tokens=25, id_mode="xxhash64",
+                         materialize=False)
+    run_pipeline(pages, cfg)
+    layer_attrs = {a for m, attrs in _PROBED.items()
+                   if m != "checkpointing" for a in attrs}
+    assert calls == {a: 1 for a in layer_attrs}
+
+    calls.clear()
+    assert CheckpointedRun(spark, str(tmp_path / "ckpt"), cfg).run(pages) > 0
+    assert calls["pending_inputs"] == 1
+    assert calls == {a: 1 for a in layer_attrs | {"pending_inputs"}}

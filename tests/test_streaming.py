@@ -11,6 +11,12 @@ from docling_graph_spark.sources.web_pages import synthesize_web_pages
 from docling_graph_spark.streaming.incremental import run_incremental
 
 CFG = PipelineConfig(id_mode="xxhash64")
+CHUNK_COLS = ("url", "chunk_id", "start", "end", "text", "token_est",
+              "batch_id")
+
+
+def _rows(df, cols):
+    return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
 def test_incremental_stream_drains_and_converges(spark, sf_smoke_dir, tmp_path):
@@ -45,8 +51,8 @@ def test_incremental_stream_drains_and_converges(spark, sf_smoke_dir, tmp_path):
     s_urls = {r[0] for r in final.select("url").collect()}
     b_urls = {r[0] for r in oneshot.extracted.select("url").collect()}
     assert s_urls == b_urls
-    assert (spark.read.parquet(f"{out}/chunks").count()
-            == oneshot.chunks.count())
+    assert (_rows(spark.read.parquet(f"{out}/chunks"), CHUNK_COLS)
+            == _rows(oneshot.chunks, CHUNK_COLS))
     assert (spark.read.parquet(f"{out}/doc_mentions").count()
             == oneshot.doc_mentions.count())
 
@@ -70,6 +76,37 @@ def test_incremental_stream_drains_and_converges(spark, sf_smoke_dir, tmp_path):
         f"{dup_out}/doc_mentions")
     with pytest.raises(ValueError, match="multiple captures"):
         assemble_accumulated_graph(spark, dup_out, CFG)
+
+
+def test_incremental_stream_honors_hybrid_chunker(spark, sf_smoke_dir,
+                                                 tmp_path):
+    """Micro-batches run the configured chunker: a hybrid-chunker stream
+    writes heading-aware chunk rows identical to the one-shot hybrid run,
+    and graph finalize over them reproduces the one-shot node set."""
+    from docling_graph_spark.streaming.incremental import (
+        assemble_accumulated_graph,
+    )
+
+    cfg = PipelineConfig(id_mode="xxhash64", chunker="hybrid")
+    pages = synthesize_web_pages(spark, sf_smoke_dir)
+    inbox = str(tmp_path / "inbox")
+    out = str(tmp_path / "out")
+    pages.write.parquet(inbox)
+    run_incremental(spark, inbox, out, str(tmp_path / "ckpt"), cfg)
+
+    chunks = spark.read.parquet(f"{out}/chunks")
+    assert "heading_path" in chunks.columns
+    cols = ("url", "chunk_id", "start", "end", "text", "heading_path",
+            "context", "token_est")
+    oneshot = run_pipeline(pages, cfg)
+    try:
+        want = _rows(oneshot.chunks, cols)
+        assert want and _rows(chunks, cols) == want
+        nodes, _ = assemble_accumulated_graph(spark, out, cfg, write=False)
+        assert ({r[0] for r in nodes.select("id").collect()}
+                == {r[0] for r in oneshot.nodes.select("id").collect()})
+    finally:
+        oneshot.unpersist()
 
 
 @pytest.mark.slow
