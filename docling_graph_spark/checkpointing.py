@@ -16,55 +16,62 @@ make the restart treat those urls as done — their edges silently lost
 forever.  So runs commit the way an Iceberg snapshot does: every stage
 append is stamped with the run's id (`_run_id` column = the data files),
 and the run-manifest row written LAST is the commit point (= the metadata
-swap).  The resume anti-join and all readers see only committed runs;
-rows from a crashed run are invisible orphans that the retry supersedes
-(Iceberg's expire-snapshots would reclaim them; on parquet they are
-dead weight until a compaction pass).  Citations: reference metadata sink
+swap).  Citations: reference metadata sink
 `/root/reference/docling_graph/pipeline/orchestrator.py:149-240` (the run
 manifest), resume protocol per SURVEY §2.9.
+
+The visibility rule, applied by `CheckpointedRun._filter_committed` and
+nowhere else: a stage row is visible if and only if its run's manifest row
+is ``committed`` (or ``expired``) with ``seq`` at or before the pinned
+snapshot — or, for a branch read, its run is staged on that branch — and
+no equality delete with a strictly newer ``seq`` names its url.  No
+manifest means nothing is committed, so a run that crashes during its
+first commit leaves only invisible orphans.  The resume anti-join and
+every reader go through that one function; orphans are dead weight until
+`compact` (the expire-snapshots analogue) rewrites them away.
 
 Scale notes: the anti-join's build side is only the key column of the done
 set (column pruning keeps it narrow); with Iceberg the done-keys scan prunes
 to the partitions the restart touches.  Appends are partitioned by url-host
-bucket so a resumed run's writes land in the same layout.  The committed
-run-id set is one tiny relation (one row per run) broadcast into the
-`_run_id` semi-join.
+bucket so a resumed run's writes land in the same layout.  The visible
+run set is one tiny relation (one row per run) broadcast into the
+`_run_id` join.
 """
 
 from __future__ import annotations
 
+import shutil
 import time
 import uuid
-from dataclasses import asdict, replace
+from dataclasses import asdict, fields, replace
 from typing import Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType, LongType, StringType, StructField, StructType,
+)
 
 from .pipeline import PipelineConfig, PipelineResult, run_pipeline
 
 STAGES = ("extracted", "chunks", "doc_mentions", "nodes", "edges", "metrics")
 RUN_ID_COL = "_run_id"
+SEQ_COL = "_seq"  # snapshot seq of a row's run, attached for delete checks
 
-
-def completed_keys(spark: SparkSession, table_path: str,
-                   key: str = "url",
-                   committed: Optional[DataFrame] = None) -> Optional[DataFrame]:
-    """Keys already committed to a stage table; None when no checkpoint.
-
-    With ``committed`` (a one-column ``_run_id`` relation from the run
-    manifest), only rows whose run actually committed count as done —
-    rows appended by a run that crashed before its manifest write are
-    invisible to the restart.  Without it (or for legacy tables written
-    before run stamping), every present key counts.
-    """
-    try:
-        done = spark.read.parquet(table_path)
-    except Exception:
-        return None
-    if committed is not None and RUN_ID_COL in done.columns:
-        done = done.join(F.broadcast(committed), RUN_ID_COL, "left_semi")
-    return done.select(key).distinct()
+# one manifest row per commit, exactly the fields `_manifest` writes
+MANIFEST_SCHEMA = StructType(
+    [StructField("run_id", StringType()),
+     StructField("kind", StringType()),
+     StructField("status", StringType()),
+     StructField("branch", StringType()),
+     StructField("n_buckets", LongType()),
+     StructField("seq", LongType()),
+     StructField("run_ts", StringType()),
+     StructField("processed_docs", LongType()),
+     StructField("wall_seconds", DoubleType())]
+    + [StructField(f"cfg_{f.name}", StringType())
+       for f in fields(PipelineConfig)])
 
 
 def pending_inputs(inputs: DataFrame, done: Optional[DataFrame],
@@ -79,6 +86,27 @@ def host_bucket(url_col, n_buckets: int = 64):
     """Stable url-host bucket used as the write partition column."""
     return F.pmod(F.xxhash64(F.parse_url(url_col, F.lit("HOST"))),
                   F.lit(n_buckets))
+
+
+def _committed_seqs(runs: DataFrame, pin: Optional[int] = None) -> DataFrame:
+    """(``_run_id``, ``_seq``) of runs committed at or before ``pin``.  An
+    EXPIRED snapshot (expire_snapshots) keeps its data in the current table
+    state — Iceberg expiry only retires the ability to time-travel to it."""
+    runs = runs.where(F.col("status").isin("committed", "expired"))
+    if pin is not None:
+        runs = runs.where(F.col("seq") <= pin)
+    return runs.groupBy(F.col("run_id").alias(RUN_ID_COL)) \
+        .agg(F.max("seq").alias(SEQ_COL))
+
+
+def _drop_deleted(df: DataFrame, dkeys: DataFrame) -> DataFrame:
+    """Equality-delete anti-join (Iceberg v2): drop rows of ``df`` (which
+    carries its run's ``_seq``) whose url has a delete STRICTLY NEWER than
+    that snapshot — re-appending the url later makes it visible again.  A
+    row with a null ``_seq`` (a staged or uncommitted run) is never hidden.
+    The delete keys are tiny and broadcast: no shuffle of the data table."""
+    cond = (df["url"] == dkeys["url"]) & (dkeys["_dseq"] > df[SEQ_COL])
+    return df.join(F.broadcast(dkeys), cond, "left_anti")
 
 
 class CheckpointedRun:
@@ -103,165 +131,126 @@ class CheckpointedRun:
     def _path(self, stage: str) -> str:
         return f"{self.root}/{stage}"
 
+    def _exists(self, stage: str) -> bool:
+        fs, jpath = _fs_path(self.spark, self._path(stage))
+        return bool(fs.exists(jpath))
+
     # ------------------------------------------------------------ commits
+
+    def _runs(self) -> Optional[DataFrame]:
+        """The run manifest, one row per commit; None when no run has
+        written one yet.  The only manifest read: read errors other than
+        a missing directory propagate."""
+        if not self._exists("runs"):
+            return None
+        return self.spark.read.json(self._path("runs"),
+                                    schema=MANIFEST_SCHEMA)
+
+    def _as_of_seq(self, as_of, runs: DataFrame) -> Optional[int]:
+        """Resolve ``as_of`` — a snapshot sequence number (int, see
+        :meth:`snapshots`) or a run id (str) — to a snapshot seq.  A run id
+        that never committed, or a snapshot that has been expired, raises:
+        silently returning another state would un-pin a lineage query."""
+        if as_of is None:
+            return None
+        if isinstance(as_of, str):
+            pin = _committed_seqs(runs).where(F.col(RUN_ID_COL) == as_of) \
+                .collect()
+            if not pin:
+                raise ValueError(f"run {as_of!r} never committed")
+            as_of = pin[0][SEQ_COL]
+        as_of = int(as_of)
+        if runs.where((F.col("status") == "expired")
+                      & (F.col("seq") >= as_of)).head(1):
+            raise ValueError(
+                f"snapshot {as_of} has been expired "
+                "(expire_snapshots); time travel to it is gone")
+        return as_of
+
+    def _staged_runs(self, branch: str,
+                     runs: Optional[DataFrame] = None) -> Optional[DataFrame]:
+        """Manifest rows of runs staged on ``branch`` and neither published
+        nor dropped yet (a later manifest row for the same run id
+        supersedes the staged one); None when there is no manifest."""
+        runs = self._runs() if runs is None else runs
+        if runs is None:
+            return None
+        latest = runs.groupBy("run_id").agg(F.max("seq").alias("seq"))
+        return runs.join(latest, ["run_id", "seq"]) \
+            .where((F.col("status") == "staged")
+                   & (F.col("branch") == branch))
+
+    def _visible_runs(self, as_of=None,
+                      branch: Optional[str] = None) -> Optional[DataFrame]:
+        """(``_run_id``, ``_seq``) of the runs whose rows are visible:
+        committed at or before ``as_of``, plus the runs staged on
+        ``branch`` (null ``_seq``: a staged run publishes after every
+        existing delete).  None when there is no manifest."""
+        runs = self._runs()
+        if runs is None:
+            return None
+        vis = _committed_seqs(runs, self._as_of_seq(as_of, runs))
+        if branch is not None:
+            vis = vis.unionByName(self._staged_runs(branch, runs).select(
+                F.col("run_id").alias(RUN_ID_COL),
+                F.lit(None).cast("long").alias(SEQ_COL)))
+        return vis
+
+    def _delete_keys(self, vis: DataFrame) -> Optional[DataFrame]:
+        """(url, _dseq) of the equality deletes committed by runs in
+        ``vis``, or None when no delete was ever written."""
+        if not self._exists("deletes"):
+            return None
+        return self.spark.read.parquet(self._path("deletes")) \
+            .join(vis, RUN_ID_COL).select("url", F.col(SEQ_COL).alias("_dseq"))
+
+    def _filter_committed(self, df: DataFrame, as_of=None,
+                          branch: Optional[str] = None) -> DataFrame:
+        """The visibility rule (module docstring): keep the rows of
+        visible runs, anti-join older equality deletes, and drop the run
+        stamp."""
+        if RUN_ID_COL not in df.columns:
+            return df  # legacy table written before run stamping
+        vis = self._visible_runs(as_of, branch)
+        if vis is None:
+            return df.where(F.lit(False)).drop(RUN_ID_COL)
+        df = df.join(F.broadcast(vis), RUN_ID_COL)
+        dkeys = self._delete_keys(vis) if "url" in df.columns else None
+        if dkeys is not None:
+            df = _drop_deleted(df, dkeys)
+        return df.drop(RUN_ID_COL, SEQ_COL)
 
     def committed_runs(self, as_of=None) -> Optional[DataFrame]:
         """One-column ``_run_id`` relation of committed runs (None = no
-        manifest yet).
-
-        ``as_of`` pins the relation to a snapshot — Iceberg's ``VERSION AS
-        OF`` on the parquet stand-in.  Accepts a snapshot sequence number
-        (int, see :meth:`snapshots`) or a run id (str): only runs whose
-        manifest row committed at-or-before that snapshot are visible.  A
-        run id that never committed resolves to no snapshot and raises —
-        silently returning latest would un-pin a lineage query."""
-        try:
-            runs = self.spark.read.json(self._path("runs"))
-        except Exception:
-            return None
-        if "run_id" not in runs.columns:
-            return None  # legacy manifest without run stamping
-        # an EXPIRED snapshot (expire_snapshots) keeps its data in the
-        # current table state — Iceberg expiry only retires the ability
-        # to time-travel to it, never currently-referenced data
-        runs = runs.where(F.col("status").isin("committed", "expired"))
-        if as_of is not None:
-            if "seq" not in runs.columns:
-                raise ValueError(
-                    "manifest predates snapshot sequencing; no time travel")
-            if isinstance(as_of, str):
-                pin = [r.seq for r in
-                       runs.where(F.col("run_id") == as_of)
-                       .select("seq").collect()]
-                if not pin:
-                    raise ValueError(f"run {as_of!r} never committed")
-                as_of = max(pin)
-            expired = [r.seq for r in
-                       runs.where((F.col("status") == "expired")
-                                  & (F.col("seq") >= int(as_of)))
-                       .select("seq").collect()]
-            if expired:
-                raise ValueError(
-                    f"snapshot {as_of} has been expired "
-                    "(expire_snapshots); time travel to it is gone")
-            runs = runs.where(F.col("seq") <= int(as_of))
-        return runs.select(F.col("run_id").alias(RUN_ID_COL)).distinct()
+        manifest yet).  ``as_of`` pins the relation to a snapshot —
+        Iceberg's ``VERSION AS OF`` on the parquet stand-in; see
+        :meth:`_as_of_seq` for the accepted forms."""
+        vis = self._visible_runs(as_of)
+        return None if vis is None else vis.select(RUN_ID_COL)
 
     def snapshots(self) -> Optional[DataFrame]:
         """The snapshot log: committed manifest rows ordered by ``seq``
         (run id, commit timestamp, rows processed, config lineage) — the
         Iceberg ``snapshots`` metadata-table analogue, and the argument
         source for ``as_of`` time travel."""
-        try:
-            runs = self.spark.read.json(self._path("runs"))
-        except Exception:
-            return None
-        if "seq" not in runs.columns:
+        runs = self._runs()
+        if runs is None:
             return None
         return runs.where(F.col("status") == "committed").orderBy("seq")
 
     def _next_seq(self) -> int:
-        try:
-            runs = self.spark.read.json(self._path("runs"))
-            top = runs.agg(F.max("seq").alias("m")).collect()[0].m
-            return int(top or 0) + 1
-        except Exception:
+        runs = self._runs()
+        if runs is None:
             return 1
-
-    def _filter_committed(self, df: DataFrame, as_of=None) -> DataFrame:
-        if RUN_ID_COL not in df.columns:
-            return df  # legacy table written before run stamping
-        committed = self.committed_runs(as_of=as_of)
-        if committed is not None:
-            df = df.join(F.broadcast(committed), RUN_ID_COL, "left_semi")
-        df = self._apply_deletes(df, as_of=as_of)
-        return df.drop(RUN_ID_COL)
+        return int(runs.agg(F.max("seq")).collect()[0][0] or 0) + 1
 
     # ------------------------------------------------- row-level deletes
-
-    def _run_seqs(self) -> Optional[DataFrame]:
-        """Tiny (run_id, seq) relation over committed+expired snapshots
-        — broadcast into delete application so the fact table never
-        shuffles for it."""
-        try:
-            runs = self.spark.read.json(self._path("runs"))
-        except Exception:
-            return None
-        if "seq" not in runs.columns or "run_id" not in runs.columns:
-            return None
-        return (runs.where(F.col("status").isin("committed", "expired"))
-                .groupBy("run_id").agg(F.max("seq").alias("seq"))
-                .withColumnRenamed("run_id", RUN_ID_COL))
-
-    def _as_of_seq(self, as_of) -> Optional[int]:
-        if as_of is None:
-            return None
-        if isinstance(as_of, str):
-            runs = self.spark.read.json(self._path("runs"))
-            pin = [r.seq for r in runs.where(F.col("run_id") == as_of)
-                   .select("seq").collect()]
-            if not pin:
-                raise ValueError(f"run {as_of!r} never committed")
-            return max(pin)
-        return int(as_of)
-
-    def _delete_keys(self, as_of=None) -> Optional[DataFrame]:
-        """(url, _dseq) of committed equality deletes visible at
-        ``as_of``, or None when none exist."""
-        try:
-            dels = self.spark.read.parquet(self._path("deletes"))
-        except Exception:
-            return None
-        seqs = self._run_seqs()
-        if seqs is None:
-            return None
-        keys = dels.join(seqs, RUN_ID_COL).select(
-            "url", F.col("seq").alias("_dseq"))
-        pin = self._as_of_seq(as_of)
-        if pin is not None:
-            keys = keys.where(F.col("_dseq") <= pin)
-        return keys
-
-    def _apply_deletes(self, df: DataFrame, as_of=None) -> DataFrame:
-        """Merge-on-read application of equality deletes (Iceberg v2):
-        a delete hides a row with the same url whose data snapshot is
-        STRICTLY OLDER than the delete snapshot — re-appending the url
-        later makes it visible again.  Both the delete-key relation and
-        the (run_id, seq) map are tiny and broadcast, so this is a
-        broadcast anti-join on url with a residual seq comparison: no
-        shuffle of the data table at any scale.  Only url-keyed stages
-        participate (graph nodes/edges are derived relations)."""
-        if "url" not in df.columns:
-            return df
-        dkeys = self._delete_keys(as_of=as_of)
-        if dkeys is None or not dkeys.head(1):
-            return df
-        seqs = self._run_seqs()
-        out = df.join(F.broadcast(seqs), RUN_ID_COL, "left")
-        cond = (out["url"] == dkeys["url"]) \
-            & (dkeys["_dseq"] > out["seq"])
-        return out.join(F.broadcast(dkeys), cond, "left_anti") \
-            .drop("seq")
-
-    def _done_keys(self) -> Optional[DataFrame]:
-        """Resume anti-join build side: committed extracted urls with
-        equality deletes applied — a deleted url is pending again, so
-        re-ingesting it commits a fresh (visible) snapshot.  Column-
-        pruned to (url, run id) before the scan like
-        :func:`completed_keys`."""
-        try:
-            df = self._read_stage("extracted")
-        except Exception:
-            return None
-        cols = ["url"] + ([RUN_ID_COL] if RUN_ID_COL in df.columns
-                          else [])
-        return self._filter_committed(df.select(*cols)).distinct()
 
     def delete_urls(self, urls) -> int:
         """Commit an EQUALITY-DELETE snapshot (the Iceberg v2 row-level
         delete analogue): the urls land in a small delete file and the
         manifest row written last is the commit point — NO data file is
-        rewritten (merge-on-read; see :meth:`_apply_deletes` for the
+        rewritten (merge-on-read; see :func:`_drop_deleted` for the
         sequence-number visibility rule, :meth:`rewrite_deletes` for the
         physical-apply path).  A deleted url becomes pending again for
         :meth:`run`, and re-processing it commits a newer snapshot the
@@ -292,62 +281,30 @@ class CheckpointedRun:
           keeps old snapshots until ``expire_snapshots``).
 
         Returns ``{"applied_deletes": n, "removed_rows": total}``."""
-        dkeys = self._delete_keys()
+        none = {"applied_deletes": 0, "removed_rows": 0}
+        vis = self._visible_runs()
+        dkeys = None if vis is None else self._delete_keys(vis)
         if dkeys is None:
-            return {"applied_deletes": 0, "removed_rows": 0}
+            return none
         n_dels = dkeys.count()
         if n_dels == 0:
-            return {"applied_deletes": 0, "removed_rows": 0}
-        seqs = self._run_seqs()
-        removed = 0
-        for stage in STAGES:
-            try:
-                df = self._read_stage(stage)
-            except Exception:
-                continue
-            if "url" not in df.columns or RUN_ID_COL not in df.columns:
-                continue
-            out = df.join(F.broadcast(seqs), RUN_ID_COL, "left")
-            cond = (out["url"] == dkeys["url"]) \
-                & (dkeys["_dseq"] > out["seq"])
-            keep = out.join(F.broadcast(dkeys), cond, "left_anti") \
-                .drop("seq")
-            n_total = df.count()
-            n_keep = keep.count()
-            if n_total == n_keep:
-                continue
-            removed += n_total - n_keep
-            writer = keep.write.mode("overwrite")
-            if stage == "extracted":
-                writer = writer.partitionBy("bucket")
-            _atomic_rewrite(self._path(stage), writer)
-        import shutil
+            return none
 
+        def keep(df):
+            if "url" not in df.columns:
+                return df
+            # left join: rows of staged or uncommitted runs keep a null
+            # seq and survive — this pass applies deletes, nothing else
+            seqd = df.join(F.broadcast(vis), RUN_ID_COL, "left")
+            return _drop_deleted(seqd, dkeys).drop(SEQ_COL)
+
+        removed = sum(self._rewrite_stages(keep).values())
         max_dseq = dkeys.agg(F.max("_dseq")).collect()[0][0]
         shutil.rmtree(self._path("deletes"), ignore_errors=True)
         self._expire_manifest_below(int(max_dseq))
         return {"applied_deletes": n_dels, "removed_rows": removed}
 
-    # ---------------------------------------------------------------- run
-
     # ------------------------------------------------- WAP branching
-
-    def _staged_runs(self, branch: str) -> Optional[DataFrame]:
-        """One-column ``_run_id`` relation of runs staged on ``branch``
-        and neither published nor dropped yet (a later manifest row for
-        the same run id supersedes the staged one)."""
-        try:
-            runs = self.spark.read.json(self._path("runs"))
-        except Exception:
-            return None
-        if "branch" not in runs.columns or "run_id" not in runs.columns:
-            return None
-        latest = (runs.groupBy("run_id")
-                  .agg(F.max("seq").alias("seq")))
-        live = runs.join(latest, ["run_id", "seq"]) \
-            .where((F.col("status") == "staged")
-                   & (F.col("branch") == branch))
-        return live.select(F.col("run_id").alias(RUN_ID_COL)).distinct()
 
     def branch_preview(self, stage: str, branch: str) -> DataFrame:
         """The AUDIT read of write-audit-publish: ``stage`` as it would
@@ -355,18 +312,7 @@ class CheckpointedRun:
         plus the branch's staged runs (Iceberg: reading from the
         branch ref).  Main readers (`nodes()`, `extracted()`, ...)
         never see staged rows."""
-        df = self._read_stage(stage)
-        if RUN_ID_COL not in df.columns:
-            return df
-        vis = self.committed_runs()
-        staged = self._staged_runs(branch)
-        if staged is not None:
-            vis = staged if vis is None else vis.unionByName(staged)
-        if vis is not None:
-            df = df.join(F.broadcast(vis.distinct()), RUN_ID_COL,
-                         "left_semi")
-        df = self._apply_deletes(df)
-        return df.drop(RUN_ID_COL)
+        return self._filter_committed(self._read_stage(stage), branch=branch)
 
     def publish_branch(self, branch: str) -> int:
         """Fast-forward publish (Iceberg: main ⇐ branch): every run
@@ -379,36 +325,43 @@ class CheckpointedRun:
         staged = self._staged_runs(branch)
         if staged is None:
             return 0
-        rids = [r[RUN_ID_COL] for r in staged.collect()]
-        if not rids:
-            return 0
-        # preserve staging order: replay by each run's staged seq, and
-        # carry its processed count onto the publish row so the
-        # snapshot log stays meaningful
-        runs = self.spark.read.json(self._path("runs"))
-        staged_rows = {r.run_id: (r.seq, r.processed_docs) for r in
-                       runs.where(F.col("run_id").isin(rids)
-                                  & (F.col("status") == "staged"))
-                       .select("run_id", "seq", "processed_docs")
-                       .collect()}
-        for rid in sorted(rids, key=lambda r: staged_rows.get(r,
-                                                              (0, 0))[0]):
-            self._manifest(rid, int(staged_rows.get(rid, (0, 0))[1]),
-                           0.0, kind="publish")
-        return len(rids)
+        # replay in staging order, carrying each run's processed count onto
+        # the publish row so the snapshot log stays meaningful
+        rows = staged.orderBy("seq").select("run_id", "processed_docs") \
+            .collect()
+        for r in rows:
+            self._manifest(r.run_id, int(r.processed_docs or 0), 0.0,
+                           kind="publish")
+        return len(rows)
 
     def drop_branch(self, branch: str) -> int:
         """Abandon ``branch``: staged runs become aborted (their data
         rows remain as invisible orphans, exactly like a crashed run's,
-        until `compact_files` rewrites them away).  Returns the number
-        of runs dropped."""
+        until `compact` rewrites them away).  Returns the number of runs
+        dropped."""
         staged = self._staged_runs(branch)
         if staged is None:
             return 0
-        rids = [r[RUN_ID_COL] for r in staged.collect()]
+        rids = [r.run_id for r in staged.select("run_id").collect()]
         for rid in rids:
             self._manifest(rid, 0, 0.0, kind="drop", status="aborted")
         return len(rids)
+
+    # ---------------------------------------------------------------- run
+
+    def _done_keys(self, branch: Optional[str] = None) -> Optional[DataFrame]:
+        """Resume anti-join build side: the visible extracted urls (main,
+        plus ``branch``'s staged runs); None before the first commit, when
+        nothing is visible — even if a crashed first run left a partial
+        ``extracted`` append behind.  Equality deletes apply — a deleted
+        url is pending again, so re-ingesting it commits a fresh (visible)
+        snapshot.  The join prunes the scan to (url, run id)."""
+        df = self._stage_or_none("extracted") if self._exists("runs") \
+            else None
+        if df is None:
+            return None
+        return self._filter_committed(df, branch=branch) \
+            .select("url").distinct()
 
     def run(self, web_pages: DataFrame,
             branch: Optional[str] = None) -> int:
@@ -422,16 +375,7 @@ class CheckpointedRun:
         work, so re-running the same input on the same branch stays
         idempotent, while a main run of the same input correctly
         reprocesses it."""
-        done = self._done_keys()
-        if branch is not None:
-            staged = self._staged_runs(branch)
-            if staged is not None and staged.head(1):
-                mine = self._read_stage("extracted") \
-                    .join(F.broadcast(staged), RUN_ID_COL, "left_semi") \
-                    .select("url").distinct()
-                done = mine if done is None else \
-                    done.select("url").unionByName(mine).distinct()
-        todo = pending_inputs(web_pages, done)
+        todo = pending_inputs(web_pages, self._done_keys(branch))
         # cheap emptiness probe: limit(1) avoids a full count of the input
         if todo.limit(1).isEmpty():
             self._manifest("", 0, 0.0)
@@ -500,6 +444,19 @@ class CheckpointedRun:
         return self.spark.read.option("mergeSchema", "true").parquet(
             self._path(stage))
 
+    def _stage_or_none(self, stage: str) -> Optional[DataFrame]:
+        """:meth:`_read_stage`, or None while the stage has no data file:
+        never written, or holding only the temp files of a crash inside
+        its first append."""
+        if not self._exists(stage):
+            return None
+        try:
+            return self._read_stage(stage)
+        except AnalysisException as e:
+            if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+                raise
+            return None
+
     def nodes(self, as_of=None) -> DataFrame:
         """Graph nodes across committed runs (id-level dedup); ``as_of``
         (snapshot seq or run id) time-travels to that snapshot."""
@@ -526,18 +483,13 @@ class CheckpointedRun:
     def _bucket_specs(self) -> "set[int]":
         """Every bucket-count spec data was ever committed (or staged)
         under, from the manifest — Iceberg's partition-spec registry
-        analogue.  Legacy manifests without the field contribute the
-        CURRENT spec (they predate evolution support)."""
+        analogue — plus the CURRENT spec."""
         specs = {self.n_buckets}
-        try:
-            runs = self.spark.read.json(self._path("runs"))
-        except Exception:
-            return specs
-        if "n_buckets" not in runs.columns:
-            return specs
-        for r in runs.where(F.col("n_buckets").isNotNull()) \
-                .select("n_buckets").distinct().collect():
-            specs.add(int(r.n_buckets))
+        runs = self._runs()
+        if runs is not None:
+            specs.update(int(r.n_buckets) for r in
+                         runs.where(F.col("n_buckets").isNotNull())
+                         .select("n_buckets").distinct().collect())
         return specs
 
     def extracted_for_hosts(self, hosts, as_of=None) -> DataFrame:
@@ -615,8 +567,7 @@ class CheckpointedRun:
                 continue
             # mergeSchema: a rewrite must never drop columns added by
             # schema evolution after some files were written
-            df = self.spark.read.option("mergeSchema", "true") \
-                .parquet(path)
+            df = self._read_stage(stage)
             part_col = "bucket" if stage == "extracted" else None
             if part_col and part_col in df.columns:
                 packed = df.repartition(F.col(part_col))
@@ -631,10 +582,33 @@ class CheckpointedRun:
                 rows_per_file = max(1, int(n_rows * target_bytes
                                            / total_bytes))
                 writer = writer.option("maxRecordsPerFile", rows_per_file)
-            _atomic_rewrite(path, writer)
+            _atomic_rewrite(path, writer.format("parquet"))
             after = _data_file_stats(self.spark, path)
             rewritten[stage] = (n_files, after[0] if after else 0)
         return rewritten
+
+    def _rewrite_stages(self, keep) -> dict:
+        """Rewrite each run-stamped stage table to ``keep(df)`` and swap
+        it in (:func:`_atomic_rewrite`); ``keep`` returning ``df`` itself
+        skips the stage.  Returns ``{stage: rows_removed}``."""
+        removed: dict = {}
+        for stage in STAGES:
+            df = self._stage_or_none(stage)
+            if df is None or RUN_ID_COL not in df.columns:
+                continue  # no data file, or a legacy unstamped table
+            kept = keep(df)
+            if kept is df:
+                continue
+            n_total = df.count()
+            n_keep = kept.count()
+            removed[stage] = n_total - n_keep
+            if n_total == n_keep:
+                continue
+            writer = kept.write.mode("overwrite").format("parquet")
+            if stage == "extracted":
+                writer = writer.partitionBy("bucket")
+            _atomic_rewrite(self._path(stage), writer)
+        return removed
 
     def compact(self) -> dict:
         """Expire orphan rows left by crashed (uncommitted) runs — the
@@ -648,31 +622,10 @@ class CheckpointedRun:
         correctness requirement, because readers filter to committed runs
         anyway."""
         committed = self.committed_runs()
-        reclaimed: dict = {}
-        for stage in STAGES:
-            path = self._path(stage)
-            try:
-                df = self.spark.read.option("mergeSchema", "true") \
-                    .parquet(path)
-            except Exception:
-                continue
-            if RUN_ID_COL not in df.columns:
-                continue  # legacy table: nothing to attribute
-            if committed is not None:
-                keep = df.join(F.broadcast(committed), RUN_ID_COL,
-                               "left_semi")
-            else:
-                keep = df.limit(0)
-            n_total = df.count()
-            n_keep = keep.count()
-            reclaimed[stage] = n_total - n_keep
-            if n_total == n_keep:
-                continue
-            writer = keep.write.mode("overwrite")
-            if stage == "extracted":
-                writer = writer.partitionBy("bucket")
-            _atomic_rewrite(path, writer)
-        return reclaimed
+        if committed is None:
+            return self._rewrite_stages(lambda df: df.where(F.lit(False)))
+        return self._rewrite_stages(lambda df: df.join(
+            F.broadcast(committed), RUN_ID_COL, "left_semi"))
 
     def expire_snapshots(self, keep_last: int = 1) -> dict:
         """Retire time travel to all but the newest ``keep_last``
@@ -689,14 +642,17 @@ class CheckpointedRun:
         Orphan rows from crashed (never-committed) runs are the parquet
         analogue of files referenced by NO retained snapshot, so they
         are reclaimed here via :meth:`compact` — together the two halves
-        are the full expire pass.
+        are the full expire pass.  ``keep_last`` must be at least 1, as
+        Iceberg's ``retain_last``.
 
         Returns ``{"expired": n_snapshots, "reclaimed_rows": total}``."""
+        if keep_last < 1:
+            raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         snaps = self.snapshots()
         if snaps is None:
             return {"expired": 0, "reclaimed_rows": 0}
-        seqs = [r.seq for r in snaps.select("seq").collect()]
-        cutoff = sorted(seqs)[-keep_last] if keep_last <= len(seqs) else 0
+        seqs = sorted(r.seq for r in snaps.select("seq").collect())
+        cutoff = seqs[-keep_last] if keep_last <= len(seqs) else 0
         expired_n = self._expire_manifest_below(cutoff)
         reclaimed = sum(self.compact().values())
         return {"expired": expired_n, "reclaimed_rows": reclaimed}
@@ -704,26 +660,16 @@ class CheckpointedRun:
     def _expire_manifest_below(self, cutoff: int) -> int:
         """Mark committed manifest rows with ``seq < cutoff`` as
         ``expired`` (atomic json swap); returns the count."""
-        runs = self.spark.read.json(self._path("runs"))
-        expired_n = runs.where(
-            (F.col("status") == "committed")
-            & (F.col("seq") < cutoff)).count()
+        runs = self._runs()
+        old = (F.col("status") == "committed") & (F.col("seq") < cutoff)
+        expired_n = runs.where(old).count()
         if expired_n:
-            import shutil
-
             updated = runs.withColumn(
                 "status",
-                F.when((F.col("status") == "committed")
-                       & (F.col("seq") < cutoff), F.lit("expired"))
-                .otherwise(F.col("status")))
-            # same swap discipline as _atomic_rewrite, json-formatted
-            # (write the new manifest beside the old, then rename)
-            path = self._path("runs")
-            tmp, old = f"{path}.expiring", f"{path}.old"
-            updated.coalesce(1).write.mode("overwrite").json(tmp)
-            shutil.move(path, old)
-            shutil.move(tmp, path)
-            shutil.rmtree(old)
+                F.when(old, F.lit("expired")).otherwise(F.col("status")))
+            _atomic_rewrite(self._path("runs"),
+                            updated.coalesce(1).write.mode("overwrite")
+                            .format("json"))
         return expired_n
 
     def added_between(self, stage: str, since: int,
@@ -733,13 +679,13 @@ class CheckpointedRun:
         incremental-scan (``start-snapshot-id``/``end-snapshot-id``)
         analogue; a downstream consumer processes exactly the delta
         between two checkpoints instead of rescanning the table."""
-        runs = self.spark.read.json(self._path("runs")) \
-            .where(F.col("status").isin("committed", "expired")) \
-            .where(F.col("seq") > int(since))
-        if until is not None:
-            runs = runs.where(F.col("seq") <= int(until))
-        rids = runs.select(F.col("run_id").alias(RUN_ID_COL)).distinct()
         df = self.spark.read.parquet(self._path(stage))
+        runs = self._runs()
+        if runs is None:
+            return df.where(F.lit(False)).drop(RUN_ID_COL)
+        pin = None if until is None else int(until)
+        rids = _committed_seqs(runs, pin) \
+            .where(F.col(SEQ_COL) > int(since)).select(RUN_ID_COL)
         return df.join(F.broadcast(rids), RUN_ID_COL, "left_semi") \
             .drop(RUN_ID_COL)
 
@@ -762,25 +708,29 @@ class CheckpointedRun:
             # second resolution, so ties are possible there; seq is total)
             "seq": self._next_seq(),
             "run_ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-            "processed_docs": processed,
-            "wall_seconds": round(wall_seconds, 3),
+            "processed_docs": int(processed),
+            "wall_seconds": float(round(wall_seconds, 3)),
             **{f"cfg_{k}": str(v) for k, v in asdict(self.config).items()},
         }
-        self.spark.createDataFrame([row]).write.mode("append").json(
-            self._path("runs")
-        )
+        self.spark.createDataFrame([row], MANIFEST_SCHEMA).write \
+            .mode("append").json(self._path("runs"))
 
 
 # ------------------------------------------------------- file maintenance
 
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path`` — whatever filesystem it
+    lives on (HDFS, S3A, local)."""
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return (jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()),
+            jpath)
+
+
 def _data_file_stats(spark: SparkSession, path: str):
-    """(file_count, total_bytes) of a table's parquet data files, or None
-    when the table does not exist.  Uses the Hadoop FileSystem API so the
-    listing works against whatever filesystem the path lives on (HDFS, S3A,
-    local) — the same listing the scan planner performs."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    """(file_count, total_bytes, partition_dirs) of a table's parquet data
+    files, or None when the table does not exist.  Uses the Hadoop
+    FileSystem API — the same listing the scan planner performs."""
+    fs, jpath = _fs_path(spark, path)
     if not fs.exists(jpath):
         return None
     it = fs.listFiles(jpath, True)  # recursive: descends bucket=N dirs
@@ -800,15 +750,14 @@ def _data_file_stats(spark: SparkSession, path: str):
 
 
 def _atomic_rewrite(path: str, writer) -> None:
-    """Materialize ``writer`` at a sibling temp dir, then swap it into
-    ``path`` — readers in flight keep their already-planned file list, new
-    readers see the rewritten table (the parquet stand-in for an Iceberg
-    rewrite commit; on object stores the swap is the table-format's
-    metadata pointer update, which is why production uses Iceberg)."""
-    import shutil
-
+    """Materialize ``writer`` (its format already set) at a sibling temp
+    dir, then swap it into ``path`` — readers in flight keep their
+    already-planned file list, new readers see the rewritten table (the
+    parquet stand-in for an Iceberg rewrite commit; on object stores the
+    swap is the table-format's metadata pointer update, which is why
+    production uses Iceberg)."""
     tmp = f"{path}.compacting"
-    writer.parquet(tmp)
+    writer.save(tmp)
     old = f"{path}.old"
     shutil.move(path, old)
     shutil.move(tmp, path)

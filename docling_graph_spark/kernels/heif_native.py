@@ -215,7 +215,8 @@ def encode_heif(width: int, height: int, rgb: bytes,
         os.close(fd)
         try:
             _check(lh._write(ctx, path.encode()), "write")
-            return open(path, "rb").read()
+            with open(path, "rb") as fh:
+                return fh.read()
         finally:
             os.unlink(path)
     finally:

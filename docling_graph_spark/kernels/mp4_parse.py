@@ -110,13 +110,14 @@ def _sample_offsets(b: bytes, stbl_s: int, stbl_e: int) -> List[Tuple[int, int]]
         stsc = [(1, 1)]
     out: List[Tuple[int, int]] = []
     si = 0
+    # chunk ci takes the run before the first entry with first > ci (1 if
+    # none); that index only grows with ci, so one forward pass resolves
+    # every chunk — O(chunks + entries) even for a hostile table
+    k = 0
     for ci, coff in enumerate(chunk_offsets, start=1):
-        per = 1
-        for first, p in stsc:
-            if first <= ci:
-                per = p
-            else:
-                break
+        while k < len(stsc) and stsc[k][0] <= ci:
+            k += 1
+        per = stsc[k - 1][1] if k else 1
         off = coff
         for _ in range(per):
             if si >= len(sizes):

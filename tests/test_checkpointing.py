@@ -3,12 +3,12 @@ convergence with the one-shot pipeline."""
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
-from docling_graph_spark.checkpointing import (
-    CheckpointedRun, completed_keys, pending_inputs,
-)
+from docling_graph_spark.checkpointing import CheckpointedRun, pending_inputs
 from docling_graph_spark.pipeline import PipelineConfig, run_pipeline
 from docling_graph_spark.sources.web_pages import synthesize_web_pages
 
@@ -21,9 +21,18 @@ def pages(spark, sf_smoke_dir):
 
 
 def test_pending_inputs_no_checkpoint(spark, pages, tmp_path):
-    done = completed_keys(spark, str(tmp_path / "nope"))
-    assert done is None
-    assert pending_inputs(pages, done) is pages
+    assert CheckpointedRun(spark, str(tmp_path / "nope"))._done_keys() is None
+    assert pending_inputs(pages, None) is pages
+
+
+def test_expire_snapshots_rejects_keep_last_below_one(spark, tmp_path):
+    """keep_last=0 would index sorted(seqs)[-0] (the OLDEST snapshot) and
+    a negative value counts from the wrong end: both are refused, as
+    Iceberg's retain_last refuses them."""
+    run = CheckpointedRun(spark, str(tmp_path / "ckpt_keep"), CFG)
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            run.expire_snapshots(keep_last=bad)
 
 
 @pytest.mark.slow
@@ -103,6 +112,42 @@ def test_crashed_run_is_invisible_and_retried(spark, pages, tmp_path):
     # the work, not an accidental overwrite
     raw = spark.read.parquet(f"{root}/extracted")
     assert raw.count() == pages.count() + other.count()
+
+
+@pytest.mark.slow
+def test_first_run_crash_is_invisible_and_retried(spark, pages, tmp_path):
+    """A run that dies during the FIRST commit — some stage appends landed,
+    no manifest exists yet — must leave nothing visible: no manifest means
+    nothing is committed.  The retry reprocesses every page and the graph
+    equals the one-shot result instead of silently losing the edges."""
+    root = str(tmp_path / "ckpt_first_crash")
+    run = CheckpointedRun(spark, root, CFG)
+    res = run_pipeline(pages.localCheckpoint(eager=True), CFG).persist()
+    run._append_stages(res, "crashed")
+    res.unpersist()
+    # the crash hit before the edges append
+    shutil.rmtree(run._path("edges"))
+
+    assert run.extracted().count() == 0
+    assert run.run(pages) == pages.count()
+
+    oneshot = run_pipeline(pages, CFG)
+    assert {r[0] for r in run.nodes().select("id").collect()} == \
+        {r[0] for r in oneshot.nodes.select("id").collect()}
+    assert run.edges().count() == oneshot.edges.count()
+
+
+def test_stage_with_only_crash_temp_files_counts_as_empty(spark, tmp_path):
+    """A crash inside a stage's first append leaves only the writer's
+    _temporary files: resume and compaction treat the stage as having no
+    data instead of failing to read it."""
+    run = CheckpointedRun(spark, str(tmp_path / "ckpt_tmp_only"), CFG)
+    run._manifest("", 0, 0.0)
+    for stage in ("extracted", "chunks"):
+        spark.range(3).write.parquet(
+            f"{run._path(stage)}/_temporary/0/task_0")
+    assert run._done_keys() is None
+    assert run.compact() == {}
 
 
 @pytest.mark.slow

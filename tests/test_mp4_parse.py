@@ -127,3 +127,73 @@ def test_mjpeg_through_operators(spark):
     assert r.pixel_sum == sum(want.pixels)
     h = mm.image_hashes(df).collect()[0]
     assert h.decoded and h.phash is not None
+
+
+def _box(cc: bytes, body: bytes) -> bytes:
+    return struct.pack(">I", 8 + len(body)) + cc + body
+
+
+def _stbl(sizes, fixed, chunk_offsets, stsc):
+    vf = b"\x00\x00\x00\x00"
+    stsz = vf + struct.pack(">II", fixed, len(sizes)) + (
+        b"" if fixed else struct.pack(f">{len(sizes)}I", *sizes))
+    stco = vf + struct.pack(f">I{len(chunk_offsets)}I", len(chunk_offsets),
+                            *chunk_offsets)
+    stsc_body = vf + struct.pack(">I", len(stsc)) + b"".join(
+        struct.pack(">III", first, per, 1) for first, per in stsc)
+    return _box(b"stsz", stsz) + _box(b"stco", stco) \
+        + _box(b"stsc", stsc_body)
+
+
+def _offsets_by_rescan(sizes, chunk_offsets, stsc):
+    """The sample→chunk resolution as a per-chunk rescan of the stsc
+    table: the quadratic form the single forward pass must reproduce."""
+    stsc = stsc or [(1, 1)]
+    out, si = [], 0
+    for ci, coff in enumerate(chunk_offsets, start=1):
+        per = 1
+        for first, p in stsc:
+            if first <= ci:
+                per = p
+            else:
+                break
+        off = coff
+        for _ in range(per):
+            if si >= len(sizes):
+                return out
+            out.append((off, sizes[si]))
+            off += sizes[si]
+            si += 1
+    return out
+
+
+def test_sample_offsets_forward_pass_matches_rescan():
+    """Random small tables — unsorted and duplicate first_chunk entries,
+    zero-sample runs, too few or too many samples — resolve exactly as
+    the per-chunk rescan does, and a 20,000-chunk x 20,000-entry table
+    resolves in linear time."""
+    import random
+    import time
+
+    from docling_graph_spark.kernels.mp4_parse import _sample_offsets
+
+    rng = random.Random(7)
+    for _ in range(500):
+        n_chunks = rng.randint(1, 12)
+        stsc = [(rng.randint(0, n_chunks + 2), rng.randint(0, 4))
+                for _ in range(rng.randint(0, 6))]
+        if rng.random() < 0.5:
+            stsc.sort()
+        sizes = [rng.randint(1, 50) for _ in range(rng.randint(1, 30))]
+        offsets = [rng.randint(0, 1000) for _ in range(n_chunks)]
+        b = _stbl(sizes, 0, offsets, stsc)
+        assert _sample_offsets(b, 0, len(b)) == \
+            _offsets_by_rescan(sizes, offsets, stsc)
+
+    n = 20_000
+    b = _stbl([4] * n, 4, [8 * i for i in range(n)],
+              [(i, 1) for i in range(1, n + 1)])
+    t0 = time.perf_counter()
+    got = _sample_offsets(b, 0, len(b))
+    assert time.perf_counter() - t0 < 2.0
+    assert got == [(8 * i, 4) for i in range(n)]
