@@ -36,6 +36,14 @@ to the partitions the restart touches.  Appends are partitioned by url-host
 bucket so a resumed run's writes land in the same layout.  The visible
 run set is one tiny relation (one row per run) broadcast into the
 `_run_id` join.
+
+The write rule, applied by `_stage_writer` to every append and rewrite:
+an AQE rebalance before the write (the optimized-write shuffle), so files
+follow the data, not the task count.  The bucketed ``extracted`` stage
+rebalances by ``bucket``, so each write lands one file per ``bucket=``
+directory; only a bucket past the advisory size is split, so a hot bucket
+never pins one task.  The other stages land a few advisory-sized files
+per commit.
 """
 
 from __future__ import annotations
@@ -167,18 +175,20 @@ class CheckpointedRun:
                 "(expire_snapshots); time travel to it is gone")
         return as_of
 
-    def _staged_runs(self, branch: str,
+    def _staged_runs(self, branch: Optional[str],
                      runs: Optional[DataFrame] = None) -> Optional[DataFrame]:
-        """Manifest rows of runs staged on ``branch`` and neither published
-        nor dropped yet (a later manifest row for the same run id
-        supersedes the staged one); None when there is no manifest."""
+        """Manifest rows of runs staged on ``branch`` (on any branch when
+        None) and neither published nor dropped yet (a later manifest row
+        for the same run id supersedes the staged one); None when there is
+        no manifest."""
         runs = self._runs() if runs is None else runs
         if runs is None:
             return None
         latest = runs.groupBy("run_id").agg(F.max("seq").alias("seq"))
-        return runs.join(latest, ["run_id", "seq"]) \
-            .where((F.col("status") == "staged")
-                   & (F.col("branch") == branch))
+        staged = runs.join(latest, ["run_id", "seq"]) \
+            .where(F.col("status") == "staged")
+        return staged if branch is None \
+            else staged.where(F.col("branch") == branch)
 
     def _visible_runs(self, as_of=None,
                       branch: Optional[str] = None) -> Optional[DataFrame]:
@@ -219,14 +229,6 @@ class CheckpointedRun:
         if dkeys is not None:
             df = _drop_deleted(df, dkeys)
         return df.drop(RUN_ID_COL, SEQ_COL)
-
-    def committed_runs(self, as_of=None) -> Optional[DataFrame]:
-        """One-column ``_run_id`` relation of committed runs (None = no
-        manifest yet).  ``as_of`` pins the relation to a snapshot —
-        Iceberg's ``VERSION AS OF`` on the parquet stand-in; see
-        :meth:`_as_of_seq` for the accepted forms."""
-        vis = self._visible_runs(as_of)
-        return None if vis is None else vis.select(RUN_ID_COL)
 
     def snapshots(self) -> Optional[DataFrame]:
         """The snapshot log: committed manifest rows ordered by ``seq``
@@ -409,14 +411,10 @@ class CheckpointedRun:
         ``run_id``, invisible until `_manifest` records the run as
         committed.  Split out so tests can simulate a crash between the
         appends and the commit."""
-        rid = F.lit(run_id)
         extracted = res.extracted.withColumn(
-            "bucket", host_bucket(F.col("url"), self.n_buckets)
-        ).withColumn(RUN_ID_COL, rid)
-        extracted.write.mode("append").partitionBy("bucket").parquet(
-            self._path("extracted")
-        )
+            "bucket", host_bucket(F.col("url"), self.n_buckets))
         for name, df in (
+            ("extracted", extracted),
             ("chunks", res.chunks),
             ("doc_mentions", res.doc_mentions),
             # graph relations are url-derived, so appends stay disjoint per
@@ -427,9 +425,8 @@ class CheckpointedRun:
             ("edges", res.edges),
             ("metrics", res.metrics),
         ):
-            df.withColumn(RUN_ID_COL, rid).write.mode("append").parquet(
-                self._path(name)
-            )
+            _stage_writer(df.withColumn(RUN_ID_COL, F.lit(run_id)), name,
+                          "append").parquet(self._path(name))
 
     # ------------------------------------------------------------ readers
 
@@ -568,13 +565,10 @@ class CheckpointedRun:
             # mergeSchema: a rewrite must never drop columns added by
             # schema evolution after some files were written
             df = self._read_stage(stage)
-            part_col = "bucket" if stage == "extracted" else None
-            if part_col and part_col in df.columns:
-                packed = df.repartition(F.col(part_col))
-                writer = packed.write.mode("overwrite").partitionBy(part_col)
+            if stage == "extracted":
+                writer = _stage_writer(df, stage, "overwrite")
             else:
-                packed = df.repartition(int(ideal))
-                writer = packed.write.mode("overwrite")
+                writer = df.repartition(int(ideal)).write.mode("overwrite")
             # cap file size from the observed bytes/row so one fat bucket
             # cannot produce a single outsized file
             n_rows = df.count()
@@ -604,28 +598,32 @@ class CheckpointedRun:
             removed[stage] = n_total - n_keep
             if n_total == n_keep:
                 continue
-            writer = kept.write.mode("overwrite").format("parquet")
-            if stage == "extracted":
-                writer = writer.partitionBy("bucket")
-            _atomic_rewrite(self._path(stage), writer)
+            _atomic_rewrite(self._path(stage),
+                            _stage_writer(kept, stage, "overwrite")
+                            .format("parquet"))
         return removed
 
     def compact(self) -> dict:
         """Expire orphan rows left by crashed (uncommitted) runs — the
         parquet stand-in for Iceberg's ``expire_snapshots`` + data-file
-        rewrite.  Each stage table is rewritten keeping only committed
-        rows, swapped in with a rename (readers in flight keep their
+        rewrite.  Each stage table is rewritten keeping only the rows of
+        committed runs and of runs still staged on a branch (a branch ref
+        keeps its snapshots alive until it is published or dropped),
+        swapped in with a rename (readers in flight keep their
         already-planned file list; new readers see the compacted table).
 
         Returns ``{stage: rows_reclaimed}``.  No-op (zero reclaimed) when
         every appended run committed — compaction is maintenance, never a
         correctness requirement, because readers filter to committed runs
         anyway."""
-        committed = self.committed_runs()
-        if committed is None:
+        runs = self._runs()
+        if runs is None:
             return self._rewrite_stages(lambda df: df.where(F.lit(False)))
+        live = _committed_seqs(runs).select(RUN_ID_COL).unionByName(
+            self._staged_runs(None, runs).select(
+                F.col("run_id").alias(RUN_ID_COL)))
         return self._rewrite_stages(lambda df: df.join(
-            F.broadcast(committed), RUN_ID_COL, "left_semi"))
+            F.broadcast(live), RUN_ID_COL, "left_semi"))
 
     def expire_snapshots(self, keep_last: int = 1) -> dict:
         """Retire time travel to all but the newest ``keep_last``
@@ -717,6 +715,17 @@ class CheckpointedRun:
 
 
 # ------------------------------------------------------- file maintenance
+
+def _stage_writer(df: DataFrame, stage: str, mode: str):
+    """Writer of ``stage`` under the write rule (module docstring): an
+    AQE rebalance before the write, by ``bucket`` for the bucket-
+    partitioned ``extracted`` stage.  Appends, delete rewrites and the
+    bucketed `compact_files` rewrite all write through it."""
+    if stage == "extracted":
+        return df.hint("rebalance", "bucket").write.mode(mode) \
+            .partitionBy("bucket")
+    return df.hint("rebalance").write.mode(mode)
+
 
 def _fs_path(spark: SparkSession, path: str):
     """(Hadoop FileSystem, Path) for ``path`` — whatever filesystem it

@@ -383,28 +383,12 @@ def _probe_avi(b: bytes) -> Optional[ImageHeader]:
     return None
 
 
-def _ebml_vint(b: bytes, pos: int, keep_marker: bool):
-    """(value, next_pos) EBML variable-length integer, or None."""
-    if pos >= len(b) or b[pos] == 0:
-        return None
-    first = b[pos]
-    length = 1
-    mask = 0x80
-    while not (first & mask):
-        mask >>= 1
-        length += 1
-    if pos + length > len(b):
-        return None
-    v = first if keep_marker else (first & (mask - 1))
-    for i in range(1, length):
-        v = (v << 8) | b[pos + i]
-    return v, pos + length
-
-
 def _probe_webm(b: bytes) -> Optional[ImageHeader]:
     """EBML walk: Segment -> Tracks -> TrackEntry -> Video carries
     PixelWidth (0xB0) / PixelHeight (0xBA).  Unknown-size elements
     (all-ones size, standard for live Segments) extend to the end."""
+    from .webm_codec import _data_size, _vint
+
     DESCEND = {0x18538067, 0x1654AE6B, 0xAE, 0xE0}  # Segment/Tracks/
     #                                                 TrackEntry/Video
     w = h = 0
@@ -412,17 +396,16 @@ def _probe_webm(b: bytes) -> Optional[ImageHeader]:
     def walk(pos, end, depth):
         nonlocal w, h
         while pos < end and depth < 8:
-            got = _ebml_vint(b, pos, True)
+            got = _vint(b, pos, True)
             if got is None:
                 return
             eid, pos = got
-            got = _ebml_vint(b, pos, False)
+            got = _data_size(b, pos)
             if got is None:
                 return
             size, pos = got
-            # unknown-size (all value-bits set, standard for live
-            # Segments) or overrun: extend to the end of scope
-            if size >= (1 << 56) - 1 or pos + size > end:
+            # unknown size (any width) or overrun: extend to end of scope
+            if size is None or pos + size > end:
                 size = end - pos
             if eid in DESCEND:
                 walk(pos, pos + size, depth + 1)
@@ -435,10 +418,10 @@ def _probe_webm(b: bytes) -> Optional[ImageHeader]:
             pos += size
 
     # skip the EBML header element, then walk from the Segment
-    got = _ebml_vint(b, 0, True)
+    got = _vint(b, 0, True)
     if got is None or got[0] != 0x1A45DFA3:
         return None
-    got2 = _ebml_vint(b, got[1], False)
+    got2 = _vint(b, got[1], False)
     if got2 is None:
         return None
     walk(got2[0] + got2[1], len(b), 0)

@@ -37,6 +37,7 @@ from typing import List, NamedTuple, Optional, Tuple
 
 MAX_PIXELS = 1 << 26    # shared decode guard with the other codecs
 MAX_FRAMES = 1 << 16    # per-track frame-range cap (hostile streams)
+MAX_DEPTH = 64          # nesting cap of recursive Tags / Chapters walks
 
 # EBML / Matroska element ids (the public Matroska registry subset
 # this walk needs)
@@ -101,7 +102,8 @@ class ParsedWebm(NamedTuple):
 
 
 def _vint(b: bytes, pos: int, keep_marker: bool):
-    """(value, next_pos) EBML variable-length integer, or None."""
+    """(value, next_pos) EBML variable-length integer, or None; the
+    width read is ``next_pos - pos``."""
     if pos >= len(b) or b[pos] == 0:
         return None
     first = b[pos]
@@ -118,6 +120,19 @@ def _vint(b: bytes, pos: int, keep_marker: bool):
     return v, pos + length
 
 
+def _data_size(b: bytes, pos: int):
+    """(size, next_pos) of an EBML element data size, or None; size is
+    None for the reserved UNKNOWN size — all value bits set, at any
+    width from 1 to 8 bytes (live-remuxed Segments and Clusters)."""
+    got = _vint(b, pos, False)
+    if got is None:
+        return None
+    size, npos = got
+    if size == (1 << 7 * (npos - pos)) - 1:
+        return None, npos
+    return size, npos
+
+
 def _svint(b: bytes, pos: int):
     """Signed EBML vint (lacing deltas): value - (2^(7L-1) - 1)."""
     got = _vint(b, pos, False)
@@ -130,18 +145,18 @@ def _svint(b: bytes, pos: int):
 
 def _elements(b: bytes, pos: int, end: int):
     """Yield (element_id, body_start, body_end) over an EBML scope.
-    Unknown-size elements (all value-bits set, standard for live
-    Segments) and overruns extend to the end of the scope."""
+    Unknown-size elements (see :func:`_data_size`) and overruns extend
+    to the end of the scope."""
     while pos < end:
         got = _vint(b, pos, True)
         if got is None:
             return
         eid, pos = got
-        got = _vint(b, pos, False)
+        got = _data_size(b, pos)
         if got is None:
             return
         size, pos = got
-        if size >= (1 << 56) - 1 or pos + size > end:
+        if size is None or pos + size > end:
             size = end - pos
         yield eid, pos, pos + size
         pos += size
@@ -206,6 +221,11 @@ def _block_frames(b: bytes, s: int, e: int):
     return track, frames
 
 
+def _check_depth(depth: int) -> None:
+    if depth > MAX_DEPTH:
+        raise ValueError(f"EBML nesting deeper than {MAX_DEPTH} levels")
+
+
 def parse_webm(payload: bytes):
     """Structural walk shared by decode and metadata: a ParsedWebm
     whose ``frames_by_track`` maps track number -> list of (start, end)
@@ -267,32 +287,30 @@ def parse_webm(payload: bytes):
         tracks.append(WebmTrack(num, ttype, codec, width, height,
                                 rate, channels, private))
 
-    def parse_tags(s: int, e: int) -> None:
+    def parse_tags(s: int, e: int, depth: int = 0) -> None:
         # Tags -> Tag -> SimpleTag(TagName, TagString); SimpleTags can
         # nest, so walk every scope that contains element structure
+        _check_depth(depth)
         name = val = None
         for eid, s2, e2 in _elements(b, s, e):
             if eid == _TAG_NAME:
                 name = b[s2:e2].decode("utf-8", "replace")
             elif eid == _TAG_STRING:
                 val = b[s2:e2].decode("utf-8", "replace")
-            elif eid in (0x7373, 0x63C0):   # Tag / Targets
-                parse_tags(s2, e2)
-            elif eid == 0x67C8:             # SimpleTag
-                parse_tags(s2, e2)
+            elif eid in (0x7373, 0x63C0, 0x67C8):  # Tag/Targets/SimpleTag
+                parse_tags(s2, e2, depth + 1)
         if name and val is not None:
             tags[name] = val
 
     got3 = _vint(b, hdr_end, True)
     if got3 is None or got3[0] != _SEGMENT:
         raise ValueError("EBML stream has no Segment")
-    got4 = _vint(b, got3[1], False)
+    got4 = _data_size(b, got3[1])
     if got4 is None:
         raise ValueError("truncated Segment header")
-    seg_start = got4[1]
-    seg_end = seg_start + got4[0]
-    if got4[0] >= (1 << 56) - 1 or seg_end > len(b):
-        seg_end = len(b)
+    seg_size, seg_start = got4
+    seg_end = len(b) if seg_size is None \
+        else min(seg_start + seg_size, len(b))
 
     for eid, s, e in _elements(b, seg_start, seg_end):
         if eid == _TRACKS:
@@ -313,10 +331,11 @@ def parse_webm(payload: bytes):
         elif eid == _CHAPTERS:
             # Chapters -> EditionEntry -> ChapterAtom (nestable) ->
             # ChapterDisplay -> ChapString: navigation titles
-            def walk_chapters(cs, ce):
+            def walk_chapters(cs, ce, depth=0):
+                _check_depth(depth)
                 for eid2, s2, e2 in _elements(b, cs, ce):
                     if eid2 in (0x45B9, 0xB6):   # Edition / Atom
-                        walk_chapters(s2, e2)
+                        walk_chapters(s2, e2, depth + 1)
                     elif eid2 == 0x80:           # ChapterDisplay
                         for eid3, s3, e3 in _elements(b, s2, e2):
                             if eid3 == 0x85:     # ChapString

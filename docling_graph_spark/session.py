@@ -1,7 +1,10 @@
 """SparkSession factory with scale-oriented defaults.
 
 Tuned for the 100 TB design point (AQE on, skew-join handling, Arrow batch
-transfer, compact shuffle) while remaining correct on local[N].  On a real
+transfer, compact shuffle) while remaining correct on local[N].  Shuffles
+start wide and AQE coalesces them down to the data actually present; that
+holds for cached plans as well, so a persisted grouped relation is as
+right-sized as an uncached one, on a laptop and on a cluster.  On a real
 cluster the same config ships via spark-submit --conf / --py-files.
 """
 
@@ -79,9 +82,16 @@ def get_spark(
         # start shuffles wide and let AQE coalesce DOWN: a fixed small
         # partition count makes big shuffles spill (fixed spill I/O is the
         # classic non-scaling term); oversized initial partitions cost
-        # nothing once AQE merges them
+        # little once AQE merges them -- cached plans included, see below
         .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
                 str(max(shuffle_partitions * 8, 128)))
+        # let AQE coalesce a shuffle that sits under a persisted relation
+        # too (Spark defaults this off).  The pipeline persists grouped
+        # outputs (doc_mentions); without this every consumer of the cache
+        # runs initialPartitionNum tasks and every append of it writes that
+        # many files, however small the run
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
         # --- Arrow transfer for pandas UDFs (the extraction hot path)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")

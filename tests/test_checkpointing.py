@@ -181,6 +181,24 @@ def test_compact_reclaims_only_orphans(spark, pages, tmp_path):
     assert run.run(pages) == other.count()
 
 
+def test_commit_writes_right_sized_files(spark, pages, tmp_path):
+    """One commit writes files sized by its data, not by the shuffle
+    width: the bucketed stage lands one file per bucket directory, and
+    the grouped and graph stages no more files than the session's
+    parallelism (a persisted shuffle output is coalesced like any
+    other)."""
+    from docling_graph_spark.checkpointing import _data_file_stats
+
+    root = str(tmp_path / "ckpt_layout")
+    CheckpointedRun(spark, root, CFG).run(pages)
+    # every populated bucket= directory holds exactly one parquet file
+    n_files, _, n_dirs = _data_file_stats(spark, f"{root}/extracted")
+    assert n_files == n_dirs
+    cap = spark.sparkContext.defaultParallelism
+    for stage in ("doc_mentions", "nodes", "edges"):
+        assert _data_file_stats(spark, f"{root}/{stage}")[0] <= cap, stage
+
+
 @pytest.mark.slow
 def test_compact_files_binpacks_fragmented_table(spark, pages, tmp_path):
     """Many small incremental runs fragment the stage tables into one file

@@ -407,6 +407,23 @@ def test_wap_drop_branch_discards(spark, pages, tmp_path):
         == before
 
 
+def test_wap_compact_keeps_staged_branch_rows(spark, pages, tmp_path):
+    """A maintenance pass between staging and publishing must not reclaim
+    the branch's rows: the manifest still lists the run as staged, so
+    publishing it afterwards must surface every staged url."""
+    run = CheckpointedRun(spark, str(tmp_path / "ck"),
+                          PipelineConfig(max_tokens=40))
+    run.run(pages.limit(25))
+    assert run.run(pages, branch="audit") == 15
+    assert set(run.compact().values()) == {0}
+    assert run.branch_preview("extracted", "audit").count() == 40
+    assert run.publish_branch("audit") == 1
+    urls = [r.url for r in run.extracted().select("url").collect()]
+    assert len(urls) == 40 and len(set(urls)) == 40
+    # every stage kept the branch rows, not just extracted
+    assert run.nodes().where(F.col("label") == "WebDocument").count() == 40
+
+
 def test_wap_two_branches_are_independent(spark, pages, tmp_path):
     run = CheckpointedRun(spark, str(tmp_path / "ck"),
                           PipelineConfig(max_tokens=40))

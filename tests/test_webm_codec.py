@@ -191,6 +191,50 @@ def test_subtitle_track_text_extraction():
         encode_webm_vp8(16, 16, [frame])) == ""
 
 
+def _reframe_unknown_size(w: bytes, elem_id: bytes, width: int) -> bytes:
+    """Rewrite the data size of the first ``elem_id`` element as the
+    reserved unknown size at ``width`` bytes (all value bits set), the
+    way a live remuxer frames a Segment or Cluster."""
+    from docling_graph_spark.kernels.webm_codec import _vint
+
+    i = w.index(elem_id) + len(elem_id)
+    _, body = _vint(w, i, False)
+    unknown = bytes([0xFF >> (width - 1)]) + b"\xff" * (width - 1)
+    return w[:i] + unknown + w[body:]
+
+
+@pytest.mark.parametrize("width", [1, 2, 4, 8])
+def test_unknown_size_segment_of_any_width_keeps_subtitles(width):
+    """The unknown size is "all value bits set" at every vint width; a
+    1-byte one (0xFF) read as a literal 127 truncates the Segment and
+    its Cluster, and the cues behind byte 127 are lost."""
+    from docling_graph_spark.kernels.webm_codec import (
+        encode_webm_subtitles, webm_subtitle_text)
+
+    cues = [f"cue number {k} spoken on a live stream" for k in range(8)]
+    w = encode_webm_subtitles(cues)
+    w = _reframe_unknown_size(w, b"\x1f\x43\xb6\x75", width)  # Cluster
+    w = _reframe_unknown_size(w, b"\x18\x53\x80\x67", width)  # Segment
+    assert len(w) > 127 + 64
+    assert webm_subtitle_text(w) == "\n\n".join(cues)
+
+
+def test_deeply_nested_tags_raise_value_error():
+    """A crafted Tags tree nested far past any real file routes as a
+    ValueError (an error row), never a RecursionError."""
+    from docling_graph_spark.kernels.webm_codec import (
+        _SEGMENT, _TAGS, _elem, encode_webm_subtitles)
+
+    w = encode_webm_subtitles(["cue"])
+    header = w[:w.index(b"\x18\x53\x80\x67")]
+    inner = _elem(0x45A3, b"name") + _elem(0x4487, b"value")
+    for _ in range(5000):
+        inner = _elem(0x67C8, inner)               # SimpleTag
+    crafted = header + _elem(_SEGMENT, _elem(_TAGS, _elem(0x7373, inner)))
+    with pytest.raises(ValueError, match="nesting"):
+        parse_webm(crafted)
+
+
 def test_video_rows_route_through_extraction(spark):
     from docling_graph_spark.kernels.media_probe import make_mp4_header
     from docling_graph_spark.kernels.webm_codec import (
