@@ -20,6 +20,12 @@ swap).  Citations: reference metadata sink
 `/root/reference/docling_graph/pipeline/orchestrator.py:149-240` (the run
 manifest), resume protocol per SURVEY §2.9.
 
+The six appends run concurrently and all finish before the commit point.
+The commit point is one exclusive create of the file ``runs/<seq>.json``
+(seq zero-padded to 20 digits), with no Spark job: a writer that finds its
+seq taken retries at a greater one, as an Iceberg writer that loses the
+metadata swap does.
+
 The visibility rule, applied by `CheckpointedRun._filter_committed` and
 nowhere else: a stage row is visible if and only if its run's manifest row
 is ``committed`` (or ``expired``) with ``seq`` at or before the pinned
@@ -48,12 +54,17 @@ per commit.
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, fields, replace
 from typing import Optional
 
+from py4j.protocol import Py4JJavaError
+from pyspark import inheritable_thread_target
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -100,7 +111,8 @@ def _committed_seqs(runs: DataFrame, pin: Optional[int] = None) -> DataFrame:
     """(``_run_id``, ``_seq``) of runs committed at or before ``pin``.  An
     EXPIRED snapshot (expire_snapshots) keeps its data in the current table
     state — Iceberg expiry only retires the ability to time-travel to it."""
-    runs = runs.where(F.col("status").isin("committed", "expired"))
+    runs = runs.where(F.col("status").isin("committed", "expired")
+                      & F.col("seq").isNotNull())
     if pin is not None:
         runs = runs.where(F.col("seq") <= pin)
     return runs.groupBy(F.col("run_id").alias(RUN_ID_COL)) \
@@ -147,8 +159,10 @@ class CheckpointedRun:
 
     def _runs(self) -> Optional[DataFrame]:
         """The run manifest, one row per commit; None when no run has
-        written one yet.  The only manifest read: read errors other than
-        a missing directory propagate."""
+        written one yet.  The only manifest read: it reads the seq-named
+        files `_manifest` creates and the ``part-*.json`` files of older
+        commits and of `_expire_manifest_below` alike.  Read errors other
+        than a missing directory propagate."""
         if not self._exists("runs"):
             return None
         return self.spark.read.json(self._path("runs"),
@@ -396,9 +410,13 @@ class CheckpointedRun:
         res = run_pipeline(todo, replace(self.config, materialize=True))
 
         run_id = uuid.uuid4().hex
-        self._append_stages(res, run_id)
-        processed = res.extracted.count()
-        res.unpersist()
+        try:
+            self._append_stages(res, run_id)
+        finally:
+            res.unpersist()
+        # the appends ran the observed extraction relation: its counter is
+        # the size of `extracted` without a count job
+        processed = res.run_counters["docs_extracted"]
         # the commit point: a run is visible if and only if this row landed
         # (for a branch run: visible to the BRANCH if and only if)
         self._manifest(run_id, processed, time.perf_counter() - t0,
@@ -409,11 +427,16 @@ class CheckpointedRun:
     def _append_stages(self, res: PipelineResult, run_id: str) -> None:
         """The data-file half of the commit: six appends stamped with
         ``run_id``, invisible until `_manifest` records the run as
-        committed.  Split out so tests can simulate a crash between the
+        committed.  The appends run concurrently, one thread per stage:
+        each is a latency-bound job on small data, and tasks that reach a
+        persisted partition another job is computing wait on its block
+        lock and read it instead of recomputing.  Returns only after every
+        append has finished; then the first failure, in stage order, is
+        raised.  Split out so tests can simulate a crash between the
         appends and the commit."""
         extracted = res.extracted.withColumn(
             "bucket", host_bucket(F.col("url"), self.n_buckets))
-        for name, df in (
+        stages = (
             ("extracted", extracted),
             ("chunks", res.chunks),
             ("doc_mentions", res.doc_mentions),
@@ -424,9 +447,21 @@ class CheckpointedRun:
             ("nodes", res.nodes),
             ("edges", res.edges),
             ("metrics", res.metrics),
-        ):
+        )
+
+        def append(name: str, df: DataFrame) -> None:
             _stage_writer(df.withColumn(RUN_ID_COL, F.lit(run_id)), name,
                           "append").parquet(self._path(name))
+
+        # leaving the block waits for every append; each thread gets its
+        # own copy of the caller's job group, scheduler pool and tags
+        with ThreadPoolExecutor(max_workers=len(stages)) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(self.spark)(append),
+                            name, df)
+                for name, df in stages]
+        for f in futures:
+            f.result()
 
     # ------------------------------------------------------------ readers
 
@@ -693,7 +728,11 @@ class CheckpointedRun:
                   branch: Optional[str] = None) -> None:
         """S12 run-manifest row (`orchestrator.py:149-240` analogue); doubles
         as the atomic commit record for ``run_id``'s appends (or its
-        staging record, for a WAP branch run)."""
+        staging record, for a WAP branch run).  The row is one file,
+        ``runs/<seq>.json``, created exclusively: a writer that finds its
+        seq taken retries at a strictly greater seq, so two writers never
+        share one and an unreadable file at a seq never blocks the next
+        commit.  No Spark job runs."""
         row = {
             "run_id": run_id,
             "kind": kind,
@@ -702,16 +741,18 @@ class CheckpointedRun:
             # the partition spec this run's data files were written
             # under (Iceberg: spec-id); readers union specs for pruning
             "n_buckets": self.n_buckets,
-            # monotone snapshot sequence — the time-travel axis (run_ts has
-            # second resolution, so ties are possible there; seq is total)
-            "seq": self._next_seq(),
             "run_ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
             "processed_docs": int(processed),
             "wall_seconds": float(round(wall_seconds, 3)),
             **{f"cfg_{k}": str(v) for k, v in asdict(self.config).items()},
         }
-        self.spark.createDataFrame([row], MANIFEST_SCHEMA).write \
-            .mode("append").json(self._path("runs"))
+        # monotone snapshot sequence — the time-travel axis (run_ts has
+        # second resolution, so ties are possible there; seq is total)
+        seq = self._next_seq()
+        while not _create_exclusive(
+                self.spark, f"{self._path('runs')}/{seq:020d}.json",
+                json.dumps({**row, "seq": seq}).encode() + b"\n"):
+            seq = max(self._next_seq(), seq + 1)
 
 
 # ------------------------------------------------------- file maintenance
@@ -733,6 +774,42 @@ def _fs_path(spark: SparkSession, path: str):
     jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
     return (jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()),
             jpath)
+
+
+def _create_exclusive(spark: SparkSession, path: str, data: bytes) -> bool:
+    """Create the file ``path`` holding ``data``; False, leaving the file
+    untouched, when it already exists.  Hadoop's ``create(path,
+    overwrite=false)`` is exclusive on HDFS, but on the local filesystem it
+    checks for the file and then opens it, so two writers can both pass
+    the check; there an ``O_EXCL`` open is the exclusive create."""
+    fs, jpath = _fs_path(spark, path)
+    if _is_local(fs):
+        local = fs.makeQualified(jpath).toUri().getPath()
+        os.makedirs(os.path.dirname(local), exist_ok=True)
+        try:
+            fd = os.open(local, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
+        except FileExistsError:
+            return False
+        with os.fdopen(fd, "wb") as fh:
+            fh.write(data)
+        return True
+    try:
+        out = fs.create(jpath, False)
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() \
+                != "org.apache.hadoop.fs.FileAlreadyExistsException":
+            raise
+        return False
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+    return True
+
+
+def _is_local(fs) -> bool:
+    """Whether ``fs`` is the local filesystem (scheme ``file``)."""
+    return fs.getScheme() == "file"
 
 
 def _data_file_stats(spark: SparkSession, path: str):

@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 from ..kernels import batching as k_batch
 from ..kernels import chunking as k_chunk
 from ..schemas import CHUNK_SPAN
+from .extract import extractable
 
 _CHUNK_ARRAY = T.ArrayType(CHUNK_SPAN)
 
@@ -122,9 +123,8 @@ def chunks_from_combined(combined: DataFrame) -> DataFrame:
     (differential-tested incl. astral chars,
     tests/test_chunk_substring.py)."""
     c = F.explode("chunks").alias("c")
-    return combined.filter(
-        F.col("error").isNull() & (F.length(F.trim(F.col("text"))) > 0)
-    ).select("url", "lang", "text", c).select(
+    return combined.filter(extractable()).select(
+        "url", "lang", "text", c).select(
         "url", "lang",
         F.col("c.chunk_id").alias("chunk_id"),
         F.col("c.start").alias("start"),

@@ -323,9 +323,14 @@ def make_json_response_parser_udf(aggressive: bool = True):
     return parse_batch
 
 
+def extractable():
+    """The P1 predicate: no error, and text that is not empty once its
+    spaces are trimmed.  The one definition shared by `filter_extractable`,
+    the chunk rebuild and the run's ``docs_extracted`` counter."""
+    return F.col("error").isNull() & (F.length(F.trim(F.col("text"))) > 0)
+
+
 def filter_extractable(extracted: DataFrame) -> DataFrame:
     """P1: drop rows with empty/whitespace-only extracted text
     (`/root/reference/docling_graph/core/input/handlers.py:72-82`)."""
-    return extracted.filter(
-        F.col("error").isNull() & (F.length(F.trim(F.col("text"))) > 0)
-    )
+    return extracted.filter(extractable())

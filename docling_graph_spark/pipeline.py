@@ -85,8 +85,8 @@ class PipelineResult:
 
     @property
     def run_counters(self) -> Dict:
-        """Global (docs_parsed, bytes_stripped, errors) observed on the
-        first output action; blocks until one has run."""
+        """Global (docs_parsed, bytes_stripped, errors, docs_extracted)
+        observed on the first output action; blocks until one has run."""
         return dict(self.observation.get)
 
     def _persist_roots(self):
@@ -191,6 +191,9 @@ def run_pipeline(web_pages: DataFrame,
             .alias("bytes_stripped"),
             F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0))
             .alias("errors"),
+            # rows `filter_extractable` keeps: the size of `extracted`
+            F.sum(F.when(op_extract.extractable(), 1).otherwise(0))
+            .alias("docs_extracted"),
         )
 
     combined = None

@@ -264,3 +264,209 @@ def test_time_travel_snapshots(spark, pages, tmp_path):
     # an uncommitted / unknown run id must raise, not silently un-pin
     with pytest.raises(ValueError):
         run.extracted(as_of="nonexistent-run")
+
+
+def _seqs(run):
+    return [int(s.seq) for s in run.snapshots().select("seq").collect()]
+
+
+def _slice(pages, k, n):
+    """The pages whose url hash is ``k`` mod ``n``: a fixed subset, unlike
+    ``limit``, which may pick other rows each time it is evaluated."""
+    return pages.filter(F.crc32(F.col("url")) % n == k)
+
+
+def test_committed_seqs_ignores_null_seq(spark):
+    """A manifest row without a seq (a record read from a damaged file)
+    commits nothing: no snapshot, no visible rows."""
+    from docling_graph_spark.checkpointing import (
+        MANIFEST_SCHEMA, RUN_ID_COL, _committed_seqs)
+
+    blank = {f.name: None for f in MANIFEST_SCHEMA}
+    runs = spark.createDataFrame(
+        [{**blank, "run_id": "a", "status": "committed", "seq": 1},
+         {**blank, "run_id": "b", "status": "committed"}], MANIFEST_SCHEMA)
+    assert [r[RUN_ID_COL] for r in _committed_seqs(runs).collect()] == ["a"]
+
+
+@pytest.mark.parametrize("local", [True, False])
+def test_create_exclusive_never_replaces_a_file(spark, tmp_path, monkeypatch,
+                                                local):
+    """The commit primitive: the first create wins and a second create of
+    the same path reports the loss without touching the file — through
+    the O_EXCL open on the local filesystem and through Hadoop's
+    ``create(path, overwrite=false)`` elsewhere."""
+    from docling_graph_spark import checkpointing
+
+    monkeypatch.setattr(checkpointing, "_is_local", lambda fs: local)
+    path = tmp_path / "runs" / "00000000000000000001.json"
+    assert checkpointing._create_exclusive(spark, str(path), b"first\n")
+    assert not checkpointing._create_exclusive(spark, str(path), b"second\n")
+    assert path.read_bytes() == b"first\n"
+
+
+def test_racing_creates_have_one_winner(spark, tmp_path):
+    """Two threads creating the same manifest file at once: exactly one
+    wins every round.  Hadoop's local ``create(path, overwrite=false)``
+    checks, then opens, and lets both win in some rounds."""
+    import threading
+
+    from docling_graph_spark.checkpointing import _create_exclusive
+
+    for i in range(50):
+        path = str(tmp_path / "runs" / f"{i:020d}.json")
+        start = threading.Barrier(2)
+        wins = []
+
+        def create(tag):
+            start.wait()
+            if _create_exclusive(spark, path, tag):
+                wins.append(tag)
+
+        threads = [threading.Thread(target=create, args=(t,))
+                   for t in (b"a\n", b"b\n")]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert len(wins) == 1, i
+        assert open(path, "rb").read() == wins[0]
+
+
+@pytest.mark.slow
+def test_stale_seq_commit_lands_at_a_fresh_seq(spark, pages, tmp_path,
+                                               monkeypatch):
+    """Two writers that read the same max(seq) must not share a seq: the
+    second commit finds ``runs/<seq>.json`` taken and retries above it.
+    Both runs stay committed, at distinct seqs, and both are visible."""
+    run = CheckpointedRun(spark, str(tmp_path / "ckpt_race"), CFG)
+    n1 = run.run(_slice(pages, 0, 20))
+    # the second writer read the manifest before the first one committed
+    monkeypatch.setattr(run, "_next_seq", lambda: 1)
+    n2 = run.run(_slice(pages, 0, 10))
+    assert n1 and n2
+
+    assert _seqs(run) == [1, 2]
+    assert run.snapshots().select("run_id").distinct().count() == 2
+    assert run.extracted().count() == n1 + n2
+    assert run.extracted(as_of=1).count() == n1
+
+
+@pytest.mark.slow
+def test_zero_length_manifest_file_is_skipped(spark, pages, tmp_path):
+    """A crash between the create and the write of a manifest file leaves
+    ``runs/<seq>.json`` empty: that seq commits nothing, and the next
+    commit lands above it instead of retrying it forever."""
+    run = CheckpointedRun(spark, str(tmp_path / "ckpt_empty"), CFG)
+    n1 = run.run(_slice(pages, 0, 20))
+    (tmp_path / "ckpt_empty" / "runs" / f"{2:020d}.json").touch()
+
+    assert _seqs(run) == [1]
+    assert run.extracted().count() == n1
+    n2 = run.run(_slice(pages, 0, 10))
+    assert n2 > 0
+    assert _seqs(run) == [1, 3]
+    assert run.extracted().count() == n1 + n2
+
+
+@pytest.mark.slow
+def test_failed_append_leaves_run_uncommitted(spark, pages, tmp_path,
+                                              monkeypatch):
+    """One stage append fails: run() raises only after every other append
+    finished, writes no manifest row, and a retry once the path is fixed
+    commits every page exactly once."""
+    from docling_graph_spark import checkpointing
+
+    finished = []
+    stage_writer = checkpointing._stage_writer
+
+    class Tracked:
+        def __init__(self, writer, stage):
+            self.writer, self.stage = writer, stage
+
+        def parquet(self, path):
+            self.writer.parquet(path)
+            finished.append(self.stage)
+
+    monkeypatch.setattr(
+        checkpointing, "_stage_writer",
+        lambda df, stage, mode: Tracked(stage_writer(df, stage, mode), stage))
+
+    root = tmp_path / "ckpt_fail"
+    root.mkdir()
+    (root / "edges").write_text("not a table")
+    sample = _slice(pages, 0, 10)
+    run = CheckpointedRun(spark, str(root), CFG)
+    with pytest.raises(Exception):
+        run.run(sample)
+    assert sorted(finished) == sorted(
+        s for s in checkpointing.STAGES if s != "edges")
+    assert not (root / "runs").exists()
+    assert run.extracted().count() == 0
+
+    (root / "edges").unlink()
+    n = run.run(sample)
+    assert n > 0
+    urls = [r.url for r in run.extracted().select("url").collect()]
+    assert len(urls) == len(set(urls)) == n
+    assert run.edges().count() > 0
+    assert _seqs(run) == [1]
+    assert run.run(sample) == 0
+
+
+@pytest.mark.slow
+def test_part_file_manifest_stays_readable(spark, pages, tmp_path):
+    """A manifest written as a Spark ``part-*.json`` (the earlier commit
+    layout, and the layout expire_snapshots rewrites to) reads next to
+    seq-named files: snapshots order them all by seq, and a commit after
+    the rewrite takes a fresh seq."""
+    from docling_graph_spark.checkpointing import MANIFEST_SCHEMA
+
+    root = str(tmp_path / "ckpt_legacy")
+    run = CheckpointedRun(spark, root, CFG)
+    blank = {f.name: None for f in MANIFEST_SCHEMA}
+    spark.createDataFrame([{
+        **blank, "run_id": "legacy", "kind": "append",
+        "status": "committed", "branch": "", "n_buckets": 64, "seq": 1,
+        "processed_docs": 0, "wall_seconds": 0.0,
+    }], MANIFEST_SCHEMA).write.mode("append").json(f"{root}/runs")
+
+    third = [_slice(pages, k, 30) for k in range(3)]
+    n1 = run.run(third[0])
+    n2 = run.run(third[1])
+    snaps = run.snapshots().collect()
+    assert [int(s.seq) for s in snaps] == [1, 2, 3]
+    assert snaps[0].run_id == "legacy"
+
+    assert run.expire_snapshots(keep_last=1)["expired"] == 2
+    assert not list((tmp_path / "ckpt_legacy" / "runs").glob("0*.json"))
+    n3 = run.run(third[2])
+    assert n3 > 0
+    assert _seqs(run) == [3, 4]
+    assert run.extracted().count() == n1 + n2 + n3
+
+
+def test_processed_counts_the_extracted_rows(spark, tmp_path):
+    """run() counts what lands in ``extracted``: error rows and a
+    whitespace-only page (no error, empty text) are parsed but not
+    processed, in the return value and in the manifest's
+    ``processed_docs`` alike."""
+    import datetime
+
+    from docling_graph_spark import schemas
+
+    ts = datetime.datetime(2024, 1, 1)
+    good = [(f"https://a.example.com/ok{i}", ts,
+             b"<html><body><p>" + b"good content here %d " % i * 20
+             + b"</p></body></html>", None, "en") for i in range(4)]
+    bad = [
+        ("https://a.example.com/pdfjunk", ts, b"%PDF-1.4 garbage", None, "en"),
+        ("https://a.example.com/null", ts, None, None, "en"),
+        ("https://a.example.com/blank", ts,
+         b"<html><body><p>  \n\t  </p></body></html>", None, "en"),
+    ]
+    pages = spark.createDataFrame(good + bad, schema=schemas.WEB_PAGES)
+    run = CheckpointedRun(spark, str(tmp_path / "ckpt_processed"), CFG)
+    n = run.run(pages)
+    assert n == run.extracted().count() == len(good)
+    assert [r.processed_docs for r in run.snapshots().collect()] == [n]
