@@ -10,21 +10,24 @@ On a production cluster the tables are Iceberg (atomic snapshot commits,
 incremental reads between snapshot ids, time travel for lineage); in this
 sandbox the same protocol runs on plain parquet datasets.  The one Iceberg
 property that must NOT be dropped on the way down is commit atomicity
-across the run: six independent parquet appends are not a transaction, and
-a crash after the `extracted` append but before the `edges` append would
-make the restart treat those urls as done — their edges silently lost
-forever.  So runs commit the way an Iceberg snapshot does: every stage
+across the run: four independent parquet appends are not a transaction, and
+a crash after the `extracted` append but before the `doc_mentions` append
+would make the restart treat those urls as done — their mentions silently
+lost forever.  So runs commit the way an Iceberg snapshot does: every stage
 append is stamped with the run's id (`_run_id` column = the data files),
 and the run-manifest row written LAST is the commit point (= the metadata
 swap).  Citations: reference metadata sink
 `/root/reference/docling_graph/pipeline/orchestrator.py:149-240` (the run
 manifest), resume protocol per SURVEY §2.9.
 
-The six appends run concurrently and all finish before the commit point.
+The four appends run concurrently and all finish before the commit point.
 The commit point is one exclusive create of the file ``runs/<seq>.json``
 (seq zero-padded to 20 digits), with no Spark job: a writer that finds its
 seq taken retries at a greater one, as an Iceberg writer that loses the
 metadata swap does.
+
+The graph is not stored: `CheckpointedRun.graph` derives it from the
+committed stages on every read, through the visibility rule below.
 
 The visibility rule, applied by `CheckpointedRun._filter_committed` and
 nowhere else: a stage row is visible if and only if its run's manifest row
@@ -72,9 +75,10 @@ from pyspark.sql.types import (
     DoubleType, LongType, StringType, StructField, StructType,
 )
 
-from .pipeline import PipelineConfig, PipelineResult, run_pipeline
+from .pipeline import (PipelineConfig, PipelineResult, build_web_graph,
+                       run_pipeline)
 
-STAGES = ("extracted", "chunks", "doc_mentions", "nodes", "edges", "metrics")
+STAGES = ("extracted", "chunks", "doc_mentions", "metrics")
 RUN_ID_COL = "_run_id"
 SEQ_COL = "_seq"  # snapshot seq of a row's run, attached for delete checks
 
@@ -234,7 +238,7 @@ class CheckpointedRun:
         visible runs, anti-join older equality deletes, and drop the run
         stamp."""
         if RUN_ID_COL not in df.columns:
-            return df  # legacy table written before run stamping
+            return df  # a stream's unstamped table (streaming/incremental)
         vis = self._visible_runs(as_of, branch)
         if vis is None:
             return df.where(F.lit(False)).drop(RUN_ID_COL)
@@ -405,7 +409,7 @@ class CheckpointedRun:
         # parquet, localCheckpoint is the stand-in.
         todo = todo.localCheckpoint(eager=True)
         # the extraction/chunk/mention UDF stages feed every downstream
-        # write — materialize them once so the six appends don't recompute
+        # write — materialize them once so the four appends don't recompute
         # (on a cluster these would be intermediate Iceberg tables)
         res = run_pipeline(todo, replace(self.config, materialize=True))
 
@@ -425,8 +429,8 @@ class CheckpointedRun:
         return processed
 
     def _append_stages(self, res: PipelineResult, run_id: str) -> None:
-        """The data-file half of the commit: six appends stamped with
-        ``run_id``, invisible until `_manifest` records the run as
+        """The data-file half of the commit: four appends, no graph, stamped
+        with ``run_id``, invisible until `_manifest` records the run as
         committed.  The appends run concurrently, one thread per stage:
         each is a latency-bound job on small data, and tasks that reach a
         persisted partition another job is computing wait on its block
@@ -436,18 +440,8 @@ class CheckpointedRun:
         appends and the commit."""
         extracted = res.extracted.withColumn(
             "bucket", host_bucket(F.col("url"), self.n_buckets))
-        stages = (
-            ("extracted", extracted),
-            ("chunks", res.chunks),
-            ("doc_mentions", res.doc_mentions),
-            # graph relations are url-derived, so appends stay disjoint per
-            # run; Term nodes can repeat across runs — readers dedup by id
-            # (idempotent content-hash ids make that a dropDuplicates, not
-            # a merge)
-            ("nodes", res.nodes),
-            ("edges", res.edges),
-            ("metrics", res.metrics),
-        )
+        stages = zip(STAGES, (extracted, res.chunks, res.doc_mentions,
+                              res.metrics))
 
         def append(name: str, df: DataFrame) -> None:
             _stage_writer(df.withColumn(RUN_ID_COL, F.lit(run_id)), name,
@@ -455,7 +449,7 @@ class CheckpointedRun:
 
         # leaving the block waits for every append; each thread gets its
         # own copy of the caller's job group, scheduler pool and tags
-        with ThreadPoolExecutor(max_workers=len(stages)) as pool:
+        with ThreadPoolExecutor(max_workers=len(STAGES)) as pool:
             futures = [
                 pool.submit(inheritable_thread_target(self.spark)(append),
                             name, df)
@@ -489,17 +483,22 @@ class CheckpointedRun:
                 raise
             return None
 
+    def graph(self, as_of=None) -> "tuple[DataFrame, DataFrame]":
+        """(nodes, edges): `build_web_graph` over the committed
+        ``extracted``, ``chunks`` and ``doc_mentions`` rows as of ``as_of``
+        (snapshot seq or run id).  Ids and reverse edges follow this
+        reader's ``id_mode`` and ``add_reverse_edges``."""
+        chunks, doc_mentions = (
+            self._filter_committed(self._read_stage(s), as_of=as_of)
+            for s in ("chunks", "doc_mentions"))
+        return build_web_graph(self.extracted(as_of), chunks, doc_mentions,
+                               self.config)
+
     def nodes(self, as_of=None) -> DataFrame:
-        """Graph nodes across committed runs (id-level dedup); ``as_of``
-        (snapshot seq or run id) time-travels to that snapshot."""
-        return self._filter_committed(
-            self._read_stage("nodes"), as_of=as_of
-        ).dropDuplicates(["id"])
+        return self.graph(as_of)[0]
 
     def edges(self, as_of=None) -> DataFrame:
-        return self._filter_committed(
-            self._read_stage("edges"), as_of=as_of
-        ).dropDuplicates(["src", "dst", "label"])
+        return self.graph(as_of)[1]
 
     def extracted(self, as_of=None) -> DataFrame:
         """Extracted text across committed runs.  HIDDEN PARTITIONING:
@@ -624,7 +623,7 @@ class CheckpointedRun:
         for stage in STAGES:
             df = self._stage_or_none(stage)
             if df is None or RUN_ID_COL not in df.columns:
-                continue  # no data file, or a legacy unstamped table
+                continue  # no data file, or a stream's unstamped table
             kept = keep(df)
             if kept is df:
                 continue

@@ -146,8 +146,11 @@ def build_web_graph(extracted: DataFrame, chunks: DataFrame,
                     doc_mentions: DataFrame,
                     cfg: PipelineConfig) -> Tuple[DataFrame, DataFrame]:
     """Graph half of the pipeline: document/chunk/term graph assembly plus
-    relational cleanup.  Shared by `run_pipeline` and the stream's graph
-    finalize (streaming/incremental.assemble_accumulated_graph)."""
+    relational cleanup.  The one graph function: `run_pipeline` runs it
+    over a pass's relations, and `CheckpointedRun.graph` (the resumed
+    readers and graph mode) over the committed stage tables.  Ids and
+    reverse edges follow ``cfg.id_mode`` and ``cfg.add_reverse_edges``,
+    the caller's config, not that of the runs that wrote the tables."""
     nodes, edges = op_graph.assemble_web_graph(
         extracted, chunks, doc_mentions,
         id_mode=cfg.id_mode, add_reverse_edges=cfg.add_reverse_edges,

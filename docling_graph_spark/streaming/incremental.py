@@ -20,7 +20,7 @@ batch and streaming, which is the point of foreachBatch — so the stream
 honors every `PipelineConfig` knob the oneshot job does (``chunker``,
 ``tokenizer_name``, ``schema_size``, ...) and pays the fused extract+chunk
 Python pass once per micro-batch.  Graph finalize over the accumulated
-tables reuses `pipeline.build_web_graph`.
+tables is `checkpointing.CheckpointedRun.graph`, the resumed runs' reader.
 """
 
 from __future__ import annotations
@@ -31,7 +31,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..pipeline import PipelineConfig, build_web_graph, run_pipeline
+from ..checkpointing import CheckpointedRun
+from ..pipeline import PipelineConfig, run_pipeline
 from ..schemas import WEB_PAGES
 
 
@@ -280,7 +281,11 @@ def assemble_accumulated_graph(spark: SparkSession, output_root: str,
     one Term node per (term, batch) with partial counts.  So ingestion
     appends the document-local relations (extracted/chunks/doc_mentions,
     all keyed by url — disjoint per batch, safely appendable) and this job
-    finalizes the corpus-global ones.
+    finalizes the corpus-global ones.  It reads them through
+    `CheckpointedRun.graph`, so on a resume root only committed rows count
+    (a crashed run's appends stay out); a stream root's tables carry no
+    run stamp and are read whole.  Ids and reverse edges follow
+    ``config``'s ``id_mode`` and ``add_reverse_edges``.
 
     Node ids derive from urls, so the tables must hold ONE capture per url:
     `dedup_urls` ingestion and the resume protocol both guarantee that.
@@ -290,14 +295,13 @@ def assemble_accumulated_graph(spark: SparkSession, output_root: str,
     silently mixing captures.
 
     Writes ``nodes``/``edges`` parquet tables under ``output_root``
-    (overwrite: finalize rebuilds the corpus-global snapshot; the stage
-    tables stay append-only).  Returns ``(nodes, edges)``.
+    (overwrite: finalize exports the corpus-global snapshot, which no
+    `CheckpointedRun` reader reads; the stage tables stay append-only).
+    Returns ``(nodes, edges)``.
     """
-    cfg = config or PipelineConfig()
     root = output_root.rstrip("/")
-    extracted = spark.read.parquet(f"{root}/extracted")
-    chunks = spark.read.parquet(f"{root}/chunks")
-    doc_mentions = spark.read.parquet(f"{root}/doc_mentions")
+    ck = CheckpointedRun(spark, root, config)
+    extracted = ck.extracted()
 
     # the guard is one aggregation over the url column; at full corpus
     # scale a caller whose ingestion already guarantees uniqueness
@@ -312,7 +316,7 @@ def assemble_accumulated_graph(spark: SparkSession, output_root: str,
             f"{dup.limit(3).collect()}"
         )
 
-    nodes, edges = build_web_graph(extracted, chunks, doc_mentions, cfg)
+    nodes, edges = ck.graph()
     if write:
         nodes.write.mode("overwrite").parquet(f"{root}/nodes")
         edges.write.mode("overwrite").parquet(f"{root}/edges")

@@ -23,6 +23,7 @@ Modes:
   stream  — Structured-Streaming availableNow drain with offset checkpoints
   compact — checkpoint maintenance: orphan expiry (+ file bin-packing)
   graph   — corpus-global graph finalize over accumulated stage tables
+            (a resume root's committed rows only)
   shards  — training-shard export: token-budget packing of the extracted
             table, written partitioned by shard_id with a manifest
   curate  — training-data funnel over the extracted text: Gopher gates,
@@ -466,10 +467,9 @@ def main() -> int:
         if args.report:
             from docling_graph_spark import visualizers
             out = args.output.rstrip("/")
-            visualizers.write_report(ckpt_run.nodes(), ckpt_run.edges(),
-                                     f"{out}/report.md")
-            visualizers.write_interactive_html(ckpt_run.nodes(),
-                                               ckpt_run.edges(),
+            nodes, edges = ckpt_run.graph()
+            visualizers.write_report(nodes, edges, f"{out}/report.md")
+            visualizers.write_interactive_html(nodes, edges,
                                                f"{out}/graph.html")
     else:
         from docling_graph_spark import exporters

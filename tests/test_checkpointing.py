@@ -83,7 +83,7 @@ def test_crashed_run_is_invisible_and_retried(spark, pages, tmp_path):
     n1 = run.run(half)
     assert n1 == half.count()
 
-    # simulate a crash: append all six stage tables for the other half but
+    # simulate a crash: append every stage table for the other half but
     # die before the manifest commit
     other = pages.filter(F.crc32(F.col("url")) % 2 != 0)
     res = run_pipeline(other.localCheckpoint(eager=True), CFG).persist()
@@ -119,14 +119,14 @@ def test_first_run_crash_is_invisible_and_retried(spark, pages, tmp_path):
     """A run that dies during the FIRST commit — some stage appends landed,
     no manifest exists yet — must leave nothing visible: no manifest means
     nothing is committed.  The retry reprocesses every page and the graph
-    equals the one-shot result instead of silently losing the edges."""
+    equals the one-shot result instead of silently losing the mentions."""
     root = str(tmp_path / "ckpt_first_crash")
     run = CheckpointedRun(spark, root, CFG)
     res = run_pipeline(pages.localCheckpoint(eager=True), CFG).persist()
     run._append_stages(res, "crashed")
     res.unpersist()
-    # the crash hit before the edges append
-    shutil.rmtree(run._path("edges"))
+    # the crash hit before the doc_mentions append
+    shutil.rmtree(run._path("doc_mentions"))
 
     assert run.extracted().count() == 0
     assert run.run(pages) == pages.count()
@@ -184,7 +184,7 @@ def test_compact_reclaims_only_orphans(spark, pages, tmp_path):
 def test_commit_writes_right_sized_files(spark, pages, tmp_path):
     """One commit writes files sized by its data, not by the shuffle
     width: the bucketed stage lands one file per bucket directory, and
-    the grouped and graph stages no more files than the session's
+    the chunk and grouped stages no more files than the session's
     parallelism (a persisted shuffle output is coalesced like any
     other)."""
     from docling_graph_spark.checkpointing import _data_file_stats
@@ -195,7 +195,7 @@ def test_commit_writes_right_sized_files(spark, pages, tmp_path):
     n_files, _, n_dirs = _data_file_stats(spark, f"{root}/extracted")
     assert n_files == n_dirs
     cap = spark.sparkContext.defaultParallelism
-    for stage in ("doc_mentions", "nodes", "edges"):
+    for stage in ("chunks", "doc_mentions"):
         assert _data_file_stats(spark, f"{root}/{stage}")[0] <= cap, stage
 
 
@@ -394,17 +394,17 @@ def test_failed_append_leaves_run_uncommitted(spark, pages, tmp_path,
 
     root = tmp_path / "ckpt_fail"
     root.mkdir()
-    (root / "edges").write_text("not a table")
+    (root / "doc_mentions").write_text("not a table")
     sample = _slice(pages, 0, 10)
     run = CheckpointedRun(spark, str(root), CFG)
     with pytest.raises(Exception):
         run.run(sample)
     assert sorted(finished) == sorted(
-        s for s in checkpointing.STAGES if s != "edges")
+        s for s in checkpointing.STAGES if s != "doc_mentions")
     assert not (root / "runs").exists()
     assert run.extracted().count() == 0
 
-    (root / "edges").unlink()
+    (root / "doc_mentions").unlink()
     n = run.run(sample)
     assert n > 0
     urls = [r.url for r in run.extracted().select("url").collect()]
@@ -470,3 +470,145 @@ def test_processed_counts_the_extracted_rows(spark, tmp_path):
     n = run.run(pages)
     assert n == run.extracted().count() == len(good)
     assert [r.processed_docs for r in run.snapshots().collect()] == [n]
+
+
+def _graph_rows(df):
+    """Every row of a node or edge relation, ``properties`` included, as
+    a sorted list of hashable tuples."""
+    return sorted(tuple(sorted(v.items()) if isinstance(v, dict) else v
+                        for v in r) for r in df.collect())
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("content_dedup", [False, True])
+def test_graph_across_runs_equals_oneshot(spark, pages, tmp_path,
+                                          content_dedup):
+    """Term nodes aggregate over the whole corpus: after two disjoint
+    committed runs the graph equals the one-shot graph row for row,
+    properties included, instead of carrying one run's partial Term
+    counts."""
+    from dataclasses import replace
+
+    cfg = replace(CFG, content_dedup=content_dedup)
+    run = CheckpointedRun(spark, str(tmp_path / "ckpt_terms"), cfg)
+    assert run.run(_slice(pages, 0, 2)) and run.run(_slice(pages, 1, 2))
+
+    oneshot = run_pipeline(pages, cfg)
+    try:
+        assert _graph_rows(run.nodes()) == _graph_rows(oneshot.nodes)
+        assert _graph_rows(run.edges()) == _graph_rows(oneshot.edges)
+    finally:
+        oneshot.unpersist()
+
+
+@pytest.mark.slow
+def test_deletes_reach_the_graph(spark, pages, tmp_path):
+    """An equality delete removes the url's WebDocument and Chunk nodes
+    and their has_chunk and mentions edges, merge-on-read and after the
+    rewrite alike; time travel to before the delete still shows them."""
+    run = CheckpointedRun(spark, str(tmp_path / "ckpt_del_graph"), CFG)
+    run.run(pages)
+    gone = [r.url for r in _slice(pages, 0, 50).select("url").collect()]
+    assert gone
+
+    def doc_graph(as_of=None):
+        """(node labels, edge labels) of the ``gone`` urls' documents."""
+        nodes, edges = run.nodes(as_of), run.edges(as_of)
+        hit = nodes.where(F.col("properties")["url"].isin(gone))
+        docs = hit.where(F.col("label") == "WebDocument") \
+            .select(F.col("id").alias("src"))
+        return ({r.label for r in hit.select("label").distinct().collect()},
+                {r.label for r in edges.join(docs, "src")
+                 .select("label").distinct().collect()})
+
+    assert doc_graph() == ({"WebDocument", "Chunk"},
+                           {"has_chunk", "mentions"})
+    doc_ids = [r.id for r in run.nodes().where(
+        (F.col("label") == "WebDocument")
+        & F.col("properties")["url"].isin(gone)).select("id").collect()]
+    assert len(doc_ids) == len(gone)
+
+    def assert_gone():
+        assert run.nodes().where(
+            F.col("properties")["url"].isin(gone)).count() == 0
+        assert run.edges().where(F.col("src").isin(doc_ids)).count() == 0
+
+    run.delete_urls(gone)
+    assert_gone()
+    assert doc_graph(as_of=1) == ({"WebDocument", "Chunk"},
+                                  {"has_chunk", "mentions"})
+    # Term counts subtract the deleted documents' mentions
+    kept = pages.where(~F.col("url").isin(gone))
+    oneshot = run_pipeline(kept, CFG)
+    try:
+        assert _graph_rows(run.nodes()) == _graph_rows(oneshot.nodes)
+    finally:
+        oneshot.unpersist()
+
+    assert run.rewrite_deletes()["applied_deletes"] == len(gone)
+    assert_gone()
+
+
+@pytest.mark.slow
+def test_graph_mode_reads_only_committed_runs(spark, pages, tmp_path):
+    """Graph mode over a checkpoint root builds the committed documents
+    only, not a crashed run's appends, and leaves the readers intact: the
+    next run() commits the crashed half and the graph shows every page."""
+    from docling_graph_spark.streaming.incremental import (
+        assemble_accumulated_graph,
+    )
+
+    root = str(tmp_path / "ckpt_graph_mode")
+    run = CheckpointedRun(spark, root, CFG)
+    half = F.pmod(F.xxhash64("url"), F.lit(2)) == 0  # 255 of the 500 pages
+    n1 = run.run(pages.filter(half))
+    other = pages.filter(~half)
+    res = run_pipeline(other.localCheckpoint(eager=True), CFG).persist()
+    run._append_stages(res, "deadbeef-crashed")
+    res.unpersist()
+
+    def n_docs(nodes):
+        return nodes.where(F.col("label") == "WebDocument").count()
+
+    nodes, _ = assemble_accumulated_graph(spark, root, CFG)
+    assert n_docs(nodes) == n1 == 255
+    assert run.run(pages) == other.count()
+    assert n_docs(run.nodes()) == pages.count() == 500
+
+
+@pytest.mark.slow
+def test_old_layout_graph_stages_are_ignored(spark, pages, tmp_path):
+    """A root written when each commit also appended run-stamped
+    ``nodes``/``edges`` tables: readers derive the graph from the other
+    stages, and neither compact() nor compact_files() touches the old
+    graph directories."""
+    from docling_graph_spark import checkpointing
+
+    root = tmp_path / "ckpt_old_layout"
+    run = CheckpointedRun(spark, str(root), CFG)
+    sample = _slice(pages, 0, 10)
+    run.run(sample)
+    run_id = run.snapshots().collect()[0].run_id
+    want = run_pipeline(sample, CFG)
+    try:
+        # stamped with the committed run, fragmented past compact_files'
+        # threshold, and holding a row no derived graph has
+        stale = spark.createDataFrame(
+            [("stale", "Term", "entity", {"n_docs": "1"})],
+            want.nodes.schema)
+        for name, df in (("nodes", want.nodes.unionByName(stale)),
+                         ("edges", want.edges)):
+            df.repartition(8).withColumn(
+                checkpointing.RUN_ID_COL, F.lit(run_id)
+            ).write.mode("append").parquet(str(root / name))
+        listing = {n: sorted(p.name for p in (root / n).iterdir())
+                   for n in ("nodes", "edges")}
+
+        assert _graph_rows(run.nodes()) == _graph_rows(want.nodes)
+        assert _graph_rows(run.edges()) == _graph_rows(want.edges)
+    finally:
+        want.unpersist()
+    assert set(run.compact()) == set(checkpointing.STAGES)
+    assert run.compact_files() == {}
+    assert {n: sorted(p.name for p in (root / n).iterdir())
+            for n in ("nodes", "edges")} == listing
