@@ -232,19 +232,28 @@ class CheckpointedRun:
         return self.spark.read.parquet(self._path("deletes")) \
             .join(vis, RUN_ID_COL).select("url", F.col(SEQ_COL).alias("_dseq"))
 
+    def _visibility(self, as_of=None, branch: Optional[str] = None):
+        """(visible runs, delete keys): the inputs of the visibility rule,
+        resolved from one manifest read.  (None, None) when there is no
+        manifest."""
+        vis = self._visible_runs(as_of, branch)
+        return vis, (None if vis is None else self._delete_keys(vis))
+
     def _filter_committed(self, df: DataFrame, as_of=None,
-                          branch: Optional[str] = None) -> DataFrame:
+                          branch: Optional[str] = None,
+                          visibility=None) -> DataFrame:
         """The visibility rule (module docstring): keep the rows of
         visible runs, anti-join older equality deletes, and drop the run
-        stamp."""
+        stamp.  ``visibility`` is a `_visibility` pair already resolved
+        for ``as_of``/``branch``, so a reader of several stages resolves
+        it once; None resolves it here."""
         if RUN_ID_COL not in df.columns:
             return df  # a stream's unstamped table (streaming/incremental)
-        vis = self._visible_runs(as_of, branch)
+        vis, dkeys = visibility or self._visibility(as_of, branch)
         if vis is None:
             return df.where(F.lit(False)).drop(RUN_ID_COL)
         df = df.join(F.broadcast(vis), RUN_ID_COL)
-        dkeys = self._delete_keys(vis) if "url" in df.columns else None
-        if dkeys is not None:
+        if dkeys is not None and "url" in df.columns:
             df = _drop_deleted(df, dkeys)
         return df.drop(RUN_ID_COL, SEQ_COL)
 
@@ -302,8 +311,7 @@ class CheckpointedRun:
 
         Returns ``{"applied_deletes": n, "removed_rows": total}``."""
         none = {"applied_deletes": 0, "removed_rows": 0}
-        vis = self._visible_runs()
-        dkeys = None if vis is None else self._delete_keys(vis)
+        vis, dkeys = self._visibility()
         if dkeys is None:
             return none
         n_dels = dkeys.count()
@@ -408,8 +416,8 @@ class CheckpointedRun:
         # lineage — Iceberg's snapshot isolation gives this for free; on
         # parquet, localCheckpoint is the stand-in.
         todo = todo.localCheckpoint(eager=True)
-        # the extraction/chunk/mention UDF stages feed every downstream
-        # write — materialize them once so the four appends don't recompute
+        # the extraction/chunk/mention UDF output feeds every downstream
+        # write — materialize it once so the four appends don't recompute
         # (on a cluster these would be intermediate Iceberg tables)
         res = run_pipeline(todo, replace(self.config, materialize=True))
 
@@ -487,12 +495,15 @@ class CheckpointedRun:
         """(nodes, edges): `build_web_graph` over the committed
         ``extracted``, ``chunks`` and ``doc_mentions`` rows as of ``as_of``
         (snapshot seq or run id).  Ids and reverse edges follow this
-        reader's ``id_mode`` and ``add_reverse_edges``."""
-        chunks, doc_mentions = (
-            self._filter_committed(self._read_stage(s), as_of=as_of)
-            for s in ("chunks", "doc_mentions"))
-        return build_web_graph(self.extracted(as_of), chunks, doc_mentions,
-                               self.config)
+        reader's ``id_mode`` and ``add_reverse_edges``.  The three stages
+        share one resolution of the visible runs and delete keys."""
+        visibility = self._visibility(as_of)
+        extracted, chunks, doc_mentions = (
+            self._filter_committed(self._read_stage(s),
+                                   visibility=visibility)
+            for s in ("extracted", "chunks", "doc_mentions"))
+        return build_web_graph(extracted.drop("bucket"), chunks,
+                               doc_mentions, self.config)
 
     def nodes(self, as_of=None) -> DataFrame:
         return self.graph(as_of)[0]

@@ -1,4 +1,4 @@
-"""Batched deterministic extractors (the LLM-backend replacement).
+"""Labelled-field extractors (the LLM-backend replacement, template path).
 
 The reference sends chunk batches to an LLM and validates the JSON response
 against the template (`/root/reference/docling_graph/core/extractors/backends/
@@ -7,56 +7,17 @@ deterministic rule/regex extractors producing the same template-shaped
 records, so the downstream merge/graph stages are exercised identically and
 reproducibly.
 
-Two extractor families:
-
-* :func:`extract_mentions` — generic web-corpus extractor: term mentions
-  (regex tokens) + emails + years, emitted as Term child records of a
-  WebDocument record.  Simple enough to re-express both JVM-side
-  (``regexp_extract_all``) and in a DuckDB oracle.
-* :class:`FieldRuleExtractor` — labelled-field extractor for invoice-style
-  templates ("Invoice Number: INV-1 ..."), mirroring the reference's sample
-  templates (`/root/reference/tests/fixtures/sample_templates/test_template.py`).
+:class:`FieldRuleExtractor` extracts labelled fields for invoice-style
+templates ("Invoice Number: INV-1 ..."), mirroring the reference's sample
+templates (its `tests/fixtures/sample_templates/test_template.py`).
+The web-corpus term/email/year mentions have their one definition in
+kernels/mentions.py.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Any, Callable, Dict, List, Mapping, Optional, Sequence
-
-TERM_RE = re.compile(r"[a-z]{5,}")
-EMAIL_RE = re.compile(r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}")
-YEAR_RE = re.compile(r"\b(1[89][0-9]{2}|20[0-9]{2})\b")
-
-
-def extract_terms(text: str) -> List[str]:
-    """All lowercase word tokens of length >= 5 (with repeats, in order)."""
-    return TERM_RE.findall(text.lower())
-
-
-def extract_mentions(text: str) -> List[Dict[str, str]]:
-    """Mention records {term, kind} for the WebDocument/Term templates.
-
-    Distinct per (term, kind), first-occurrence order (the downstream graph
-    dedups on identity fields anyway; keeping them distinct here mirrors the
-    reference's per-model entity lists)."""
-    out: List[Dict[str, str]] = []
-    seen = set()
-    for term in extract_terms(text):
-        key = (term, "term")
-        if key not in seen:
-            seen.add(key)
-            out.append({"term": term, "kind": "term"})
-    for email in EMAIL_RE.findall(text):
-        key = (email.lower(), "email")
-        if key not in seen:
-            seen.add(key)
-            out.append({"term": email.lower(), "kind": "email"})
-    for year in YEAR_RE.findall(text):
-        key = (year, "year")
-        if key not in seen:
-            seen.add(key)
-            out.append({"term": year, "kind": "year"})
-    return out
+from typing import Any, Callable, Dict, Mapping, Optional, Sequence
 
 
 class FieldRuleExtractor:

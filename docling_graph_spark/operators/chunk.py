@@ -22,7 +22,7 @@ from pyspark.sql import types as T
 
 from ..kernels import batching as k_batch
 from ..kernels import chunking as k_chunk
-from ..schemas import CHUNK_SPAN
+from ..schemas import CHUNK_SPAN, MENTION
 from .extract import extractable
 
 _CHUNK_ARRAY = T.ArrayType(CHUNK_SPAN)
@@ -151,21 +151,31 @@ _HYBRID_CHUNK = T.ArrayType(T.StructType([
     T.StructField("token_est", T.IntegerType()),
 ]))
 
+_HYBRID_DOC = T.StructType([
+    T.StructField("chunks", _HYBRID_CHUNK),
+    T.StructField("mentions", T.ArrayType(MENTION)),
+])
+
 
 def make_hybrid_chunker_udf(max_tokens: int = DEFAULT_MAX_TOKENS,
                             merge_peers: bool = True,
                             tokenizer_name=None):
+    """(text, spans) -> struct(chunks, mentions): the document's hybrid
+    chunk array and its mention aggregate over those chunks
+    (kernels/mentions.py), from one Python pass."""
     from ..kernels import hybrid_chunker as k_hybrid
+    from ..kernels.mentions import doc_mention_rows
 
-    @pandas_udf(_HYBRID_CHUNK)
-    def hybrid(texts: pd.Series, spans: pd.Series) -> pd.Series:
+    @pandas_udf(_HYBRID_DOC)
+    def hybrid(texts: pd.Series, spans: pd.Series) -> pd.DataFrame:
         from ..kernels.tokenization import get_token_counter
 
         count = get_token_counter(tokenizer_name)
-        out = []
+        out, mentions = [], []
         for text, blocks in zip(texts, spans):
             if not text:
                 out.append([])
+                mentions.append([])
                 continue
             bl = [
                 k_hybrid.Block(int(b["start"]), int(b["end"]), b["tag"])
@@ -185,26 +195,34 @@ def make_hybrid_chunker_udf(max_tokens: int = DEFAULT_MAX_TOKENS,
                 }
                 for c in chunks
             ])
-        return pd.Series(out)
+            mentions.append(doc_mention_rows(
+                (c.chunk_id, c.text) for c in chunks))
+        return pd.DataFrame({"chunks": out, "mentions": mentions})
 
     return hybrid
 
 
-def hybrid_chunk_documents(extracted: DataFrame,
-                           max_tokens: int = DEFAULT_MAX_TOKENS,
-                           merge_peers: bool = True,
-                           tokenizer_name=None) -> DataFrame:
-    """Structure-aware chunking (the HybridChunker analogue — see
-    kernels.hybrid_chunker): extracted docs with block spans -> chunk rows
-    (url, lang, chunk_id, start, end, text, heading_path, context,
-    token_est).  Zero shuffle: per-document pure function over (text,
-    spans), exploded where the row lives."""
+def with_hybrid_chunks(docs: DataFrame,
+                       max_tokens: int = DEFAULT_MAX_TOKENS,
+                       merge_peers: bool = True,
+                       tokenizer_name=None, gate=None) -> DataFrame:
+    """Documents with block spans (text, spans) -> the same rows plus a
+    ``chunks`` array (the HybridChunker analogue, see
+    kernels.hybrid_chunker) and a ``mentions`` array (schemas.MENTION).
+    Rows where the boolean column ``gate`` is false get empty arrays.
+    Zero shuffle: a per-document pure function where the row lives."""
     udf = make_hybrid_chunker_udf(max_tokens, merge_peers, tokenizer_name)
-    with_chunks = extracted.select(
-        "url", "lang", udf(F.col("text"), F.col("spans")).alias("chunks")
-    )
+    text = F.col("text") if gate is None else F.when(gate, F.col("text"))
+    return docs.withColumn("h", udf(text, F.col("spans"))).select(
+        *docs.columns, F.col("h.chunks").alias("chunks"),
+        F.col("h.mentions").alias("mentions"))
+
+
+def hybrid_chunks(docs: DataFrame) -> DataFrame:
+    """`with_hybrid_chunks` rows -> chunk rows (url, lang, chunk_id, start,
+    end, text, heading_path, context, token_est)."""
     c = F.explode("chunks").alias("c")
-    return with_chunks.select("url", "lang", c).select(
+    return docs.select("url", "lang", c).select(
         "url", "lang",
         F.col("c.chunk_id").alias("chunk_id"),
         F.col("c.start").alias("start"),
@@ -214,6 +232,16 @@ def hybrid_chunk_documents(extracted: DataFrame,
         F.col("c.context").alias("context"),
         F.col("c.token_est").alias("token_est"),
     )
+
+
+def hybrid_chunk_documents(extracted: DataFrame,
+                           max_tokens: int = DEFAULT_MAX_TOKENS,
+                           merge_peers: bool = True,
+                           tokenizer_name=None) -> DataFrame:
+    """Structure-aware chunking: extracted docs with block spans -> chunk
+    rows (see `hybrid_chunks`)."""
+    return hybrid_chunks(with_hybrid_chunks(extracted, max_tokens,
+                                            merge_peers, tokenizer_name))
 
 
 def batch_summaries(chunks: DataFrame) -> DataFrame:

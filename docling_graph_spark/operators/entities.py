@@ -3,9 +3,12 @@
 Two paths mirroring the reference's backend split
 (`/root/reference/docling_graph/core/extractors/backends/llm_backend.py`):
 
-* relational path — term/email/year mentions extracted with pure JVM column
-  expressions (``regexp_extract_all`` + ``explode``): whole-stage-codegen
-  friendly, zero Python, the 100 TB hot path;
+* relational path — term/email/year mentions.  The chunking UDF computes
+  each document's mention aggregate where it already holds the chunk text
+  (kernels/mentions.py, one definition for both chunkers) and ships it as a
+  ``mentions`` array on the per-document relation; the two functions here
+  only project it into the ``doc_mentions`` relation (explode, flatten):
+  no regex scan JVM-side and no shuffle;
 * template path — labelled-field extraction over batch combined text via an
   Arrow-batched pandas UDF producing template-shaped JSON records, exercising
   the reference's many-to-one strategy (batch extraction → merge).
@@ -23,92 +26,19 @@ from pyspark.sql import types as T
 
 from ..kernels.entity_extract import FieldRuleExtractor
 
-TERM_PATTERN = "[a-z]{5,}"  # case-folded spelling; the scan uses [a-zA-Z]
-EMAIL_PATTERN = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-YEAR_PATTERN = r"\b(?:1[89][0-9]{2}|20[0-9]{2})\b"
 
-
-def extract_mentions(chunks: DataFrame, text_col: str = "text") -> DataFrame:
-    """chunk rows -> one row per mention occurrence
-    (url, lang, chunk_id, term, kind).  All JVM-side.
-
-    Single pass, codegen-only expressions.  Two constraints shape this:
-
-    * a union of three per-kind scans reads (or recomputes) the chunk
-      relation three times — at corpus scale that triples the dominant cost
-      for identical output, so all three kinds extract in ONE projection and
-      explode through ONE Generate;
-    * higher-order functions (``transform`` et al.) are CodegenFallback in
-      Spark: one in the Generate expression forces the whole stage into
-      interpreted evaluation, where ICU-backed ``lower()`` over full chunk
-      text measured ~40x slower than the codegen path (60 s vs 1.5 s on the
-      sf0.1 corpus, 32 cores).  Hence: plain split/extract_all arrays
-      concatenated (see scan-cost notes below), and kind/lowercasing derived
-      AFTER the explode on the short matched strings — the three value
-      spaces are disjoint (emails contain '@', years are all-digit, terms
-      are alphabetic), so the kind is recoverable from the value alone."""
-    text = F.col(text_col)
-    # Scan-cost notes (measured at 50 KB/page, 2.1 GB of chunk text, 32
-    # cores — where this stage dominates the whole pipeline):
-    # * terms via split-on-non-alpha, NOT regexp_extract_all("[a-zA-Z]{5,}"):
-    #   split yields exactly the maximal alphabetic runs and measured 3.7x
-    #   faster (4.4 s vs 16.4 s) — extract_all restarts the matcher per
-    #   match, split consumes the string in one pass.  The {5,} length gate
-    #   moves AFTER the explode (plain codegen filter on short strings);
-    #   a pre-explode HOF filter() would drop the empty/short tokens earlier
-    #   but measured slower overall (17.1 s vs 13.5 s end-to-end) — HOFs are
-    #   CodegenFallback and the extra exploded rows are cheaper than an
-    #   interpreted Generate input.
-    # * the email pattern is the most expensive scan by far (38 s over this
-    #   corpus with ZERO matches: every alphanumeric run backtracks hunting
-    #   for '@'), so it is gated behind a contains('@') byte scan — a text
-    #   without '@' cannot match, so the gate is exact.
-    # * (?i)[a-z] is spelled [a-zA-Z]: Java compiles the former into a
-    #   per-character case-folding predicate — same matches, slower scan.
-    empty = F.array().cast("array<string>")
-    arr = F.concat(
-        F.split(text, "[^a-zA-Z]+"),
-        F.when(text.contains("@"),
-               F.regexp_extract_all(text, F.lit(EMAIL_PATTERN), 0)
-               ).otherwise(empty),
-        F.regexp_extract_all(text, F.lit(YEAR_PATTERN), 0),
-    )
-    raw = F.col("raw")
-    kind = (
-        F.when(raw.contains("@"), F.lit("email"))
-        .when(raw.rlike("^[0-9]{4}$"), F.lit("year"))
-        .otherwise(F.lit("term"))
-    )
-    # translate(), not lower(): a pure byte-map that never touches the ICU
-    # case-mapping path (ICU's per-call overhead + synchronized
-    # BreakIterator cache serialize all executor threads — measured 47 s vs
-    # 5 s on this stage at 32 threads).  The matched values are ASCII by
-    # construction of the patterns, so the byte map is exact.
-    ascii_lower = F.translate(
-        raw, "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz"
-    )
-    return chunks.select(
-        "url", "lang", "chunk_id", F.explode(arr).alias("raw")
-    ).filter(
-        # drop the <5-char / empty split tokens (years are all-digit and
-        # never appear in the split array, so they pass via the rlike arm;
-        # emails are >=6 chars by pattern construction)
-        (F.length("raw") >= 5) | F.col("raw").rlike("^[0-9]{4}$")
-    ).select(
-        "url", "lang", "chunk_id",
-        F.when(kind == "year", raw).otherwise(ascii_lower).alias("term"),
-        kind.alias("kind"),
-    )
+def extract_mentions(docs: DataFrame) -> DataFrame:
+    """Per-document rows carrying a ``mentions`` array (schemas.MENTION)
+    -> one row per (document, term, kind): (url, lang, m)."""
+    return docs.select("url", "lang", F.explode("mentions").alias("m"))
 
 
 def doc_mentions(mentions: DataFrame) -> DataFrame:
-    """Aggregate mention occurrences to (url, lang, term, kind, n_mentions,
-    first_chunk_id) — the document-level mention relation (map-side partial
-    aggregation; one shuffle on the salted-ready url key)."""
-    return mentions.groupBy("url", "lang", "term", "kind").agg(
-        F.count("*").alias("n_mentions"),
-        F.min("chunk_id").alias("first_chunk_id"),
-    )
+    """`extract_mentions` rows -> the document-level mention relation
+    (schemas.DOC_MENTIONS: url, lang, term, kind, n_mentions,
+    first_chunk_id).  A projection: the UDF already aggregated per
+    document, so this needs no shuffle."""
+    return mentions.select("url", "lang", "m.*")
 
 
 def make_template_extractor_udf(extractor: FieldRuleExtractor):

@@ -28,7 +28,7 @@ from ..kernels.pdf_stub import extract_pdf_text, is_pdf
 from ..kernels.rtf_parse import (extract_rtf_text,
                                  extract_subtitle_text, is_rtf,
                                  is_srt, is_webvtt)
-from ..schemas import CHUNK_SPAN_LITE, EXTRACTION_RESULT
+from ..schemas import CHUNK_SPAN_LITE, EXTRACTION_RESULT, MENTION
 
 
 def _sniff_is_mp4_video(b: bytes) -> bool:
@@ -127,7 +127,8 @@ def extract_payload(html: pd.Series, ctype: pd.Series) -> pd.DataFrame:
 
 def make_extract_chunk_udf(max_tokens: int, context_limit: int,
                            merge_threshold: float, tokenizer_name=None):
-    """Fused extract+chunk UDF: one Python pass, one Arrow round trip.
+    """Fused extract+chunk+mention UDF: one Python pass, one Arrow round
+    trip.
 
     Extraction and chunking are both per-document pure functions, so running
     them as two pandas-UDF stages pays the JVM↔Python plumbing twice AND
@@ -138,6 +139,12 @@ def make_extract_chunk_udf(max_tokens: int, context_limit: int,
     `extracted` and `chunks` remain separate relations downstream as cheap
     JVM projections of the one materialized combined relation.
 
+    The ``mentions`` array is the document's mention aggregate
+    (kernels/mentions.py) over the chunk texts, computed here because this
+    is where the text already is: ``doc_mentions`` is then a projection of
+    the same relation, with no regex scan over rebuilt chunk text and no
+    shuffle.
+
     Chunking applies exactly where the two-stage pipeline would have: rows
     passing the P1 filter (no error, non-whitespace text — PDF errors always
     carry empty text, kernels/pdf_stub.py:40-59, so the in-UDF gate is
@@ -145,11 +152,13 @@ def make_extract_chunk_udf(max_tokens: int, context_limit: int,
     construction (same kernels, same inputs); enforced by the oracle gate.
     """
     from ..kernels import batching as k_batch
+    from ..kernels.mentions import doc_mention_rows
     from .chunk import batched_spans
 
     schema = T.StructType(
         list(EXTRACTION_RESULT.fields)
-        + [T.StructField("chunks", T.ArrayType(CHUNK_SPAN_LITE), True)]
+        + [T.StructField("chunks", T.ArrayType(CHUNK_SPAN_LITE), True),
+           T.StructField("mentions", T.ArrayType(MENTION), True)]
     )
     available = k_batch.available_tokens(context_limit)
 
@@ -159,12 +168,12 @@ def make_extract_chunk_udf(max_tokens: int, context_limit: int,
         from ..kernels.tokenization import get_token_counter
 
         count = get_token_counter(tokenizer_name)
-        texts, spans_col, stripped, kinds, errors, chunk_col = \
-            [], [], [], [], [], []
+        texts, spans_col, stripped, kinds, errors, chunk_col, men_col = \
+            [], [], [], [], [], [], []
         for payload, transport in zip(html, ctype):
             text, spans, nbytes, kind, err = _route_payload(payload,
                                                             transport)
-            chunks = []
+            chunks, mentions = [], []
             if err is None and text.strip():
                 planned = batched_spans(text, max_tokens, available,
                                         merge_threshold, count)
@@ -198,12 +207,17 @@ def make_extract_chunk_udf(max_tokens: int, context_limit: int,
                     }
                     for (s, cost, batch_id), (b0, b1) in zip(planned, offs)
                 ]
+                # (term, kind, n_mentions, first_chunk_id) tuples: Arrow
+                # takes them as schemas.MENTION structs as they are
+                mentions = doc_mention_rows(
+                    (s.chunk_id, s.text) for s, _, _ in planned)
             texts.append(text)
             spans_col.append(spans)
             stripped.append(nbytes)
             kinds.append(kind)
             errors.append(err)
             chunk_col.append(chunks)
+            men_col.append(mentions)
         return pd.DataFrame({
             "text": texts,
             "spans": spans_col,
@@ -211,6 +225,7 @@ def make_extract_chunk_udf(max_tokens: int, context_limit: int,
             "kind": kinds,
             "error": errors,
             "chunks": chunk_col,
+            "mentions": men_col,
         })
 
     return extract_and_chunk_payload
@@ -239,8 +254,9 @@ def _lang_col():
 def extract_and_chunk(web_pages: DataFrame, max_tokens: int,
                       context_limit: int, merge_threshold: float,
                       tokenizer_name=None) -> DataFrame:
-    """web_pages -> combined extracted+chunks relation
-    (url, warc_ts, lang, text, spans, bytes_stripped, kind, error, chunks)."""
+    """web_pages -> combined extracted+chunks+mentions relation
+    (url, warc_ts, lang, text, spans, bytes_stripped, kind, error, chunks,
+    mentions)."""
     udf = make_extract_chunk_udf(max_tokens, context_limit, merge_threshold,
                                  tokenizer_name)
     out = web_pages.withColumn("x", udf(F.col("html"), _transport_col(web_pages)))
@@ -252,6 +268,7 @@ def extract_and_chunk(web_pages: DataFrame, max_tokens: int,
         F.col("x.kind").alias("kind"),
         F.col("x.error").alias("error"),
         F.col("x.chunks").alias("chunks"),
+        F.col("x.mentions").alias("mentions"),
     )
 
 

@@ -1,9 +1,9 @@
 """End-to-end document→graph pipeline (the Spark mapping of the reference's
 orchestrator, SURVEY §3.1).
 
-    scan web_pages → extract main content (Arrow UDF) → chunk+batch (fused
-    Arrow UDF, zero shuffle) → deterministic mention extraction (pure JVM)
-    → document-level aggregation (one shuffle on url) → graph assembly →
+    scan web_pages → extract main content, chunk+batch and aggregate each
+    document's mentions (one fused Arrow UDF, zero shuffle) → project the
+    chunk and doc_mentions relations from it → graph assembly →
     relational cleanup → stats / lineage metrics
 
 Stage boundaries are shuffles instead of the reference's HTTP/process hops.
@@ -53,12 +53,13 @@ class PipelineConfig:
     add_reverse_edges: bool = False
     content_dedup: bool = False
     run_id: str = "run"
-    # persist the expensive intermediates (extraction / chunk / mention UDF
-    # outputs) as part of building the result, so a caller that runs several
-    # output actions (nodes AND edges AND metrics) parses each document once
-    # — without this the edges plan re-runs the Arrow extraction per union
-    # branch.  False for single-action jobs that write one table and exit
-    # (a pure pipeline needs no cache; persisting would only cost memory).
+    # persist the one UDF output relation (`PipelineResult.combined`:
+    # extraction, chunks and mention aggregate per document) as part of
+    # building the result, so a caller that runs several output actions
+    # (nodes AND edges AND metrics) parses each document once — without
+    # this the edges plan re-runs the Arrow extraction per union branch.
+    # False for single-action jobs that write one table and exit (a pure
+    # pipeline needs no cache; persisting would only cost memory).
     materialize: bool = True
 
 
@@ -76,11 +77,11 @@ class PipelineResult:
     # needs its own groupBy)
     observation: "object" = None
     # pre-filter extraction output (error rows included) — metrics derive
-    # from it; persist THIS to make every downstream action share one parse
+    # from it
     extracted_all: Optional[DataFrame] = None
-    # fused extract+chunk relation (fallback chunker path): extracted_all
-    # and chunks are cheap projections of this one Python pass — persisting
-    # it replaces persisting them separately
+    # every document with its chunk array and mention aggregate, from the
+    # chunking UDF: extracted_all, chunks and doc_mentions are cheap
+    # projections of it, so it is the one relation persisted
     combined: Optional[DataFrame] = None
 
     @property
@@ -90,26 +91,20 @@ class PipelineResult:
         return dict(self.observation.get)
 
     def _persist_roots(self):
-        if self.combined is not None:
-            return (self.combined, self.doc_mentions)
-        return (self.extracted_all, self.chunks, self.doc_mentions)
+        return (self.combined,)
 
     def persist(self) -> "PipelineResult":
-        """Persist the expensive intermediates (the fused extract+chunk
-        relation — or, on the hybrid path, extraction + chunk outputs —
-        plus the mention aggregate) so multiple output actions share one
-        computation — the in-memory analogue of the production pattern where
-        each stage is written to a table once and read back, never
-        recomputed."""
+        """Persist the UDF output relation (`combined`) so multiple output
+        actions share one computation — the in-memory analogue of the
+        production pattern where each stage is written to a table once and
+        read back, never recomputed."""
         for df in self._persist_roots():
-            if df is not None:
-                df.persist()
+            df.persist()
         return self
 
     def unpersist(self) -> "PipelineResult":
         for df in self._persist_roots():
-            if df is not None:
-                df.unpersist()
+            df.unpersist()
         return self
 
 
@@ -199,24 +194,25 @@ def run_pipeline(web_pages: DataFrame,
             .alias("docs_extracted"),
         )
 
-    combined = None
     if cfg.chunker == "hybrid":
-        extracted_all = _observe(op_extract.extract_main_text(web_pages))
-        extracted = op_extract.filter_extractable(extracted_all)
-        chunks = op_chunk.hybrid_chunk_documents(
-            extracted, max_tokens, tokenizer_name=cfg.tokenizer_name
-        )
+        # the hybrid chunker's UDF runs over the extraction UDF's output,
+        # chunking the rows `filter_extractable` keeps
+        combined = op_chunk.with_hybrid_chunks(
+            op_extract.extract_main_text(web_pages), max_tokens,
+            tokenizer_name=cfg.tokenizer_name, gate=op_extract.extractable())
+        chunks = op_chunk.hybrid_chunks(combined)
     else:
-        # fallback chunker: one fused Python pass (extract + chunk), both
-        # relations projected from it JVM-side
+        # fallback chunker: one fused Python pass (extract + chunk +
+        # mentions)
         combined = op_extract.extract_and_chunk(
             web_pages, max_tokens, cfg.context_limit, cfg.merge_threshold,
             tokenizer_name=cfg.tokenizer_name,
         )
-        extracted_all = _observe(combined.drop("chunks"))
-        extracted = op_extract.filter_extractable(extracted_all)
         chunks = op_chunk.chunks_from_combined(combined)
-    mentions = op_entities.extract_mentions(chunks)
+    # every other relation is projected from `combined` JVM-side
+    extracted_all = _observe(combined.drop("chunks", "mentions"))
+    extracted = op_extract.filter_extractable(extracted_all)
+    mentions = op_entities.extract_mentions(combined)
     doc_mentions = op_entities.doc_mentions(mentions)
 
     nodes, edges = build_web_graph(extracted, chunks, doc_mentions, cfg)

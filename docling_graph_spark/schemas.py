@@ -64,6 +64,22 @@ CHUNK_SPAN_LITE = T.StructType([
     T.StructField("batch_id", T.IntegerType(), False),
 ])
 
+# One document's mention aggregate (kernels/mentions.doc_mention_rows),
+# emitted by the chunking UDF next to the chunk array
+MENTION = T.StructType([
+    T.StructField("term", T.StringType(), False),
+    T.StructField("kind", T.StringType(), False),   # term | email | year
+    T.StructField("n_mentions", T.LongType(), False),
+    T.StructField("first_chunk_id", T.IntegerType(), False),
+])
+
+# the doc_mentions relation and stage table: MENTION flattened per url
+DOC_MENTIONS = T.StructType([
+    T.StructField("url", T.StringType(), False),
+    T.StructField("lang", T.StringType(), True),
+    *MENTION.fields,
+])
+
 CHUNKS = T.StructType([
     T.StructField("url", T.StringType(), False),
     T.StructField("lang", T.StringType(), True),

@@ -86,10 +86,12 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
                 str(max(shuffle_partitions * 8, 128)))
         # let AQE coalesce a shuffle that sits under a persisted relation
-        # too (Spark defaults this off).  The pipeline persists grouped
-        # outputs (doc_mentions); without this every consumer of the cache
-        # runs initialPartitionNum tasks and every append of it writes that
-        # many files, however small the run
+        # too (Spark defaults this off).  The pipeline itself persists no
+        # shuffle output (its one cached relation is the UDF output), but
+        # callers cache grouped relations (graph nodes/edges, term
+        # aggregates); without this every consumer of such a cache runs
+        # initialPartitionNum tasks and every write of it that many files,
+        # however small the run
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
                 "true")
         # --- Arrow transfer for pandas UDFs (the extraction hot path)
@@ -104,7 +106,8 @@ def get_spark(
         # identical results on ASCII corpora, and the ICU path measured ~10x
         # slower per call with a synchronized BreakIterator cache that
         # serializes all executor threads under concurrency (32-thread
-        # local[] run: 47 s -> 5 s on the mention-extraction stage)
+        # local[] run: 47 s -> 5 s on the JVM mention scan the pipeline
+        # once ran; language detection still lowercases page text)
         .config("spark.sql.icu.caseMappings.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -351,19 +351,19 @@ def main() -> int:
         nodes, edges = assemble_accumulated_graph(spark, args.output, cfg)
         processed = nodes.count()
         print(f"graph finalized: {processed} nodes, {edges.count()} edges")
-        # probe via Spark, not os.path: the output root may be s3:// or
-        # hdfs://, where a local isdir() is always False
-        from pyspark.errors import AnalysisException
-
+        # a host_edges table exists only where a stream ran with
+        # --link-graph; probe it with the Hadoop FileSystem, not os.path:
+        # the output root may be s3:// or hdfs://
+        from docling_graph_spark.checkpointing import _fs_path
         from docling_graph_spark.streaming.incremental import (
             finalize_link_graph,
         )
-        try:
+        fs, host_edges = _fs_path(spark,
+                                  f"{args.output.rstrip('/')}/host_edges")
+        if fs.exists(host_edges):
             le, lr = finalize_link_graph(spark, args.output)
             print(f"link graph finalized: {le.count()} host edges, "
                   f"{lr.count()} ranked hosts")
-        except AnalysisException:
-            pass  # no host_edges table: stream ran without --link-graph
         if args.report:
             from docling_graph_spark import visualizers
             visualizers.write_report(

@@ -472,6 +472,28 @@ def test_processed_counts_the_extracted_rows(spark, tmp_path):
     assert [r.processed_docs for r in run.snapshots().collect()] == [n]
 
 
+def test_graph_resolves_visibility_once(spark, pages, tmp_path,
+                                        monkeypatch):
+    """graph() reads the manifest once for its three stages, instead of
+    once per stage, and a time-travel graph() does the same."""
+    run = CheckpointedRun(spark, str(tmp_path / "ckpt_vis_once"), CFG)
+    assert run.run(_slice(pages, 0, 50))
+    calls = []
+    runs = CheckpointedRun._runs
+
+    def counting(self):
+        calls.append(1)
+        return runs(self)
+
+    monkeypatch.setattr(CheckpointedRun, "_runs", counting)
+    for as_of in (None, 1):
+        calls.clear()
+        nodes, edges = run.graph(as_of)
+        assert len(calls) == 1
+    assert nodes.where(F.col("label") == "WebDocument").count() \
+        == run.extracted().count()
+
+
 def _graph_rows(df):
     """Every row of a node or edge relation, ``properties`` included, as
     a sorted list of hashable tuples."""

@@ -369,3 +369,86 @@ def test_probe_contract_each_layer_called_once(spark, sf_smoke_dir,
     assert CheckpointedRun(spark, str(tmp_path / "ckpt"), cfg).run(pages) > 0
     assert calls["pending_inputs"] == 1
     assert calls == {a: 1 for a in layer_attrs | {"pending_inputs"}}
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("chunker", ["fallback", "hybrid"])
+def test_doc_mentions_equal_jvm_oracle_over_chunks(spark, sf_correct_dir,
+                                                   chunker):
+    """The UDF-side mention aggregate equals the JVM regex expressions
+    (tests/test_mentions.py) applied to the pipeline's own chunk rows,
+    for both chunkers."""
+    from test_mentions import jvm_doc_mentions
+
+    cfg = PipelineConfig(id_mode="xxhash64", chunker=chunker)
+    res = run_on_testdata(spark, sf_correct_dir, cfg)
+    try:
+        want = jvm_doc_mentions(res.chunks)
+        got = res.doc_mentions
+        assert got.columns == want.columns
+        assert _rows(got) == _rows(want)
+        assert got.count() > 0
+    finally:
+        res.unpersist()
+
+
+def test_doc_mentions_schema_and_plan(result):
+    """doc_mentions is a projection of the one persisted relation: no
+    Exchange beyond those under the UDF input, one persist root, and the
+    declared schemas.DOC_MENTIONS names and types."""
+    from docling_graph_spark import schemas
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert result._persist_roots() == (result.combined,)
+    assert plan(result.doc_mentions).count("Exchange") \
+        == plan(result.combined).count("Exchange")
+    assert [(f.name, f.dataType) for f in result.doc_mentions.schema] \
+        == [(f.name, f.dataType) for f in schemas.DOC_MENTIONS]
+
+
+@pytest.mark.parametrize("chunker", ["fallback", "hybrid"])
+def test_email_and_year_terms(spark, chunker):
+    """Hand-built pages with emails and years yield ``email`` and
+    ``year`` Term nodes with hand-counted n_docs and total_mentions."""
+    import datetime
+
+    from docling_graph_spark import schemas
+    from docling_graph_spark.pipeline import run_pipeline
+
+    filler = "plain words about nothing much " * 8
+    texts = {
+        "a": f"Write to Alice.Smith@Example.com or bob@test.org about the "
+             f"1999 report and 2020. {filler} alice.smith@example.com has "
+             f"the 1999 draft.",
+        "b": f"Founded in 1999, reach bob@test.org any time. {filler}",
+        "c": f"No mentions of that kind here: 19999 and 2100. {filler}",
+    }
+    ts = datetime.datetime(2024, 1, 1)
+    pages = spark.createDataFrame(
+        [(f"https://m.example.com/{k}", ts,
+          f"<html><body><article><p>{t}</p></article></body></html>"
+          .encode(), None, "en") for k, t in texts.items()],
+        schema=schemas.WEB_PAGES)
+    cfg = PipelineConfig(id_mode="xxhash64", chunker=chunker)
+    res = run_pipeline(pages, cfg)
+    try:
+        got = {(r.properties["term"], r.properties["kind"]):
+               (int(r.properties["n_docs"]),
+                int(r.properties["total_mentions"]))
+               for r in res.nodes.where(
+                   (F.col("label") == "Term")
+                   & F.col("properties")["kind"].isin("email", "year"))
+               .collect()}
+    finally:
+        res.unpersist()
+    assert got == {
+        ("alice.smith@example.com", "email"): (1, 2),
+        ("bob@test.org", "email"): (2, 2),
+        ("1999", "year"): (2, 3),
+        ("2020", "year"): (1, 1),
+    }

@@ -218,3 +218,43 @@ def test_config_file_enum_validation(tmp_path, capsys):
         p.write_text(yaml.safe_dump(cfg))
         with pytest.raises(SystemExit):
             _run(["--config", str(p)], capsys)
+
+
+def test_graph_mode_finalizes_link_graph_only_with_host_edges(
+        spark, sf_smoke_dir, tmp_path, capsys, monkeypatch):
+    """Graph mode finalizes the host link graph only where a stream ran
+    with --link-graph (a ``host_edges`` table exists): over a resume root
+    it never calls finalize_link_graph, so nothing reads a missing
+    table."""
+    from pyspark.sql import functions as F
+
+    from docling_graph_spark.sources.web_pages import synthesize_web_pages
+    from docling_graph_spark.streaming import incremental
+
+    calls = []
+    finalize = incremental.finalize_link_graph
+
+    def counting(*a, **kw):
+        calls.append(a[1])
+        return finalize(*a, **kw)
+
+    monkeypatch.setattr(incremental, "finalize_link_graph", counting)
+    inbox = str(tmp_path / "inbox")
+    synthesize_web_pages(spark, sf_smoke_dir).filter(
+        F.crc32("url") % 25 == 0).write.parquet(inbox)
+
+    resume_root = str(tmp_path / "resume_root")
+    rc, _ = _run(["--mode", "resume", "--input", inbox,
+                  "--output", resume_root], capsys)
+    assert rc == 0
+    rc, out = _run(["--mode", "graph", "--output", resume_root], capsys)
+    assert rc == 0 and out["processed_docs"] > 0
+    assert calls == []
+
+    stream_root = str(tmp_path / "stream_root")
+    rc, _ = _run(["--mode", "stream", "--input", inbox, "--output",
+                  stream_root, "--link-graph"], capsys)
+    assert rc == 0
+    rc, _ = _run(["--mode", "graph", "--output", stream_root], capsys)
+    assert rc == 0 and calls == [stream_root]
+    assert os.path.isdir(f"{stream_root}/host_ranks")
