@@ -255,11 +255,9 @@ def banded_embeddings(emb: DataFrame, n_planes: int = 16, n_bands: int = 4,
     (id, vec, _n norm, band_key) with one row per (vector, band).
 
     This is the relation a 100 TB deployment writes ONCE, bucketed by
-    ``band_key`` (operators/bucketing.write_bucketed): candidate
+    ``band_key`` (`DataFrameWriter.bucketBy` + `saveAsTable`): candidate
     generation then becomes a co-located join — zero Exchange on the
-    corpus side for any probe relation bucketed the same way, partition
-    pruning for single-bucket lookups (plan-asserted in
-    tests/test_bucketing.py)."""
+    corpus side for any probe relation bucketed the same way."""
     from .partitioning import ensure_min_partitions
 
     rows_per_band = n_planes // n_bands

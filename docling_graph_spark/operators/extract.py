@@ -4,8 +4,9 @@ One Arrow-batched pandas UDF pass over the binary payload column:
 per row it sniffs the payload kind (magic bytes — the Spark analogue of the
 reference's input-type detection, `/root/reference/docling_graph/core/input/
 types.py:39-105`) and routes to the HTML boilerplate stripper or the PDF
-parser.  Validation failures become an ``error`` value, never dropped rows
-(the reference's zero-data-loss contract).
+parser, then plans the document's chunks and aggregates its mentions
+(`make_extract_chunk_udf`).  Validation failures become an ``error``
+value, never dropped rows (the reference's zero-data-loss contract).
 
 Everything upstream/downstream of the UDF stays JVM-side; the UDF touches
 only the columns it needs (html), so Catalyst prunes the rest at scan time
@@ -13,8 +14,6 @@ when the caller selects accordingly.
 """
 
 from __future__ import annotations
-
-from typing import Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -28,7 +27,8 @@ from ..kernels.pdf_stub import extract_pdf_text, is_pdf
 from ..kernels.rtf_parse import (extract_rtf_text,
                                  extract_subtitle_text, is_rtf,
                                  is_srt, is_webvtt)
-from ..schemas import CHUNK_SPAN_LITE, EXTRACTION_RESULT, MENTION
+from ..schemas import (CHUNK_SPAN_LITE, EXTRACTION_RESULT,
+                       HYBRID_CHUNK_LITE, MENTION)
 
 
 def _sniff_is_mp4_video(b: bytes) -> bool:
@@ -40,9 +40,8 @@ def _sniff_is_mp4_video(b: bytes) -> bool:
 
 
 def _route_payload(payload, transport):
-    """Shared magic-byte routing for both extraction UDFs: returns
-    (text, spans, bytes_stripped, kind, error).  One function so the
-    chunked and unchunked paths can never drift apart."""
+    """Magic-byte routing of one payload to its text extractor: returns
+    (text, spans, bytes_stripped, kind, error)."""
     text, spans, nbytes, kind, err = "", [], 0, "empty", None
     try:
         if payload is None or len(payload) == 0:
@@ -105,62 +104,90 @@ def _route_payload(payload, transport):
     return text, spans, nbytes, kind, err
 
 
-@pandas_udf(EXTRACTION_RESULT)
-def extract_payload(html: pd.Series, ctype: pd.Series) -> pd.DataFrame:
-    texts, spans_col, stripped, kinds, errors = [], [], [], [], []
-    for payload, transport in zip(html, ctype):
-        text, spans, nbytes, kind, err = _route_payload(payload,
-                                                        transport)
-        texts.append(text)
-        spans_col.append(spans)
-        stripped.append(nbytes)
-        kinds.append(kind)
-        errors.append(err)
-    return pd.DataFrame({
-        "text": texts,
-        "spans": spans_col,
-        "bytes_stripped": stripped,
-        "kind": kinds,
-        "error": errors,
-    })
+def _byte_offsets(text: str, spans):
+    """UTF-8 byte offsets of ``(start, end)`` code-point spans of ``text``,
+    in ascending, non-overlapping order (both planners emit them so).
+    Equal to the code-point offsets on ASCII text (one C-level isascii
+    scan); otherwise one incremental encode pass over the document."""
+    if text.isascii():
+        return spans
+    out = []
+    pos_c = pos_b = 0
+    for start, end in spans:
+        pos_b += len(text[pos_c:start].encode("utf-8"))
+        b0 = pos_b
+        pos_b += len(text[start:end].encode("utf-8"))
+        out.append((b0, pos_b))
+        pos_c = end
+    return out
 
 
 def make_extract_chunk_udf(max_tokens: int, context_limit: int,
-                           merge_threshold: float, tokenizer_name=None):
-    """Fused extract+chunk+mention UDF: one Python pass, one Arrow round
-    trip.
+                           merge_threshold: float, tokenizer_name=None,
+                           chunker: str = "fallback"):
+    """The extraction UDF: per document, route the payload, plan its
+    chunks and aggregate its mentions, in one Python pass and one Arrow
+    round trip.
 
-    Extraction and chunking are both per-document pure functions, so running
-    them as two pandas-UDF stages pays the JVM↔Python plumbing twice AND
-    ships the full extracted text across the Arrow boundary twice (out of
-    the extract stage, back into the chunk stage) — measured ~40-80 µs/doc
-    of pure overhead per stage against a ~4 µs chunk kernel.  The fused UDF
-    emits the extraction result plus the chunk array in a single pass;
-    `extracted` and `chunks` remain separate relations downstream as cheap
-    JVM projections of the one materialized combined relation.
+    Extraction, chunking and mention counting are per-document pure
+    functions, so one pandas UDF runs them all where the document row
+    lives; `extracted`, `chunks` and `doc_mentions` are JVM projections of
+    its one output relation.  ``chunker`` selects the planner:
+
+    * ``"fallback"`` — the reference raw-text chunker plus W1/W2 batching
+      (`chunk.batched_spans`); each chunk carries its ``batch_id``;
+    * ``"hybrid"`` — the heading-aware HybridChunker analogue
+      (`kernels.hybrid_chunker.hybrid_chunk`) over the extractor's block
+      spans, with ``merge_peers``; each chunk carries its
+      ``heading_path``.
+
+    Chunks ship offsets, not text (schemas.CHUNK_SPAN_LITE /
+    HYBRID_CHUNK_LITE): both planners emit chunk strings that are exact
+    slices ``text[start:end]``, which `chunk.chunks_from_combined` rebuilds
+    JVM-side from the UTF-8 byte offsets ``b_start``/``b_end``, so the
+    chunk text never crosses the Arrow boundary a second time.
 
     The ``mentions`` array is the document's mention aggregate
-    (kernels/mentions.py) over the chunk texts, computed here because this
-    is where the text already is: ``doc_mentions`` is then a projection of
-    the same relation, with no regex scan over rebuilt chunk text and no
-    shuffle.
+    (kernels/mentions.py) over the chunk texts: ``doc_mentions`` is a
+    projection of the same relation, with no regex scan over rebuilt
+    chunk text and no shuffle.
 
-    Chunking applies exactly where the two-stage pipeline would have: rows
-    passing the P1 filter (no error, non-whitespace text — PDF errors always
-    carry empty text, kernels/pdf_stub.py:40-59, so the in-UDF gate is
-    equivalent).  Byte-identical outputs to the two-stage path by
-    construction (same kernels, same inputs); enforced by the oracle gate.
-    """
+    Only documents passing the P1 filter are chunked: no error, and a
+    character outside ``str.isspace`` — the rule `extractable` states
+    JVM-side."""
     from ..kernels import batching as k_batch
+    from ..kernels import hybrid_chunker as k_hybrid
     from ..kernels.mentions import doc_mention_rows
     from .chunk import batched_spans
 
+    available = k_batch.available_tokens(context_limit)
+
+    # planners: one document -> [(chunk_id, start, end, text, token_est,
+    # the chunker's own field)]
+    def plan_fallback(text, spans, count):
+        return [(s.chunk_id, s.start, s.end, s.text, cost, batch_id)
+                for s, cost, batch_id in batched_spans(
+                    text, max_tokens, available, merge_threshold, count)]
+
+    def plan_hybrid(text, spans, count):
+        blocks = [k_hybrid.Block(b["start"], b["end"], b["tag"])
+                  for b in spans]
+        return [(c.chunk_id, c.start, c.end, c.text, c.token_est,
+                 list(c.heading_path))
+                for c in k_hybrid.hybrid_chunk(text, blocks, max_tokens,
+                                               token_counter=count)]
+
+    if chunker == "fallback":
+        plan, chunk_type, own = plan_fallback, CHUNK_SPAN_LITE, "batch_id"
+    elif chunker == "hybrid":
+        plan, chunk_type, own = plan_hybrid, HYBRID_CHUNK_LITE, "heading_path"
+    else:
+        raise ValueError(f"unknown chunker {chunker!r}")
     schema = T.StructType(
         list(EXTRACTION_RESULT.fields)
-        + [T.StructField("chunks", T.ArrayType(CHUNK_SPAN_LITE), True),
+        + [T.StructField("chunks", T.ArrayType(chunk_type), True),
            T.StructField("mentions", T.ArrayType(MENTION), True)]
     )
-    available = k_batch.available_tokens(context_limit)
 
     @pandas_udf(schema)
     def extract_and_chunk_payload(html: pd.Series,
@@ -174,43 +201,20 @@ def make_extract_chunk_udf(max_tokens: int, context_limit: int,
             text, spans, nbytes, kind, err = _route_payload(payload,
                                                             transport)
             chunks, mentions = [], []
+            # P1: str.strip removes exactly the str.isspace characters
             if err is None and text.strip():
-                planned = batched_spans(text, max_tokens, available,
-                                        merge_threshold, count)
-                # no "text" field: chunk strings are exact slices
-                # text[start:end] (schemas.CHUNK_SPAN_LITE) — the JVM
-                # rebuilds them by BYTE-slicing the binary form, so the
-                # full chunk text never crosses the Arrow boundary a
-                # second time.  Byte offsets: equal to char offsets on
-                # ASCII text (one C-level isascii scan); otherwise one
-                # incremental encode pass over the document.
-                if text.isascii():
-                    offs = [(s.start, s.end) for s, _, _ in planned]
-                else:
-                    offs = []
-                    pos_c = pos_b = 0
-                    for s, _, _ in planned:
-                        pos_b += len(text[pos_c:s.start].encode("utf-8"))
-                        b0 = pos_b
-                        pos_b += len(text[s.start:s.end].encode("utf-8"))
-                        offs.append((b0, pos_b))
-                        pos_c = s.end
+                planned = plan(text, spans, count)
+                offs = _byte_offsets(text, [(p[1], p[2]) for p in planned])
                 chunks = [
-                    {
-                        "chunk_id": s.chunk_id,
-                        "start": s.start,
-                        "end": s.end,
-                        "b_start": b0,
-                        "b_end": b1,
-                        "token_est": cost,
-                        "batch_id": batch_id,
-                    }
-                    for (s, cost, batch_id), (b0, b1) in zip(planned, offs)
+                    {"chunk_id": cid, "start": start, "end": end,
+                     "b_start": b0, "b_end": b1, "token_est": tokens,
+                     own: value}
+                    for (cid, start, end, _, tokens, value), (b0, b1)
+                    in zip(planned, offs)
                 ]
                 # (term, kind, n_mentions, first_chunk_id) tuples: Arrow
                 # takes them as schemas.MENTION structs as they are
-                mentions = doc_mention_rows(
-                    (s.chunk_id, s.text) for s, _, _ in planned)
+                mentions = doc_mention_rows((p[0], p[3]) for p in planned)
             texts.append(text)
             spans_col.append(spans)
             stripped.append(nbytes)
@@ -253,12 +257,14 @@ def _lang_col():
 
 def extract_and_chunk(web_pages: DataFrame, max_tokens: int,
                       context_limit: int, merge_threshold: float,
-                      tokenizer_name=None) -> DataFrame:
+                      tokenizer_name=None,
+                      chunker: str = "fallback") -> DataFrame:
     """web_pages -> combined extracted+chunks+mentions relation
     (url, warc_ts, lang, text, spans, bytes_stripped, kind, error, chunks,
-    mentions)."""
+    mentions); ``chunker`` selects the chunk planner
+    (`make_extract_chunk_udf`)."""
     udf = make_extract_chunk_udf(max_tokens, context_limit, merge_threshold,
-                                 tokenizer_name)
+                                 tokenizer_name, chunker)
     out = web_pages.withColumn("x", udf(F.col("html"), _transport_col(web_pages)))
     return out.select(
         "url", "warc_ts", _lang_col(),
@@ -269,21 +275,6 @@ def extract_and_chunk(web_pages: DataFrame, max_tokens: int,
         F.col("x.error").alias("error"),
         F.col("x.chunks").alias("chunks"),
         F.col("x.mentions").alias("mentions"),
-    )
-
-
-def extract_main_text(web_pages: DataFrame) -> DataFrame:
-    """web_pages -> extracted docs
-    (url, warc_ts, lang, text, spans, bytes_stripped, kind, error)."""
-    out = web_pages.withColumn(
-        "x", extract_payload(F.col("html"), _transport_col(web_pages)))
-    return out.select(
-        "url", "warc_ts", _lang_col(),
-        F.col("x.text").alias("text"),
-        F.col("x.spans").alias("spans"),
-        F.col("x.bytes_stripped").alias("bytes_stripped"),
-        F.col("x.kind").alias("kind"),
-        F.col("x.error").alias("error"),
     )
 
 
@@ -340,11 +331,19 @@ def make_json_response_parser_udf(aggressive: bool = True):
     return parse_batch
 
 
+# Python's str.isspace set (29 code points) as a Java regex class: a text
+# is extractable when it holds a character outside it, the rule the
+# extraction UDF applies in-process with str.strip
+_NOT_SPACE = (r"[^\t\n\x0B\f\r\x1C-\x20\x85\xA0\u1680\u2000-\u200A"
+              r"\u2028\u2029\u202F\u205F\u3000]")
+
+
 def extractable():
-    """The P1 predicate: no error, and text that is not empty once its
-    spaces are trimmed.  The one definition shared by `filter_extractable`,
-    the chunk rebuild and the run's ``docs_extracted`` counter."""
-    return F.col("error").isNull() & (F.length(F.trim(F.col("text"))) > 0)
+    """The P1 predicate: no error, and text that is not empty or
+    whitespace-only, whitespace being Python's ``str.isspace``.  The one
+    JVM-side definition shared by `filter_extractable`, the chunk rebuild
+    and the run's ``docs_extracted`` counter."""
+    return F.col("error").isNull() & F.col("text").rlike(_NOT_SPACE)
 
 
 def filter_extractable(extracted: DataFrame) -> DataFrame:

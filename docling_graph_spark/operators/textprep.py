@@ -39,10 +39,8 @@ PII_KINDS = (
 # es-only here).  Pure JVM expressions, patterns in the Java-regex ∩ RE2
 # portable subset — reused by the langid_votes oracle query (mirror any
 # change in queries.SQL_LANGID_VOTES) and by the crawl ingestion path,
-# where WARC records carry no language column.  A richer Python-kernel
-# variant (per-word set membership) lives in kernels/textstats.py for the
-# quality-signal queries; THIS detector is the one that writes persisted
-# lang values.
+# where WARC records carry no language column.  THIS detector is the one
+# that writes persisted lang values.
 LANG_STOPWORDS = (
     ("en", "the|and|of|to|in|is"),
     ("fr", "le|les|et|est|dans|une"),

@@ -41,9 +41,10 @@ class PipelineConfig:
     # (reference document_chunker.py:115-172), computed once driver-side.
     schema_size: int = 0
     merge_threshold: float = op_chunk.DEFAULT_MERGE_THRESHOLD
-    # "fallback": reference raw-text chunker + W1/W2 batching (byte-parity
-    # path); "hybrid": heading-aware HybridChunker analogue over the
-    # extractor's block spans (heading path carried into chunk-node props)
+    # the chunk planner inside the extraction UDF: "fallback" = reference
+    # raw-text chunker + W1/W2 batching (byte-parity path, chunks carry
+    # batch_id); "hybrid" = heading-aware HybridChunker analogue over the
+    # extractor's block spans (chunks carry heading_path and context)
     chunker: str = "fallback"
     # optional real tokenizer for the chunk/batch token budgets (reference
     # `document_chunker.py:60-95`): an HF tokenizer name, used when the
@@ -194,21 +195,13 @@ def run_pipeline(web_pages: DataFrame,
             .alias("docs_extracted"),
         )
 
-    if cfg.chunker == "hybrid":
-        # the hybrid chunker's UDF runs over the extraction UDF's output,
-        # chunking the rows `filter_extractable` keeps
-        combined = op_chunk.with_hybrid_chunks(
-            op_extract.extract_main_text(web_pages), max_tokens,
-            tokenizer_name=cfg.tokenizer_name, gate=op_extract.extractable())
-        chunks = op_chunk.hybrid_chunks(combined)
-    else:
-        # fallback chunker: one fused Python pass (extract + chunk +
-        # mentions)
-        combined = op_extract.extract_and_chunk(
-            web_pages, max_tokens, cfg.context_limit, cfg.merge_threshold,
-            tokenizer_name=cfg.tokenizer_name,
-        )
-        chunks = op_chunk.chunks_from_combined(combined)
+    # one Python pass per document: extract, chunk (the planner
+    # ``cfg.chunker`` selects) and aggregate mentions
+    combined = op_extract.extract_and_chunk(
+        web_pages, max_tokens, cfg.context_limit, cfg.merge_threshold,
+        tokenizer_name=cfg.tokenizer_name, chunker=cfg.chunker,
+    )
+    chunks = op_chunk.chunks_from_combined(combined)
     # every other relation is projected from `combined` JVM-side
     extracted_all = _observe(combined.drop("chunks", "mentions"))
     extracted = op_extract.filter_extractable(extracted_all)

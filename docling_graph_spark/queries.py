@@ -339,17 +339,33 @@ FROM chunks ORDER BY url, chunk_id
 """
 
 
+def _extracted(pages: DataFrame,
+               context_limit: Optional[int] = None) -> DataFrame:
+    """``pages`` (url, warc_ts, html, lang) through the engine's one
+    extraction UDF (operators/extract.extract_and_chunk) with the catalog's
+    chunk size and the fallback chunker."""
+    from .operators import chunk as op_chunk
+    from .operators.extract import extract_and_chunk
+
+    return extract_and_chunk(
+        pages, MAX_TOKENS, context_limit or op_chunk.DEFAULT_CONTEXT_LIMIT,
+        op_chunk.DEFAULT_MERGE_THRESHOLD)
+
+
+def _batch_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus' chunk rows packed with the small BATCH_CONTEXT (chunk
+    boundaries identical to the pipeline's)."""
+    from .operators import chunk as op_chunk
+    from .sources.web_pages import synthesize_web_pages
+
+    return op_chunk.chunks_from_combined(
+        _extracted(synthesize_web_pages(spark, sf_dir), BATCH_CONTEXT))
+
+
 def q_batch_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1+W2 greedy pack + undersized merge with a 1200-token context:
     available=200, per-chunk cost<=90 -> exactly 2 chunks per batch."""
-    from .operators import chunk as op_chunk
-
-    res = _pipeline(spark, sf_dir)
-    # re-chunk with the small context (chunk boundaries identical)
-    chunks = op_chunk.chunk_documents(
-        res.extracted, MAX_TOKENS, BATCH_CONTEXT, 0.85
-    )
-    per_doc = chunks.groupBy("url").agg(
+    per_doc = _batch_chunks(spark, sf_dir).groupBy("url").agg(
         (F.max("batch_id") + 1).cast("long").alias("n_batches")
     )
     return per_doc.groupBy("n_batches").agg(
@@ -373,11 +389,7 @@ def q_batch_combined_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch_id = chunk_id // 2."""
     from .operators import chunk as op_chunk
 
-    res = _pipeline(spark, sf_dir)
-    chunks = op_chunk.chunk_documents(
-        res.extracted, MAX_TOKENS, BATCH_CONTEXT, 0.85
-    )
-    batches = op_chunk.batch_summaries(chunks)
+    batches = op_chunk.batch_summaries(_batch_chunks(spark, sf_dir))
     return batches.select(
         "url",
         F.col("batch_id").cast("long").alias("batch_id"),
@@ -951,82 +963,63 @@ def q_hybrid_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernels/wordpiece.full_vocab_lines — replayed in SQL by an unrolled
     greedy longest-prefix WordPiece over the lexicon-reachable subset
     of that vocab)."""
-    from .operators import chunk as op_chunk
+    from .kernels.hybrid_chunker import Block, hybrid_chunk
 
-    schema = T.StructType([
-        T.StructField("text", T.StringType()),
-        T.StructField("spans", T.ArrayType(T.StructType([
-            T.StructField("start", T.LongType()),
-            T.StructField("end", T.LongType()),
-            T.StructField("tag", T.StringType()),
-        ]))),
-    ])
+    def sectioned(paras):
+        """Paragraphs, 3 per h2 section, joined by blank lines ->
+        (text, block spans)."""
+        parts, blocks, pos = [], [], 0
+        for s in range(0, len(paras), 3):
+            for tag, t in [("h2", f"Section {s // 3}")] + [
+                ("p", p) for p in paras[s:s + 3]
+            ]:
+                if parts:
+                    pos += 2  # "\n\n"
+                blocks.append(Block(pos, pos + len(t), tag))
+                parts.append(t)
+                pos += len(t)
+        return "\n\n".join(parts), blocks
 
-    @pandas_udf(schema)
-    def sectionize(texts: pd.Series) -> pd.DataFrame:
-        out_t, out_s = [], []
-        for text in texts:
-            paras = [text[i:i + 120] for i in range(0, len(text), 120)]
-            parts, blocks, pos = [], [], 0
-            for s in range(0, len(paras), 3):
-                for tag, t in [("h2", f"Section {s // 3}")] + [
-                    ("p", p) for p in paras[s:s + 3]
-                ]:
-                    if parts:
-                        pos += 2  # "\n\n"
-                    blocks.append({"start": pos, "end": pos + len(t),
-                                   "tag": tag})
-                    parts.append(t)
-                    pos += len(t)
-            out_t.append("\n\n".join(parts))
-            out_s.append(blocks)
-        return pd.DataFrame({"text": out_t, "spans": out_s})
+    def char_paras(text):
+        return [text[i:i + 120] for i in range(0, len(text), 120)]
 
-    @pandas_udf(schema)
-    def sectionize_words(texts: pd.Series) -> pd.DataFrame:
+    def word_paras(text):
         # WORD-ALIGNED sectioning for the vocab-counter section: 10-word
         # paragraphs (so WordPiece never sees a mid-word cut and counts
-        # stay additive over the blank-line merges), 3 per h2 section
-        out_t, out_s = [], []
-        for text in texts:
-            words = text.split(" ")
-            paras = [" ".join(words[i:i + 10])
-                     for i in range(0, len(words), 10)]
-            parts, blocks, pos = [], [], 0
-            for s in range(0, len(paras), 3):
-                for tag, t in [("h2", f"Section {s // 3}")] + [
-                    ("p", p) for p in paras[s:s + 3]
-                ]:
-                    if parts:
-                        pos += 2
-                    blocks.append({"start": pos, "end": pos + len(t),
-                                   "tag": tag})
-                    parts.append(t)
-                    pos += len(t)
-            out_t.append("\n\n".join(parts))
-            out_s.append(blocks)
-        return pd.DataFrame({"text": out_t, "spans": out_s})
+        # stay additive over the blank-line merges)
+        words = text.split(" ")
+        return [" ".join(words[i:i + 10]) for i in range(0, len(words), 10)]
+
+    def sectionize(paras, max_tokens, tokenizer):
+        """Per document: section its paragraphs and hybrid-chunk them
+        (merge_peers) -> the document's chunk count."""
+        @pandas_udf("long")
+        def n_chunks(texts: pd.Series) -> pd.Series:
+            from docling_graph_spark.kernels.tokenization import (
+                get_token_counter)
+
+            count = get_token_counter(tokenizer)
+            return pd.Series([
+                len(hybrid_chunk(*sectioned(paras(t)), max_tokens,
+                                 token_counter=count))
+                for t in texts])
+
+        return n_chunks
 
     docs = _read(spark, sf_dir, "documents")
 
-    def hist(sectionize_fn, max_tokens, tokenizer, label):
-        sectioned = docs.withColumn("x", sectionize_fn(F.col("text"))) \
-            .select(F.col("doc_id").cast("string").alias("url"),
-                    F.col("lang"),
-                    F.col("x.text").alias("text"),
-                    F.col("x.spans").alias("spans"))
-        chunks = op_chunk.hybrid_chunk_documents(
-            sectioned, max_tokens=max_tokens, merge_peers=True,
-            tokenizer_name=tokenizer)
-        return (chunks.groupBy("url").agg(F.count("*").alias("n_chunks"))
-                .groupBy("n_chunks").agg(F.count("*").alias("n_docs"))
+    def hist(paras, max_tokens, tokenizer, label):
+        per_doc = docs.select(
+            sectionize(paras, max_tokens, tokenizer)(F.col("text"))
+            .alias("n_chunks")).where(F.col("n_chunks") > 0)
+        return (per_doc.groupBy("n_chunks").agg(F.count("*").alias("n_docs"))
                 .select(F.lit(label).alias("counter"), "n_chunks",
                         "n_docs"))
 
     from .kernels.wordpiece import full_vocab_lines
 
-    return (hist(sectionize, 100, None, "heuristic")
-            .unionByName(hist(sectionize_words, 30,
+    return (hist(char_paras, 100, None, "heuristic")
+            .unionByName(hist(word_paras, 30,
                               ("vocab", full_vocab_lines()), "vocab"))
             .orderBy("counter", "n_chunks"))
 
@@ -1180,8 +1173,6 @@ def q_pdf_real_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     text.  A parser regression drops n_roundtrip / shifts sum_chars and
     hash-fails against DuckDB.
     """
-    from .operators.extract import extract_main_text
-
     docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") % 17 == 3)
     url = F.concat(F.lit("pdf://doc/"), F.col("doc_id").cast("string"))
     # PDF literal-string escapes (corpus is ASCII; escape anyway so the
@@ -1207,7 +1198,7 @@ def q_pdf_real_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("").alias("text"),
         F.col("lang").alias("lang"),
     )
-    extracted = extract_main_text(pages).select(
+    extracted = _extracted(pages).select(
         "url", "lang", F.col("text").alias("extracted"))
     originals = docs.select(url.alias("url"), F.col("text").alias("orig"))
     joined = extracted.join(originals, "url")
@@ -1251,7 +1242,7 @@ def q_pdf_real_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
         "html", F.lit("").alias("text"), "lang",
     )
-    extracted2 = extract_main_text(pages2).select(
+    extracted2 = _extracted(pages2).select(
         "url", "lang", F.col("text").alias("extracted"))
     originals2 = docs2.select(
         F.concat(F.lit("pdf://cid/"), F.col("doc_id").cast("string"))
@@ -1294,7 +1285,7 @@ def q_pdf_real_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
         "html", F.lit("").alias("text"), "lang",
     )
-    extracted3 = extract_main_text(pages3).select(
+    extracted3 = _extracted(pages3).select(
         "url", "lang", F.col("text").alias("extracted"))
     originals3 = docs3.select(
         F.concat(F.lit("pdf://rc4/"), F.col("doc_id").cast("string"))
@@ -6593,26 +6584,24 @@ def q_media_pipeline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 blobs.append(blob)
             yield pd.DataFrame({"url": urls, "html": blobs})
 
-    from .operators.extract import extract_payload as _xp
-
-    docf = (
+    docf = _extracted(
         _read(spark, sf_dir, "documents")
         .filter((F.col("doc_id") >= _PNG_DOCS + 192)
                 & (F.col("doc_id") < _PNG_DOCS + 216))
         .select("doc_id")
         .mapInPandas(build_docfiles, "url string, html binary")
-        .withColumn("x", _xp(F.col("html"),
-                             F.lit(None).cast("string")))
+        .select("url", F.lit(None).cast("timestamp").alias("warc_ts"),
+                "html", F.lit(None).cast("string").alias("lang"))
     )
     doc_agg = docf.agg(
         F.count("*").alias("n_rows"),
-        F.sum(F.col("x.error").isNull().cast("long")).alias("n_ok"),
-        F.sum((F.col("x.kind") == "docx").cast("long")).alias("n_docx"),
-        F.sum((F.col("x.kind") == "odt").cast("long")).alias("n_odt"),
-        F.sum((F.col("x.kind") == "rtf").cast("long")).alias("n_rtf"),
-        F.sum((F.col("x.kind") == "subtitle").cast("long"))
+        F.sum(F.col("error").isNull().cast("long")).alias("n_ok"),
+        F.sum((F.col("kind") == "docx").cast("long")).alias("n_docx"),
+        F.sum((F.col("kind") == "odt").cast("long")).alias("n_odt"),
+        F.sum((F.col("kind") == "rtf").cast("long")).alias("n_rtf"),
+        F.sum((F.col("kind") == "subtitle").cast("long"))
         .alias("n_subtitle"),
-        F.sum(F.length("x.text")).alias("sum_text_len"),
+        F.sum(F.length("text")).alias("sum_text_len"),
     )
     doc_rows = _unpivot_single_row(doc_agg, "doc_extract")
 

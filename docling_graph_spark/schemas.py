@@ -34,17 +34,8 @@ EXTRACTION_RESULT = T.StructType([
     T.StructField("error", T.StringType(), True),
 ])
 
-CHUNK_SPAN = T.StructType([
-    T.StructField("chunk_id", T.IntegerType(), False),
-    T.StructField("start", T.LongType(), False),
-    T.StructField("end", T.LongType(), False),
-    T.StructField("text", T.StringType(), False),
-    T.StructField("token_est", T.IntegerType(), False),
-    T.StructField("batch_id", T.IntegerType(), False),
-])
-
-# Fused extract+chunk UDF output: chunk text is NOT shipped across the
-# Arrow boundary — every chunk string is an exact code-point slice
+# A fallback chunk in the extraction UDF output: chunk text is NOT shipped
+# across the Arrow boundary — every chunk string is an exact code-point slice
 # text[start:end] of the document text by construction
 # (kernels/chunking.chunk_spans emits stripped-region offsets; the
 # single-chunk short-circuit is text[0:len]), so the JVM reconstructs it,
@@ -64,8 +55,22 @@ CHUNK_SPAN_LITE = T.StructType([
     T.StructField("batch_id", T.IntegerType(), False),
 ])
 
+# The hybrid chunker's chunk in the same UDF output: the same offsets, and
+# the heading path in place of the batch id (hybrid chunk strings are
+# text[start:end] too, kernels/hybrid_chunker.py).  Nullable fields, as
+# the hybrid `chunks` stage columns have always been.
+HYBRID_CHUNK_LITE = T.StructType([
+    T.StructField("chunk_id", T.IntegerType()),
+    T.StructField("start", T.LongType()),
+    T.StructField("end", T.LongType()),
+    T.StructField("b_start", T.LongType()),
+    T.StructField("b_end", T.LongType()),
+    T.StructField("token_est", T.IntegerType()),
+    T.StructField("heading_path", T.ArrayType(T.StringType())),
+])
+
 # One document's mention aggregate (kernels/mentions.doc_mention_rows),
-# emitted by the chunking UDF next to the chunk array
+# emitted by the extraction UDF next to the chunk array
 MENTION = T.StructType([
     T.StructField("term", T.StringType(), False),
     T.StructField("kind", T.StringType(), False),   # term | email | year

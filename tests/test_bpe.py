@@ -96,12 +96,12 @@ def test_spark_train_and_count(spark, sf_smoke_dir):
 def test_bpe_counter_bounds_chunking(spark, sf_smoke_dir):
     """The ('bpe', merges) spec travels into the chunker UDF and bounds
     every chunk by the TRAINED count, not the length heuristic."""
-    from pyspark.sql import functions as F
-
     from docling_graph_spark.kernels.bpe import BpeEncoder
     from docling_graph_spark.kernels.tokenization import get_token_counter
-    from docling_graph_spark.operators.chunk import chunk_documents
+    from docling_graph_spark.operators.chunk import chunks_from_combined
+    from docling_graph_spark.operators.extract import extract_and_chunk
     from docling_graph_spark.operators.subword import train_bpe_merges
+    from docling_graph_spark.sources.web_pages import synthesize_web_pages
 
     docs = spark.read.parquet(f"{sf_smoke_dir}/documents.parquet") \
         .select("doc_id", "text").limit(50)
@@ -111,11 +111,10 @@ def test_bpe_counter_bounds_chunking(spark, sf_smoke_dir):
     assert counter("the lowest bid") == \
         len(BpeEncoder(merges).encode("the lowest bid"))
 
-    extracted = docs.select(
-        F.concat(F.lit("doc:"), F.col("doc_id")).alias("url"),
-        F.lit("en").alias("lang"), "text")
-    chunks = chunk_documents(extracted, max_tokens=30,
-                             tokenizer_name=("bpe", merges)).collect()
+    # the corpus pages: their extracted text is the documents' text
+    pages = synthesize_web_pages(spark, sf_smoke_dir).limit(50)
+    chunks = chunks_from_combined(extract_and_chunk(
+        pages, 30, 8000, 0.85, tokenizer_name=("bpe", merges))).collect()
     assert chunks
     # chunk SPANS stay byte-parity-anchored (char heuristic, kernels
     # chunking F13) but every token ESTIMATE — what batching budgets on —

@@ -143,7 +143,7 @@ def test_real_pdf_through_spark_extract_udf(spark):
     Arrow UDF as HTML rows and yields kind='pdf' with the parsed text."""
     import datetime
 
-    from docling_graph_spark.operators.extract import extract_main_text
+    from docling_graph_spark.operators.extract import extract_and_chunk
     from docling_graph_spark.schemas import WEB_PAGES
 
     pdf = _make_real_pdf([SIMPLE_STREAM])
@@ -155,7 +155,8 @@ def test_real_pdf_through_spark_extract_udf(spark):
          bytearray(make_fake_pdf("fake body")), "fake body", "en"),
     ]
     df = spark.createDataFrame(rows, schema=WEB_PAGES)
-    got = {r["url"]: r for r in extract_main_text(df).collect()}
+    got = {r["url"]: r
+           for r in extract_and_chunk(df, 512, 8000, 0.85).collect()}
     real = got["https://h0.example.com/real.pdf"]
     assert real["kind"] == "pdf" and real["error"] is None
     assert real["text"] == "Hello\nWorld"

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,10 +19,10 @@ def result(spark, sf_smoke_dir):
 def test_extracted_text_byte_identical(spark, sf_smoke_dir):
     """THE invariant: extracted text per url == source text, byte for byte,
     for both HTML and fake-PDF payload rows."""
-    from docling_graph_spark.operators.extract import extract_main_text
+    from docling_graph_spark.operators.extract import extract_and_chunk
 
     pages = synthesize_web_pages(spark, sf_smoke_dir)
-    extracted = extract_main_text(pages)
+    extracted = extract_and_chunk(pages, 25, 8000, 0.85)
     mismatches = (
         extracted.join(pages.select("url", F.col("text").alias("truth")), "url")
         .filter(
@@ -320,8 +321,10 @@ _PROBED = {
 }
 
 
+@pytest.mark.parametrize("chunker", ["fallback", "hybrid"])
 def test_probe_contract_each_layer_called_once(spark, sf_smoke_dir,
-                                               tmp_path, monkeypatch):
+                                               tmp_path, monkeypatch,
+                                               chunker):
     """Every layer attribute the benchmark tracer wraps is reached exactly
     once per pipeline build; a refactor that bypasses one would silently
     empty that layer's row of the `--trace 1` report."""
@@ -359,7 +362,7 @@ def test_probe_contract_each_layer_called_once(spark, sf_smoke_dir,
 
     pages = synthesize_web_pages(spark, sf_smoke_dir).limit(20)
     cfg = PipelineConfig(max_tokens=25, id_mode="xxhash64",
-                         materialize=False)
+                         materialize=False, chunker=chunker)
     run_pipeline(pages, cfg)
     layer_attrs = {a for m, attrs in _PROBED.items()
                    if m != "checkpointing" for a in attrs}
@@ -452,3 +455,126 @@ def test_email_and_year_terms(spark, chunker):
         ("1999", "year"): (2, 3),
         ("2020", "year"): (1, 1),
     }
+
+
+@pytest.mark.parametrize("chunker", ["fallback", "hybrid"])
+def test_one_python_pass_per_document(spark, sf_smoke_dir, chunker):
+    """Both chunkers plan inside the one extraction UDF: the relation every
+    other one is projected from runs exactly one ArrowEvalPython."""
+    from docling_graph_spark.pipeline import run_pipeline
+
+    pages = synthesize_web_pages(spark, sf_smoke_dir).limit(20)
+    res = run_pipeline(pages, PipelineConfig(
+        max_tokens=25, id_mode="xxhash64", chunker=chunker,
+        materialize=False))
+    plan = res.combined._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_extractable_is_python_isspace(spark):
+    """The JVM P1 predicate agrees with the UDF's in-process rule on every
+    code point a Spark string can hold (all but the surrogates): a
+    one-character text is extractable iff the character is not
+    ``str.isspace``."""
+    from pyspark.sql.functions import pandas_udf
+
+    from docling_graph_spark.operators.extract import extractable
+
+    @pandas_udf("string")
+    def char(cp: pd.Series) -> pd.Series:
+        return cp.map(chr)
+
+    cps = spark.range(0, 0x110000).where(
+        (F.col("id") < 0xD800) | (F.col("id") > 0xDFFF))
+    rows = cps.select("id", char("id").alias("text"),
+                      F.lit(None).cast("string").alias("error"))
+    rejected = {r.id for r in rows.where(~extractable()).collect()}
+    assert rejected == {cp for cp in range(0x110000) if chr(cp).isspace()}
+    assert len(rejected) == 29
+
+
+@pytest.mark.parametrize("chunker", ["fallback", "hybrid"])
+def test_whitespace_only_text_is_not_extracted(spark, chunker):
+    """P1: a document whose text is only str.isspace characters (a tab, a
+    no-break space) is neither extracted nor chunked, for both chunkers;
+    the run counter agrees with the filtered relation."""
+    import datetime
+
+    from docling_graph_spark import schemas
+    from docling_graph_spark.kernels.pdf_stub import make_fake_pdf
+    from docling_graph_spark.pipeline import run_pipeline
+
+    ts = datetime.datetime(2024, 1, 1)
+    body = "plain words about nothing much " * 8
+    pages = spark.createDataFrame([
+        ("https://w.example.com/tab", ts, make_fake_pdf("\t"), None, "en"),
+        ("https://w.example.com/nbsp", ts, make_fake_pdf("\xa0"), None,
+         "en"),
+        ("https://w.example.com/ok", ts, make_fake_pdf(body), None, "en"),
+    ], schema=schemas.WEB_PAGES)
+    res = run_pipeline(pages, PipelineConfig(id_mode="xxhash64",
+                                             chunker=chunker))
+    try:
+        raw = {r.url: (r.text, r.error) for r in res.extracted_all.collect()}
+        assert raw["https://w.example.com/tab"] == ("\t", None)
+        assert raw["https://w.example.com/nbsp"] == ("\xa0", None)
+        ok = ["https://w.example.com/ok"]
+        assert [r.url for r in res.extracted.collect()] == ok
+        assert sorted({r.url for r in res.chunks.collect()}) == ok
+        docs = res.nodes.where(F.col("label") == "WebDocument")
+        assert [r.properties["url"] for r in docs.collect()] == ok
+        assert res.run_counters["docs_extracted"] == 1
+    finally:
+        res.unpersist()
+
+
+def test_hybrid_chunks_equal_driver_side_kernel(spark):
+    """Hybrid chunk rows built JVM-side from the UDF's offsets equal
+    `hybrid_chunk` + `contextualize` applied driver-side to the extracted
+    documents: nested h1/h2/h3 headings, non-ASCII (incl. astral) heading
+    and body text, merged peers and a split oversized block."""
+    import datetime
+
+    from docling_graph_spark import schemas
+    from docling_graph_spark.kernels import hybrid_chunker as hc
+    from docling_graph_spark.pipeline import run_pipeline
+
+    long_para = "Ünïcødé sentence with 𝔘𝔫𝔦𝔠𝔬𝔡𝔢 glyphs. " * 12
+    pages_html = {
+        "a": ("<h1>Überblick 概要</h1><p>Erste Absätze über Straßen.</p>"
+              "<h2>Détails</h2><p>Café au lait, crème brûlée.</p>"
+              "<p>Naïve façade, résumé.</p><h3>Tiefer 🌲</h3>"
+              f"<p>{long_para}</p><h2>Zweiter Abschnitt</h2>"
+              "<p>Schluss mit Ωmega.</p>"),
+        "b": ("<h1>Plain heading</h1><p>Ascii body text here.</p>"
+              "<h3>Skipped level</h3><p>Δelta paragraph 😀 end.</p>"
+              "<h1>Another top</h1><p>Last words.</p>"),
+        "c": f"<p>No headings at all, only ümlauts. {long_para}</p>",
+    }
+    ts = datetime.datetime(2024, 1, 1)
+    pages = spark.createDataFrame(
+        [(f"https://h.example.com/{k}", ts,
+          f"<html><body><article>{v}</article></body></html>".encode(),
+          None, "en") for k, v in pages_html.items()],
+        schema=schemas.WEB_PAGES)
+    max_tokens = 30
+    res = run_pipeline(pages, PipelineConfig(
+        max_tokens=max_tokens, id_mode="xxhash64", chunker="hybrid"))
+    try:
+        want = []
+        for r in res.extracted.collect():
+            blocks = [hc.Block(b.start, b.end, b.tag) for b in r.spans]
+            for c in hc.hybrid_chunk(r.text, blocks, max_tokens):
+                assert c.text == r.text[c.start:c.end]
+                want.append((r.url, c.chunk_id, c.start, c.end, c.text,
+                             list(c.heading_path), hc.contextualize(c),
+                             c.token_est))
+        got = [tuple(r) for r in res.chunks.drop("lang").collect()]
+        assert res.chunks.columns == [
+            "url", "lang", "chunk_id", "start", "end", "text",
+            "heading_path", "context", "token_est"]
+        assert sorted(got) == sorted(want)
+        assert {len(w[5]) for w in want} >= {0, 1, 2, 3}
+        assert len(want) > len(pages_html) * 2
+    finally:
+        res.unpersist()

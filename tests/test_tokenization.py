@@ -69,18 +69,18 @@ def test_custom_counter_changes_merge_decisions_deterministically():
 def test_pipeline_chunker_accepts_tokenizer_name(spark, sf_smoke_dir):
     """tokenizer_name threads through the Arrow UDF; in this container it
     resolves to the heuristic, so output must equal the default path."""
-    from docling_graph_spark.operators.chunk import chunk_documents
-    from docling_graph_spark.operators.extract import (
-        extract_main_text,
-        filter_extractable,
-    )
+    from docling_graph_spark.operators.chunk import chunks_from_combined
+    from docling_graph_spark.operators.extract import extract_and_chunk
     from docling_graph_spark.sources.web_pages import synthesize_web_pages
 
     pages = synthesize_web_pages(spark, sf_smoke_dir).limit(40)
-    extracted = filter_extractable(extract_main_text(pages))
-    base = chunk_documents(extracted, 25).orderBy("url", "chunk_id")
-    named = chunk_documents(
-        extracted, 25, tokenizer_name="any/model"
-    ).orderBy("url", "chunk_id")
+
+    def chunks(**kw):
+        return chunks_from_combined(extract_and_chunk(
+            pages, 25, 8000, 0.85, **kw)).orderBy("url", "chunk_id")
+
+    base = chunks()
+    named = chunks(tokenizer_name="any/model")
+    assert base.count() > 0
     assert [tuple(r) for r in base.collect()] == \
         [tuple(r) for r in named.collect()]
