@@ -29,6 +29,13 @@ metadata swap does.
 The graph is not stored: `CheckpointedRun.graph` derives it from the
 committed stages on every read, through the visibility rule below.
 
+A stream micro-batch (streaming/incremental.py) is one run too: it takes
+its pending rows from `CheckpointedRun.pending` and commits through
+`CheckpointedRun.commit`, with its host link-graph partials
+(`LINK_STAGES`) as two more stages of the same run.  So a crash anywhere
+before the manifest row leaves only invisible orphans, and the replayed
+batch redoes exactly the uncommitted work.
+
 The visibility rule, applied by `CheckpointedRun._filter_committed` and
 nowhere else: a stage row is visible if and only if its run's manifest row
 is ``committed`` (or ``expired``) with ``seq`` at or before the pinned
@@ -37,7 +44,10 @@ no equality delete with a strictly newer ``seq`` names its url.  No
 manifest means nothing is committed, so a run that crashes during its
 first commit leaves only invisible orphans.  The resume anti-join and
 every reader go through that one function; orphans are dead weight until
-`compact` (the expire-snapshots analogue) rewrites them away.
+`compact` (the expire-snapshots analogue) rewrites them away.  Every stage
+read goes through `CheckpointedRun._read_stage`, which refuses a table
+without the ``_run_id`` stamp (a root written by the old unstamped
+stream): such a root must be re-ingested.
 
 Scale notes: the anti-join's build side is only the key column of the done
 set (column pruning keeps it narrow); with Iceberg the done-keys scan prunes
@@ -79,6 +89,9 @@ from .pipeline import (PipelineConfig, PipelineResult, build_web_graph,
                        run_pipeline)
 
 STAGES = ("extracted", "chunks", "doc_mentions", "metrics")
+# the host link-graph partials and their url ledger, committed by a stream
+# run with ``link_edges`` (streaming/incremental.py)
+LINK_STAGES = ("host_edges", "host_edges_urls")
 RUN_ID_COL = "_run_id"
 SEQ_COL = "_seq"  # snapshot seq of a row's run, attached for delete checks
 
@@ -247,8 +260,6 @@ class CheckpointedRun:
         stamp.  ``visibility`` is a `_visibility` pair already resolved
         for ``as_of``/``branch``, so a reader of several stages resolves
         it once; None resolves it here."""
-        if RUN_ID_COL not in df.columns:
-            return df  # a stream's unstamped table (streaming/incremental)
         vis, dkeys = visibility or self._visibility(as_of, branch)
         if vis is None:
             return df.where(F.lit(False)).drop(RUN_ID_COL)
@@ -377,19 +388,26 @@ class CheckpointedRun:
 
     # ---------------------------------------------------------------- run
 
-    def _done_keys(self, branch: Optional[str] = None) -> Optional[DataFrame]:
-        """Resume anti-join build side: the visible extracted urls (main,
-        plus ``branch``'s staged runs); None before the first commit, when
-        nothing is visible — even if a crashed first run left a partial
-        ``extracted`` append behind.  Equality deletes apply — a deleted
-        url is pending again, so re-ingesting it commits a fresh (visible)
+    def _done_keys(self, branch: Optional[str] = None,
+                   stage: str = "extracted") -> Optional[DataFrame]:
+        """Resume anti-join build side: the visible urls of ``stage``
+        (main, plus ``branch``'s staged runs); None before the first
+        commit, when nothing is visible — even if a crashed first run left
+        a partial append behind.  Equality deletes apply — a deleted url is
+        pending again, so re-ingesting it commits a fresh (visible)
         snapshot.  The join prunes the scan to (url, run id)."""
-        df = self._stage_or_none("extracted") if self._exists("runs") \
-            else None
+        df = self._stage_or_none(stage) if self._exists("runs") else None
         if df is None:
             return None
         return self._filter_committed(df, branch=branch) \
             .select("url").distinct()
+
+    def pending(self, inputs: DataFrame, stage: str = "extracted",
+                branch: Optional[str] = None) -> DataFrame:
+        """The pending selection of a run: the rows of ``inputs`` whose url
+        has no visible row in ``stage`` (:func:`pending_inputs` against
+        `_done_keys`)."""
+        return pending_inputs(inputs, self._done_keys(branch, stage))
 
     def run(self, web_pages: DataFrame,
             branch: Optional[str] = None) -> int:
@@ -403,7 +421,7 @@ class CheckpointedRun:
         work, so re-running the same input on the same branch stays
         idempotent, while a main run of the same input correctly
         reprocesses it."""
-        todo = pending_inputs(web_pages, self._done_keys(branch))
+        todo = self.pending(web_pages, branch=branch)
         # cheap emptiness probe: limit(1) avoids a full count of the input
         if todo.limit(1).isEmpty():
             self._manifest("", 0, 0.0)
@@ -420,10 +438,18 @@ class CheckpointedRun:
         # write — materialize it once so the four appends don't recompute
         # (on a cluster these would be intermediate Iceberg tables)
         res = run_pipeline(todo, replace(self.config, materialize=True))
+        return self.commit(res, t0, branch)
 
+    def commit(self, res: PipelineResult, t0: float,
+               branch: Optional[str] = None, **extra: DataFrame) -> int:
+        """Commit ``res`` (and unpersist it) as one run under a fresh run
+        id: its four stages plus the ``extra`` named relations are
+        appended, then the manifest row is written.  ``t0`` is the run's
+        start (``time.perf_counter()``) for the manifest's wall time.
+        Returns the number of documents processed."""
         run_id = uuid.uuid4().hex
         try:
-            self._append_stages(res, run_id)
+            self._append_stages(res, run_id, **extra)
         finally:
             res.unpersist()
         # the appends ran the observed extraction relation: its counter is
@@ -436,9 +462,11 @@ class CheckpointedRun:
                        branch=branch)
         return processed
 
-    def _append_stages(self, res: PipelineResult, run_id: str) -> None:
-        """The data-file half of the commit: four appends, no graph, stamped
-        with ``run_id``, invisible until `_manifest` records the run as
+    def _append_stages(self, res: PipelineResult, run_id: str,
+                       **extra: DataFrame) -> None:
+        """The data-file half of the commit: the four stages of ``res``
+        and the ``extra`` named relations, no graph, stamped with
+        ``run_id``, invisible until `_manifest` records the run as
         committed.  The appends run concurrently, one thread per stage:
         each is a latency-bound job on small data, and tasks that reach a
         persisted partition another job is computing wait on its block
@@ -448,8 +476,8 @@ class CheckpointedRun:
         appends and the commit."""
         extracted = res.extracted.withColumn(
             "bucket", host_bucket(F.col("url"), self.n_buckets))
-        stages = zip(STAGES, (extracted, res.chunks, res.doc_mentions,
-                              res.metrics))
+        stages = [*zip(STAGES, (extracted, res.chunks, res.doc_mentions,
+                                res.metrics)), *extra.items()]
 
         def append(name: str, df: DataFrame) -> None:
             _stage_writer(df.withColumn(RUN_ID_COL, F.lit(run_id)), name,
@@ -457,7 +485,7 @@ class CheckpointedRun:
 
         # leaving the block waits for every append; each thread gets its
         # own copy of the caller's job group, scheduler pool and tags
-        with ThreadPoolExecutor(max_workers=len(STAGES)) as pool:
+        with ThreadPoolExecutor(max_workers=len(stages)) as pool:
             futures = [
                 pool.submit(inheritable_thread_target(self.spark)(append),
                             name, df)
@@ -474,9 +502,18 @@ class CheckpointedRun:
         files — old rows surface NULL in the new columns, exactly what
         an Iceberg add-column gives (column adds never rewrite data).
         Without mergeSchema, Spark samples one footer and the visible
-        schema would depend on file listing order."""
-        return self.spark.read.option("mergeSchema", "true").parquet(
+        schema would depend on file listing order.  A table without the
+        run stamp raises ``ValueError``: no manifest row can commit its
+        rows."""
+        df = self.spark.read.option("mergeSchema", "true").parquet(
             self._path(stage))
+        if RUN_ID_COL not in df.columns:
+            raise ValueError(
+                f"stage table {stage!r} under {self.root} has no "
+                f"{RUN_ID_COL} column: it was written without a commit "
+                "(the unstamped stream layout); re-ingest the input into "
+                "a fresh root")
+        return df
 
     def _stage_or_none(self, stage: str) -> Optional[DataFrame]:
         """:meth:`_read_stage`, or None while the stage has no data file:
@@ -511,6 +548,11 @@ class CheckpointedRun:
     def edges(self, as_of=None) -> DataFrame:
         return self.graph(as_of)[1]
 
+    def committed(self, stage: str, as_of=None) -> DataFrame:
+        """The visible rows of ``stage`` as of ``as_of``, without the run
+        stamp."""
+        return self._filter_committed(self._read_stage(stage), as_of=as_of)
+
     def extracted(self, as_of=None) -> DataFrame:
         """Extracted text across committed runs.  HIDDEN PARTITIONING:
         the physical ``bucket=`` layout (a url-host hash transform,
@@ -518,9 +560,7 @@ class CheckpointedRun:
         callers see exactly the pipeline's columns, as with an Iceberg
         partition-spec transform.  Use :meth:`extracted_for_hosts` for
         transform-aware pruned reads."""
-        return self._filter_committed(
-            self._read_stage("extracted"), as_of=as_of
-        ).drop("bucket")
+        return self.committed("extracted", as_of).drop("bucket")
 
     def _bucket_specs(self) -> "set[int]":
         """Every bucket-count spec data was ever committed (or staged)
@@ -592,7 +632,7 @@ class CheckpointedRun:
         production answer; plain parquet has no commit protocol to race).
         """
         rewritten: dict = {}
-        for stage in STAGES:
+        for stage in STAGES + LINK_STAGES:
             path = self._path(stage)
             stats = _data_file_stats(self.spark, path)
             if stats is None:
@@ -627,14 +667,14 @@ class CheckpointedRun:
         return rewritten
 
     def _rewrite_stages(self, keep) -> dict:
-        """Rewrite each run-stamped stage table to ``keep(df)`` and swap
-        it in (:func:`_atomic_rewrite`); ``keep`` returning ``df`` itself
-        skips the stage.  Returns ``{stage: rows_removed}``."""
+        """Rewrite each stage table to ``keep(df)`` and swap it in
+        (:func:`_atomic_rewrite`); ``keep`` returning ``df`` itself skips
+        the stage.  Returns ``{stage: rows_removed}``."""
         removed: dict = {}
-        for stage in STAGES:
+        for stage in STAGES + LINK_STAGES:
             df = self._stage_or_none(stage)
-            if df is None or RUN_ID_COL not in df.columns:
-                continue  # no data file, or a stream's unstamped table
+            if df is None:
+                continue  # never written, or no data file
             kept = keep(df)
             if kept is df:
                 continue
@@ -722,7 +762,7 @@ class CheckpointedRun:
         incremental-scan (``start-snapshot-id``/``end-snapshot-id``)
         analogue; a downstream consumer processes exactly the delta
         between two checkpoints instead of rescanning the table."""
-        df = self.spark.read.parquet(self._path(stage))
+        df = self._read_stage(stage)
         runs = self._runs()
         if runs is None:
             return df.where(F.lit(False)).drop(RUN_ID_COL)

@@ -1,10 +1,12 @@
 """Bloom-filter membership gate for incremental crawl ingestion.
 
-Problem at crawl scale: ``run_incremental(dedup_urls=True)`` must skip urls
-already ingested in prior batches.  The plain expression is a ``left_anti``
-join of every micro-batch against the full accumulated history — a rescan
-of the (monotonically growing) ledger per batch, which at 10^12 urls makes
-each micro-batch cost O(history), not O(batch).
+Problem at crawl scale: incremental ingestion must skip urls already
+ingested in prior batches.  The plain expression is a ``left_anti`` join of
+every micro-batch against the full accumulated history — a rescan of the
+(monotonically growing) ledger per batch, which at 10^12 urls makes each
+micro-batch cost O(history), not O(batch).  The engine's stream takes the
+plain anti-join (`CheckpointedRun.pending`); this gate serves the catalog's
+``bloom_gate`` entry.
 
 The standard fix (used by every production crawl dedup, cf. the
 Bloom-filter join pruning in Spark's own runtime filters): maintain a

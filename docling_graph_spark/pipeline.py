@@ -182,16 +182,20 @@ def run_pipeline(web_pages: DataFrame,
     def _observe(df: DataFrame) -> DataFrame:
         # counters ride the first real action over the extraction relation
         # (df.observe is an identity node with aggregate side-channels) —
-        # the run-level docs/bytes/errors totals arrive without a job
+        # the run-level docs/bytes/errors totals arrive without a job.
+        # Sums over no rows are null: report 0, as the count does
+        def total(col):
+            return F.coalesce(F.sum(col), F.lit(0))
+
         return df.observe(
             obs,
             F.count(F.lit(1)).alias("docs_parsed"),
-            F.sum(F.coalesce(F.col("bytes_stripped"), F.lit(0)))
+            total(F.coalesce(F.col("bytes_stripped"), F.lit(0)))
             .alias("bytes_stripped"),
-            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0))
+            total(F.when(F.col("error").isNotNull(), 1).otherwise(0))
             .alias("errors"),
             # rows `filter_extractable` keeps: the size of `extracted`
-            F.sum(F.when(op_extract.extractable(), 1).otherwise(0))
+            total(F.when(op_extract.extractable(), 1).otherwise(0))
             .alias("docs_extracted"),
         )
 

@@ -85,17 +85,6 @@ DOC_MENTIONS = T.StructType([
     *MENTION.fields,
 ])
 
-CHUNKS = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("lang", T.StringType(), True),
-    T.StructField("chunk_id", T.IntegerType(), False),
-    T.StructField("start", T.LongType(), False),
-    T.StructField("end", T.LongType(), False),
-    T.StructField("text", T.StringType(), False),
-    T.StructField("token_est", T.IntegerType(), False),
-    T.StructField("batch_id", T.IntegerType(), False),
-])
-
 NODES = T.StructType([
     T.StructField("id", T.StringType(), False),
     T.StructField("label", T.StringType(), False),

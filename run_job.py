@@ -20,10 +20,11 @@ resumable.  Works identically under spark-submit and plain python:
 Modes:
   oneshot — full pipeline, overwrite outputs (no checkpoint)
   resume  — CheckpointedRun: left_anti restart over the output tables
-  stream  — Structured-Streaming availableNow drain with offset checkpoints
+  stream  — Structured-Streaming availableNow drain with offset checkpoints;
+            each micro-batch commits as one CheckpointedRun run
   compact — checkpoint maintenance: orphan expiry (+ file bin-packing)
   graph   — corpus-global graph finalize over accumulated stage tables
-            (a resume root's committed rows only)
+            (committed rows only)
   shards  — training-shard export: token-budget packing of the extracted
             table, written partitioned by shard_id with a manifest
   curate  — training-data funnel over the extracted text: Gopher gates,
@@ -88,6 +89,15 @@ def _load_config(path: str) -> dict:
     return data
 
 
+def _exists(spark, path: str) -> bool:
+    """Whether ``path`` exists, probed with the Hadoop FileSystem, not
+    os.path: the output root may be s3:// or hdfs://."""
+    from docling_graph_spark.checkpointing import _fs_path
+
+    fs, jpath = _fs_path(spark, path)
+    return bool(fs.exists(jpath))
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("command", nargs="?", choices=["run", "init", "inspect"],
@@ -133,18 +143,10 @@ def main() -> int:
                          "data files toward this size (small-files "
                          "maintenance after many incremental runs)")
     ap.add_argument("--link-graph", action="store_true",
-                    help="stream mode: also accumulate the host-level "
-                         "outlink edge list per micro-batch; graph mode "
-                         "finalizes it into host_edges_final/host_ranks")
-    ap.add_argument("--dedup-urls", action="store_true",
-                    help="stream mode: process each url once (newest "
-                         "capture wins within a batch; re-crawls of "
-                         "already-ingested urls are skipped)")
-    ap.add_argument("--bloom-bits", type=int, default=0,
-                    help="stream mode with --dedup-urls: gate the "
-                         "seen-url anti-join with a Bloom filter of this "
-                         "many bits (0 = off); bloom-negative rows skip "
-                         "the history join entirely")
+                    help="stream mode: each micro-batch's run also commits "
+                         "the host-level outlink edge counts of its new "
+                         "urls; graph mode finalizes the committed counts "
+                         "into host_edges_final/host_ranks")
     ap.add_argument("--branch", default=None,
                     help="resume mode: stage this run on a "
                          "write-audit-publish branch (invisible to main "
@@ -334,14 +336,10 @@ def main() -> int:
             os.makedirs(ckpt, exist_ok=True)
             with open(fmt_marker, "w") as fh:
                 fh.write(fmt)
-        run_incremental(spark, args.input, args.output, ckpt, cfg,
-                        input_format=fmt, wet_dir=args.wet_output,
-                        dedup_urls=args.dedup_urls,
-                        link_edges=args.link_graph,
-                        bloom_bits=args.bloom_bits)
-        processed = spark.read.parquet(
-            f"{args.output.rstrip('/')}/extracted"
-        ).count()
+        processed = run_incremental(spark, args.input, args.output, ckpt,
+                                    cfg, input_format=fmt,
+                                    wet_dir=args.wet_output,
+                                    link_edges=args.link_graph)
     elif args.mode == "graph":
         # finalize: corpus-global graph over the stage tables a stream (or
         # resumed runs) accumulated — Term nodes need the whole corpus
@@ -352,15 +350,11 @@ def main() -> int:
         processed = nodes.count()
         print(f"graph finalized: {processed} nodes, {edges.count()} edges")
         # a host_edges table exists only where a stream ran with
-        # --link-graph; probe it with the Hadoop FileSystem, not os.path:
-        # the output root may be s3:// or hdfs://
-        from docling_graph_spark.checkpointing import _fs_path
+        # --link-graph
         from docling_graph_spark.streaming.incremental import (
             finalize_link_graph,
         )
-        fs, host_edges = _fs_path(spark,
-                                  f"{args.output.rstrip('/')}/host_edges")
-        if fs.exists(host_edges):
+        if _exists(spark, f"{args.output.rstrip('/')}/host_edges"):
             le, lr = finalize_link_graph(spark, args.output)
             print(f"link graph finalized: {le.count()} host edges, "
                   f"{lr.count()} ranked hosts")
@@ -415,10 +409,15 @@ def main() -> int:
         # shuffle carries only the narrow (url, tokens) projection).
         from pyspark.sql import functions as F
 
+        from docling_graph_spark.checkpointing import CheckpointedRun
         from docling_graph_spark.operators import sharding
 
         out = args.output.rstrip("/")
-        ext = spark.read.parquet(f"{out}/extracted")
+        # a stream or resume root holds crashed-run orphans and run stamps:
+        # read its committed rows; a oneshot root is a plain table
+        ext = (CheckpointedRun(spark, out).extracted()
+               if _exists(spark, f"{out}/runs")
+               else spark.read.parquet(f"{out}/extracted"))
         counted = sharding.token_counts(
             ext.select(F.col("url").alias("doc_id"), "text"))
         assigned = sharding.pack_shards(
@@ -485,7 +484,8 @@ def main() -> int:
             visualizers.write_report(res.nodes, res.edges, f"{out}/report.md")
             visualizers.write_interactive_html(res.nodes, res.edges,
                                                f"{out}/graph.html")
-        processed = spark.read.parquet(f"{out}/extracted").count()
+        # the extracted write ran the observed relation: no re-scan
+        processed = res.run_counters["docs_extracted"]
 
     print(json.dumps({
         "mode": args.mode,

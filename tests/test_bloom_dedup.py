@@ -1,9 +1,7 @@
-"""Bloom-filter seen-url gate (operators/bloom.py + the stream wiring).
+"""Bloom-filter seen-url gate (operators/bloom.py).
 
 Correctness contract: the filter may say "maybe seen" for a new url (false
-positive, costs one join probe) but must NEVER say "new" for a seen url —
-so the bloom-gated dedup stream produces the byte-identical extracted
-table as the plain anti-join.
+positive, costs one join probe) but must NEVER say "new" for a seen url.
 """
 
 from __future__ import annotations
@@ -14,11 +12,7 @@ pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from docling_graph_spark.operators import bloom as op_bloom
-from docling_graph_spark.pipeline import PipelineConfig, run_pipeline
-from docling_graph_spark.sources.web_pages import synthesize_web_pages
-from docling_graph_spark.streaming.incremental import run_incremental
 
-CFG = PipelineConfig(id_mode="xxhash64")
 BITS = 1 << 16
 
 
@@ -80,73 +74,6 @@ def test_probe_plan_broadcasts_and_never_shuffles_big_side(spark):
                      and "hashpartitioning(pos" not in ln
                      and "hashpartitioning(word" not in ln]
     assert non_broadcast == [], non_broadcast
-
-
-def test_bloom_gated_stream_matches_plain_antijoin(spark, sf_smoke_dir,
-                                                   tmp_path):
-    """End-to-end: two drains with re-crawls, bloom gate on — the extracted
-    table equals the plain dedup_urls run row-for-row."""
-    pages = synthesize_web_pages(spark, sf_smoke_dir)
-    inbox = str(tmp_path / "inbox")
-    outs = {"plain": str(tmp_path / "out_plain"),
-            "bloom": str(tmp_path / "out_bloom")}
-    ckpts = {k: str(tmp_path / f"ckpt_{k}") for k in outs}
-
-    batch1 = pages.filter(F.crc32(F.col("url")) % 2 == 0)
-    pages.limit(0).write.mode("append").parquet(inbox)  # schema dir
-    batch1.write.mode("append").parquet(inbox)
-    for k, out in outs.items():
-        run_incremental(spark, inbox, out, ckpts[k], CFG, dedup_urls=True,
-                        bloom_bits=BITS if k == "bloom" else 0)
-
-    # batch 2: re-crawl of everything (half duplicates) plus the other half
-    (pages.withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY"))
-     .write.mode("append").parquet(inbox))
-    for k, out in outs.items():
-        run_incremental(spark, inbox, out, ckpts[k], CFG, dedup_urls=True,
-                        bloom_bits=BITS if k == "bloom" else 0)
-
-    plain = spark.read.parquet(f"{outs['plain']}/extracted")
-    bloom = spark.read.parquet(f"{outs['bloom']}/extracted")
-    cols = ["url", "text", "lang"]
-    assert bloom.count() == plain.count()
-    assert bloom.select(cols).exceptAll(plain.select(cols)).count() == 0
-    assert plain.select(cols).exceptAll(bloom.select(cols)).count() == 0
-    # one row per url, and the bloom filter table exists with meta
-    assert bloom.select("url").distinct().count() == bloom.count()
-    import os
-
-    assert os.path.exists(f"{outs['bloom']}/url_bloom/_bloom_meta.json")
-
-
-def test_bloom_rebuilds_from_ledger_when_missing(spark, sf_smoke_dir,
-                                                 tmp_path):
-    """Deleting the filter (prior run without the gate, crash before first
-    publish) must not cause duplicates: the gate rebuilds from the url
-    ledger before trusting itself."""
-    import shutil
-
-    pages = synthesize_web_pages(spark, sf_smoke_dir).limit(60)
-    inbox = str(tmp_path / "inbox")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    pages.write.mode("append").parquet(inbox)
-    run_incremental(spark, inbox, out, ckpt, CFG, dedup_urls=True,
-                    bloom_bits=BITS)
-    n1 = spark.read.parquet(f"{out}/extracted").count()
-    shutil.rmtree(f"{out}/url_bloom")
-
-    # full re-crawl arrives; with no filter on disk a naive gate would
-    # treat every url as definitely-new
-    (pages.withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY"))
-     .write.mode("append").parquet(inbox))
-    run_incremental(spark, inbox, out, ckpt, CFG, dedup_urls=True,
-                    bloom_bits=BITS)
-    assert spark.read.parquet(f"{out}/extracted").count() == n1
-    import os
-
-    assert os.path.exists(f"{out}/url_bloom/_bloom_meta.json")
 
 
 def test_big_probe_matches_broadcast_probe(spark):

@@ -61,7 +61,8 @@ def test_config_file_drives_oneshot_run(spark, sf_smoke_dir, tmp_path,
     assert rc == 0
     assert out["mode"] == "oneshot"
     assert out["processed_docs"] > 0
-    assert os.path.isdir(f"{out_dir}/extracted")
+    assert out["processed_docs"] == spark.read.parquet(
+        f"{out_dir}/extracted").count()
     assert os.path.isdir(f"{out_dir}/chunks")
 
 
@@ -126,6 +127,38 @@ def test_shards_mode_exports_budgeted_shards(spark, sf_smoke_dir, tmp_path,
     for sid, row in manifest.items():
         if sid != max(manifest):
             assert row["shard_tokens"] <= 2000 + max_doc
+
+
+def test_shards_mode_reads_only_committed_rows(spark, sf_smoke_dir,
+                                               tmp_path, capsys):
+    """shards over a checkpoint root beside a crashed append packs the
+    committed documents only, and the run stamp and the bucket partition
+    column stay out of the shards."""
+    from pyspark.sql import functions as F
+
+    from docling_graph_spark.checkpointing import CheckpointedRun
+    from docling_graph_spark.pipeline import PipelineConfig, run_pipeline
+    from docling_graph_spark.sources.web_pages import synthesize_web_pages
+
+    pages = synthesize_web_pages(spark, sf_smoke_dir).filter(
+        F.crc32("url") % 10 == 0)
+    half = F.crc32("url") % 20 == 0
+    root = str(tmp_path / "ckroot")
+    cfg = PipelineConfig(id_mode="xxhash64")
+    ck = CheckpointedRun(spark, root, cfg)
+    n = ck.run(pages.filter(half))
+    res = run_pipeline(pages.filter(~half).localCheckpoint(eager=True),
+                       cfg).persist()
+    ck._append_stages(res, "crashed")
+    res.unpersist()
+
+    rc, out = _run(["--mode", "shards", "--output", root,
+                    "--shard-budget", "2000"], capsys)
+    assert rc == 0 and out["processed_docs"] == n > 0
+    shards = spark.read.parquet(f"{root}/shards")
+    assert (sorted(r.url for r in shards.select("url").collect())
+            == sorted(r.url for r in ck.extracted().select("url").collect()))
+    assert not {"_run_id", "bucket"} & set(shards.columns)
 
 
 def test_shards_mode_packed_sequences(spark, sf_smoke_dir, tmp_path,
@@ -252,9 +285,12 @@ def test_graph_mode_finalizes_link_graph_only_with_host_edges(
     assert calls == []
 
     stream_root = str(tmp_path / "stream_root")
-    rc, _ = _run(["--mode", "stream", "--input", inbox, "--output",
-                  stream_root, "--link-graph"], capsys)
+    rc, out = _run(["--mode", "stream", "--input", inbox, "--output",
+                    stream_root, "--link-graph"], capsys)
     assert rc == 0
+    from docling_graph_spark.checkpointing import CheckpointedRun
+    assert out["processed_docs"] == CheckpointedRun(
+        spark, stream_root).extracted().count() > 0
     rc, _ = _run(["--mode", "graph", "--output", stream_root], capsys)
     assert rc == 0 and calls == [stream_root]
     assert os.path.isdir(f"{stream_root}/host_ranks")

@@ -3,12 +3,18 @@ no reprocessing across restarts, convergence with the batch pipeline."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
+from docling_graph_spark.checkpointing import CheckpointedRun
 from docling_graph_spark.pipeline import PipelineConfig, run_pipeline
 from docling_graph_spark.sources.web_pages import synthesize_web_pages
-from docling_graph_spark.streaming.incremental import run_incremental
+from docling_graph_spark.streaming.incremental import (
+    assemble_accumulated_graph, finalize_link_graph, run_incremental,
+)
 
 CFG = PipelineConfig(id_mode="xxhash64")
 CHUNK_COLS = ("url", "chunk_id", "start", "end", "text", "token_est",
@@ -57,9 +63,6 @@ def test_incremental_stream_drains_and_converges(spark, sf_smoke_dir, tmp_path):
             == oneshot.doc_mentions.count())
 
     # downstream graph finalize over the accumulated tables == one-shot graph
-    from docling_graph_spark.streaming.incremental import (
-        assemble_accumulated_graph,
-    )
     nodes, edges = assemble_accumulated_graph(spark, out, CFG)
     assert ({r[0] for r in nodes.select("id").collect()}
             == {r[0] for r in oneshot.nodes.select("id").collect()})
@@ -67,13 +70,11 @@ def test_incremental_stream_drains_and_converges(spark, sf_smoke_dir, tmp_path):
     # persisted as tables under the output root
     assert spark.read.parquet(f"{out}/nodes").count() == nodes.count()
 
-    # duplicate-capture guard: a second stale capture of one url is refused
+    # duplicate-capture guard: a committed run whose input repeats a url
+    # holds two captures of it, and graph finalize refuses them
     dup_out = str(tmp_path / "dup_out")
-    final.write.mode("append").parquet(f"{dup_out}/extracted")
-    final.limit(1).write.mode("append").parquet(f"{dup_out}/extracted")
-    spark.read.parquet(f"{out}/chunks").write.parquet(f"{dup_out}/chunks")
-    spark.read.parquet(f"{out}/doc_mentions").write.parquet(
-        f"{dup_out}/doc_mentions")
+    few = pages.limit(5).localCheckpoint()
+    CheckpointedRun(spark, dup_out, CFG).run(few.unionByName(few.limit(1)))
     with pytest.raises(ValueError, match="multiple captures"):
         assemble_accumulated_graph(spark, dup_out, CFG)
 
@@ -83,10 +84,6 @@ def test_incremental_stream_honors_hybrid_chunker(spark, sf_smoke_dir,
     """Micro-batches run the configured chunker: a hybrid-chunker stream
     writes heading-aware chunk rows identical to the one-shot hybrid run,
     and graph finalize over them reproduces the one-shot node set."""
-    from docling_graph_spark.streaming.incremental import (
-        assemble_accumulated_graph,
-    )
-
     cfg = PipelineConfig(id_mode="xxhash64", chunker="hybrid")
     pages = synthesize_web_pages(spark, sf_smoke_dir)
     inbox = str(tmp_path / "inbox")
@@ -110,11 +107,11 @@ def test_incremental_stream_honors_hybrid_chunker(spark, sf_smoke_dir,
 
 
 @pytest.mark.slow
-def test_dedup_urls_keeps_newest_capture_once(spark, sf_smoke_dir, tmp_path):
-    """--dedup-urls crawl semantics: within a micro-batch the newest capture
-    of a url wins; re-crawls of already-ingested urls are skipped on later
-    drains. The deduped stream converges with a one-shot batch run over the
-    distinct (newest) captures."""
+def test_stream_keeps_newest_capture_once(spark, sf_smoke_dir, tmp_path):
+    """Crawl semantics: within a micro-batch the newest capture of a url
+    wins; re-crawls of already-ingested urls are skipped on later drains.
+    The stream converges with a one-shot batch run over the distinct
+    (newest) captures."""
     pages = synthesize_web_pages(spark, sf_smoke_dir)
     inbox = str(tmp_path / "inbox")
     out = str(tmp_path / "out")
@@ -128,7 +125,7 @@ def test_dedup_urls_keeps_newest_capture_once(spark, sf_smoke_dir, tmp_path):
              .withColumn("html", F.to_binary(F.lit("<html>stale</html>"),
                                              F.lit("utf-8"))))
     pages.unionByName(older).write.mode("append").parquet(inbox)
-    run_incremental(spark, inbox, out, ckpt, CFG, dedup_urls=True)
+    run_incremental(spark, inbox, out, ckpt, CFG)
 
     extracted = spark.read.parquet(f"{out}/extracted")
     oneshot = run_pipeline(pages, CFG).extracted
@@ -145,7 +142,7 @@ def test_dedup_urls_keeps_newest_capture_once(spark, sf_smoke_dir, tmp_path):
     (pages.filter(F.crc32(F.col("url")) % 3 == 0)
      .withColumn("warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY"))
      .write.mode("append").parquet(inbox))
-    run_incremental(spark, inbox, out, ckpt, CFG, dedup_urls=True)
+    assert run_incremental(spark, inbox, out, ckpt, CFG) == 0
     assert spark.read.parquet(f"{out}/extracted").count() == oneshot.count()
 
 
@@ -242,9 +239,6 @@ def test_incremental_link_graph_matches_batch(spark, sf_smoke_dir,
     exactly the single-batch link graph, and the finalized integer
     PageRank is bit-identical to ranking the batch-computed edges."""
     from docling_graph_spark.operators import linkgraph as op_lg
-    from docling_graph_spark.streaming.incremental import (
-        finalize_link_graph,
-    )
 
     pages = synthesize_web_pages(spark, sf_smoke_dir)
     inbox = str(tmp_path / "inbox")
@@ -269,13 +263,9 @@ def test_incremental_link_graph_matches_batch(spark, sf_smoke_dir,
 @pytest.mark.slow
 def test_link_edges_exactly_once_despite_failed_extraction(spark,
                                                            tmp_path):
-    """Under dedup_urls, a url whose extraction fails the extractable
-    filter must still contribute its link edges exactly once across
-    recaptures (the edge ledger is independent of the extracted table)."""
-    from docling_graph_spark.streaming.incremental import (
-        finalize_link_graph,
-    )
-
+    """A url whose extraction fails the extractable filter must still
+    contribute its link edges exactly once across recaptures (the edge
+    ledger is independent of the extracted table)."""
     html = (b'<html><body><a href="https://t.example.com/">x</a>'
             b'</body></html>')
     import datetime
@@ -289,18 +279,97 @@ def test_link_edges_exactly_once_despite_failed_extraction(spark,
     schema = "url string, html binary, text string, lang string"
     spark.createDataFrame([row], schema).withColumn(
         "warc_ts", F.lit(ts1)).write.mode("append").parquet(inbox)
-    run_incremental(spark, inbox, out, ckpt, CFG, dedup_urls=True,
-                    link_edges=True)
+    run_incremental(spark, inbox, out, ckpt, CFG, link_edges=True)
     # recapture of the same url arrives in a later crawl file
     spark.createDataFrame([row], schema).withColumn(
         "warc_ts", F.lit(ts2)).write.mode("append").parquet(inbox)
-    run_incremental(spark, inbox, out, ckpt, CFG, dedup_urls=True,
-                    link_edges=True)
+    run_incremental(spark, inbox, out, ckpt, CFG, link_edges=True)
 
     edges, _ = finalize_link_graph(spark, out, write=False)
     got = {(r["src_host"], r["dst_host"]): r["n_links"]
            for r in edges.collect()}
     assert got == {("src.example.com", "t.example.com"): 1}
+
+
+def _graph_rows(df):
+    """Every row of a node or edge relation, ``properties`` included."""
+    return sorted(tuple(sorted(v.items()) if isinstance(v, dict) else v
+                        for v in r) for r in df.collect())
+
+
+@pytest.mark.parametrize("blocked", ["chunks", "host_edges_urls"])
+def test_crashed_batch_replays_exactly_once(spark, sf_smoke_dir, tmp_path,
+                                            blocked):
+    """A drain that fails in one stage append of its micro-batch (the
+    path is a plain file) commits nothing.  Draining again with the same
+    checkpoint replays the batch, and every url then has exactly one
+    extracted row with its chunk and mention rows: the graph equals the
+    one-shot graph, the finalized host edges equal the batch link graph,
+    and compact() leaves every read unchanged."""
+    from docling_graph_spark.operators import linkgraph as op_lg
+
+    pages = synthesize_web_pages(spark, sf_smoke_dir).filter(
+        F.crc32("url") % 4 == 0)
+    inbox = str(tmp_path / "inbox")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    pages.write.parquet(inbox)
+    os.makedirs(out)
+    with open(f"{out}/{blocked}", "w") as fh:
+        fh.write("not a table")
+    with pytest.raises(StreamingQueryException):
+        run_incremental(spark, inbox, out, ckpt, CFG, link_edges=True)
+    os.remove(f"{out}/{blocked}")
+    n = run_incremental(spark, inbox, out, ckpt, CFG, link_edges=True)
+
+    ck = CheckpointedRun(spark, out, CFG)
+    oneshot = run_pipeline(pages, CFG)
+    try:
+        urls = sorted(r.url for r in oneshot.extracted.collect())
+        want = (_rows(oneshot.chunks, CHUNK_COLS),
+                _rows(oneshot.doc_mentions, oneshot.doc_mentions.columns),
+                _graph_rows(oneshot.nodes), _graph_rows(oneshot.edges))
+    finally:
+        oneshot.unpersist()
+    want_links = sorted(map(tuple, op_lg.host_link_graph(pages).collect()))
+
+    def check():
+        assert sorted(r.url for r in ck.extracted().collect()) == urls
+        mentions = ck.committed("doc_mentions")
+        nodes, edges = assemble_accumulated_graph(spark, out, CFG,
+                                                  write=False)
+        assert (_rows(ck.committed("chunks"), CHUNK_COLS),
+                _rows(mentions, mentions.columns),
+                _graph_rows(nodes), _graph_rows(edges)) == want
+        links, _ = finalize_link_graph(spark, out, write=False)
+        assert sorted(map(tuple, links.collect())) == want_links
+
+    check()
+    assert n == len(urls) > 0
+    reclaimed = ck.compact()
+    assert reclaimed[blocked] == 0 and sum(reclaimed.values()) > 0
+    check()
+
+
+def test_unstamped_stage_table_is_refused(spark, sf_smoke_dir, tmp_path):
+    """A root whose stage tables carry no run stamp (written before stream
+    batches committed through CheckpointedRun) is refused by every reader,
+    naming the table, instead of being read whole."""
+    pages = synthesize_web_pages(spark, sf_smoke_dir).limit(10)
+    root = str(tmp_path / "old_stream")
+    res = run_pipeline(pages, CFG)
+    try:
+        for stage in ("extracted", "chunks", "doc_mentions", "metrics"):
+            getattr(res, stage).write.parquet(f"{root}/{stage}")
+    finally:
+        res.unpersist()
+    ck = CheckpointedRun(spark, root, CFG)
+    with pytest.raises(ValueError, match="'extracted'"):
+        ck.extracted()
+    with pytest.raises(ValueError, match="'chunks'"):
+        ck.committed("chunks")
+    with pytest.raises(ValueError, match="'extracted'"):
+        assemble_accumulated_graph(spark, root, CFG, write=False)
 
 
 def test_session_windows_merge_and_split(spark, tmp_path):
