@@ -20,34 +20,62 @@ swap).  Citations: reference metadata sink
 `/root/reference/docling_graph/pipeline/orchestrator.py:149-240` (the run
 manifest), resume protocol per SURVEY §2.9.
 
-The four appends run concurrently and all finish before the commit point.
-The commit point is one exclusive create of the file ``runs/<seq>.json``
-(seq zero-padded to 20 digits), with no Spark job: a writer that finds its
-seq taken retries at a greater one, as an Iceberg writer that loses the
-metadata swap does.
+Layout: every write owns a directory, ``<table>/_write=run-<id>/`` (the
+bucketed ``extracted`` stage keeps ``bucket=N/`` beneath it), so each
+Spark job stages its task files under its own output path and concurrent
+runs on one root never touch each other's files.  A write is a run's stage
+append (its id is the run id), a delete file, or a rewrite.  The ``run-``
+prefix keeps the directory value from ever parsing as a number.  A table
+with data files outside a write directory (the flat layout of earlier
+roots) is refused with a ``ValueError`` naming it: re-ingest such a root.
+
+One commit protocol.  Every commit — an append, a delete, a publish, a
+stream micro-batch, a rewrite — is one exclusive create of the file
+``runs/<seq>.json`` (seq zero-padded to 20 digits), with no Spark job: a
+writer that finds its seq taken retries at a greater one, as an Iceberg
+writer that loses the metadata swap does.  A run's four appends run
+concurrently and all finish before its row.  A rewrite (`compact_files`,
+`rewrite_deletes`) reads the live writes of each table, writes the result
+under a fresh id and commits one ``kind="replace"`` row whose
+``supersedes`` names exactly the writes it read (``<table>/<id>``); only
+then are those directories deleted.  Expiry appends one seq-less record
+carrying ``expire_below`` (``runs/expire-<cutoff>.json``), so snapshot
+seqs stay dense.  Nothing renames or moves a directory, so the protocol
+runs on any Hadoop filesystem, and a crash at any point leaves only dead
+directories that `compact` sweeps.
+
+Live writes, a rule on file sets: a write is live when its run's latest
+manifest row is ``committed`` or ``staged`` (a committed replace row is
+its own run) and no committed replace names it in ``supersedes``.
+Replace rows apply in seq order: one that names a write an earlier
+replace already superseded lost a race with it and is dead, so two
+overlapping rewrites never both take effect.  A rewrite reads only the
+writes of committed runs; a staged run's writes stay its own until its
+branch is published or dropped.  `CheckpointedRun._read_stage` reads only
+live writes; liveness does not depend on ``as_of``, because a rewrite
+keeps each row's ``_run_id``, so one file set serves every reachable
+snapshot.  A reader
+reads the manifest once, on the driver with no Spark job, and resolves
+both liveness and the visible runs from that one read.
 
 The graph is not stored: `CheckpointedRun.graph` derives it from the
 committed stages on every read, through the visibility rule below.
 
 A stream micro-batch (streaming/incremental.py) is one run too: it takes
 its pending rows from `CheckpointedRun.pending` and commits through
-`CheckpointedRun.commit`, with its host link-graph partials
-(`LINK_STAGES`) as two more stages of the same run.  So a crash anywhere
+`CheckpointedRun.commit`, with its per-url host link-graph partials
+(`LINK_STAGES`) as one more stage of the same run.  So a crash anywhere
 before the manifest row leaves only invisible orphans, and the replayed
 batch redoes exactly the uncommitted work.
 
 The visibility rule, applied by `CheckpointedRun._filter_committed` and
-nowhere else: a stage row is visible if and only if its run's manifest row
-is ``committed`` (or ``expired``) with ``seq`` at or before the pinned
-snapshot — or, for a branch read, its run is staged on that branch — and
-no equality delete with a strictly newer ``seq`` names its url.  No
-manifest means nothing is committed, so a run that crashes during its
-first commit leaves only invisible orphans.  The resume anti-join and
-every reader go through that one function; orphans are dead weight until
-`compact` (the expire-snapshots analogue) rewrites them away.  Every stage
-read goes through `CheckpointedRun._read_stage`, which refuses a table
-without the ``_run_id`` stamp (a root written by the old unstamped
-stream): such a root must be re-ingested.
+nowhere else: a row of a live write is visible if and only if its run's
+manifest row is ``committed`` with ``seq`` at or before
+the pinned snapshot — or, for a branch read, its run is staged on that
+branch — and no equality delete with a strictly newer ``seq`` names its
+url.  No manifest means nothing is committed, so a run that crashes
+during its first commit leaves only invisible orphans.  The resume
+anti-join and every reader go through that one function.
 
 Scale notes: the anti-join's build side is only the key column of the done
 set (column pruning keeps it narrow); with Iceberg the done-keys scan prunes
@@ -69,31 +97,37 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, fields, replace
+from pathlib import Path
 from typing import Optional
 
+import pandas as pd
 from py4j.protocol import Py4JJavaError
 from pyspark import inheritable_thread_target
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    DoubleType, LongType, StringType, StructField, StructType,
+    ArrayType, DoubleType, LongType, StringType, StructField, StructType,
 )
 
 from .pipeline import (PipelineConfig, PipelineResult, build_web_graph,
                        run_pipeline)
+from .schemas import WEB_PAGES
 
 STAGES = ("extracted", "chunks", "doc_mentions", "metrics")
-# the host link-graph partials and their url ledger, committed by a stream
-# run with ``link_edges`` (streaming/incremental.py)
-LINK_STAGES = ("host_edges", "host_edges_urls")
+# the per-url host link-graph partials, committed by a stream run with
+# ``link_edges`` (streaming/incremental.py)
+LINK_STAGES = ("host_edges",)
+# the columns of the tables that are no pipeline stage
+TABLE_COLUMNS = {"deletes": "url string", "host_edges": "url string, "
+                 "src_host string, dst_host string, n_links long"}
 RUN_ID_COL = "_run_id"
 SEQ_COL = "_seq"  # snapshot seq of a row's run, attached for delete checks
+WRITE_DIR = "_write=run-"  # + write id: the directory of one write
 
 # one manifest row per commit, exactly the fields `_manifest` writes
 MANIFEST_SCHEMA = StructType(
@@ -105,7 +139,9 @@ MANIFEST_SCHEMA = StructType(
      StructField("seq", LongType()),
      StructField("run_ts", StringType()),
      StructField("processed_docs", LongType()),
-     StructField("wall_seconds", DoubleType())]
+     StructField("wall_seconds", DoubleType()),
+     StructField("supersedes", ArrayType(StringType())),
+     StructField("expire_below", LongType())]
     + [StructField(f"cfg_{f.name}", StringType())
        for f in fields(PipelineConfig)])
 
@@ -126,9 +162,9 @@ def host_bucket(url_col, n_buckets: int = 64):
 
 def _committed_seqs(runs: DataFrame, pin: Optional[int] = None) -> DataFrame:
     """(``_run_id``, ``_seq``) of runs committed at or before ``pin``.  An
-    EXPIRED snapshot (expire_snapshots) keeps its data in the current table
+    expired snapshot (expire_snapshots) keeps its data in the current table
     state — Iceberg expiry only retires the ability to time-travel to it."""
-    runs = runs.where(F.col("status").isin("committed", "expired")
+    runs = runs.where((F.col("status") == "committed")
                       & F.col("seq").isNotNull())
     if pin is not None:
         runs = runs.where(F.col("seq") <= pin)
@@ -144,6 +180,46 @@ def _drop_deleted(df: DataFrame, dkeys: DataFrame) -> DataFrame:
     The delete keys are tiny and broadcast: no shuffle of the data table."""
     cond = (df["url"] == dkeys["url"]) & (dkeys["_dseq"] > df[SEQ_COL])
     return df.join(F.broadcast(dkeys), cond, "left_anti")
+
+
+def _latest(runs: list) -> dict:
+    """Run id -> its manifest row with the greatest seq (a row without a
+    seq commits nothing)."""
+    return {r.get("run_id"): r for r in sorted(
+        (r for r in runs if r.get("seq") is not None), key=lambda r: r["seq"])}
+
+
+def _staged(runs: list, branch: Optional[str] = None) -> list:
+    """Manifest rows of runs staged on ``branch`` (on any branch when
+    None) and neither published nor dropped yet, in staging order."""
+    # a staged run's first manifest row is its staging row, so `_latest`
+    # already lists staged runs in staging order
+    return [r for r in _latest(runs).values() if r.get("status") == "staged"
+            and branch in (None, r.get("branch"))]
+
+
+def _replaces(runs: list) -> "tuple[set, set]":
+    """(superseded writes, lost replace ids): the committed replace rows
+    apply in seq order, and one that names a write an earlier replace
+    already superseded lost a race with it (both rewrote that write), so
+    it supersedes nothing and its own writes are dead."""
+    gone, lost = set(), set()
+    # a replace run has one row, so `_latest` lists replaces in seq order
+    for r in _latest(runs).values():
+        if r.get("kind") == "replace":
+            if gone.isdisjoint(r["supersedes"]):
+                gone.update(r["supersedes"])
+            else:
+                lost.add(r["run_id"])
+    return gone, lost
+
+
+def _expired_below(runs: list) -> int:
+    """Snapshots with a smaller seq are expired: the greatest
+    ``expire_below`` of the manifest, a lost replace's excepted."""
+    lost = _replaces(runs)[1]
+    return max((r.get("expire_below") or 0 for r in runs
+                if r.get("run_id") not in lost), default=0)
 
 
 class CheckpointedRun:
@@ -168,89 +244,76 @@ class CheckpointedRun:
     def _path(self, stage: str) -> str:
         return f"{self.root}/{stage}"
 
-    def _exists(self, stage: str) -> bool:
-        fs, jpath = _fs_path(self.spark, self._path(stage))
-        return bool(fs.exists(jpath))
+    def _write_path(self, table: str, wid: str) -> str:
+        """The directory of ``table``'s write ``wid``."""
+        return f"{self._path(table)}/{WRITE_DIR}{wid}"
 
     # ------------------------------------------------------------ commits
 
-    def _runs(self) -> Optional[DataFrame]:
-        """The run manifest, one row per commit; None when no run has
-        written one yet.  The only manifest read: it reads the seq-named
-        files `_manifest` creates and the ``part-*.json`` files of older
-        commits and of `_expire_manifest_below` alike.  Read errors other
-        than a missing directory propagate."""
-        if not self._exists("runs"):
-            return None
-        return self.spark.read.json(self._path("runs"),
-                                    schema=MANIFEST_SCHEMA)
+    def _runs(self) -> list:
+        """The run manifest, one dict per row; empty when no run has
+        written one.  The only manifest read, on the driver with no Spark
+        job: every visible file under ``runs/`` — the seq-named files
+        `_manifest` creates, the seq-less expiry records and the
+        ``part-*.json`` files of older commits alike."""
+        rows = []
+        for data in _read_files(self.spark, self._path("runs")):
+            for line in data.splitlines():
+                try:
+                    rows.append(json.loads(line))
+                except ValueError:  # a torn or empty file commits nothing
+                    continue
+        return [r for r in rows if isinstance(r, dict)]
 
-    def _as_of_seq(self, as_of, runs: DataFrame) -> Optional[int]:
+    def _runs_df(self, runs: list) -> DataFrame:
+        """``runs`` as one partition of `MANIFEST_SCHEMA` rows, the input
+        of the visibility joins.  Built from pandas, so it is a local
+        relation whose size estimate is its real size: the joins over it
+        keep the small estimates the planner's broadcast choices need."""
+        rows = [[r.get(n) for n in MANIFEST_SCHEMA.names] for r in runs]
+        return self.spark.createDataFrame(pd.DataFrame(
+            rows, columns=MANIFEST_SCHEMA.names), MANIFEST_SCHEMA).coalesce(1)
+
+    def _as_of_seq(self, as_of, runs: list) -> Optional[int]:
         """Resolve ``as_of`` — a snapshot sequence number (int, see
         :meth:`snapshots`) or a run id (str) — to a snapshot seq.  A run id
         that never committed, or a snapshot that has been expired, raises:
         silently returning another state would un-pin a lineage query."""
-        if as_of is None:
-            return None
         if isinstance(as_of, str):
-            pin = _committed_seqs(runs).where(F.col(RUN_ID_COL) == as_of) \
-                .collect()
-            if not pin:
+            row = _latest(runs).get(as_of, {})
+            if row.get("status") != "committed":
                 raise ValueError(f"run {as_of!r} never committed")
-            as_of = pin[0][SEQ_COL]
-        as_of = int(as_of)
-        if runs.where((F.col("status") == "expired")
-                      & (F.col("seq") >= as_of)).head(1):
-            raise ValueError(
-                f"snapshot {as_of} has been expired "
-                "(expire_snapshots); time travel to it is gone")
-        return as_of
+            as_of = row["seq"]
+        if as_of is not None and int(as_of) < _expired_below(runs):
+            raise ValueError(f"snapshot {as_of} has been expired "
+                             "(expire_snapshots); time travel to it is gone")
+        return None if as_of is None else int(as_of)
 
-    def _staged_runs(self, branch: Optional[str],
-                     runs: Optional[DataFrame] = None) -> Optional[DataFrame]:
-        """Manifest rows of runs staged on ``branch`` (on any branch when
-        None) and neither published nor dropped yet (a later manifest row
-        for the same run id supersedes the staged one); None when there is
-        no manifest."""
-        runs = self._runs() if runs is None else runs
-        if runs is None:
-            return None
-        latest = runs.groupBy("run_id").agg(F.max("seq").alias("seq"))
-        staged = runs.join(latest, ["run_id", "seq"]) \
-            .where(F.col("status") == "staged")
-        return staged if branch is None \
-            else staged.where(F.col("branch") == branch)
-
-    def _visible_runs(self, as_of=None,
-                      branch: Optional[str] = None) -> Optional[DataFrame]:
-        """(``_run_id``, ``_seq``) of the runs whose rows are visible:
-        committed at or before ``as_of``, plus the runs staged on
-        ``branch`` (null ``_seq``: a staged run publishes after every
-        existing delete).  None when there is no manifest."""
-        runs = self._runs()
-        if runs is None:
-            return None
-        vis = _committed_seqs(runs, self._as_of_seq(as_of, runs))
-        if branch is not None:
-            vis = vis.unionByName(self._staged_runs(branch, runs).select(
-                F.col("run_id").alias(RUN_ID_COL),
-                F.lit(None).cast("long").alias(SEQ_COL)))
-        return vis
-
-    def _delete_keys(self, vis: DataFrame) -> Optional[DataFrame]:
+    def _delete_keys(self, vis: DataFrame, runs: list) -> Optional[DataFrame]:
         """(url, _dseq) of the equality deletes committed by runs in
-        ``vis``, or None when no delete was ever written."""
-        if not self._exists("deletes"):
-            return None
-        return self.spark.read.parquet(self._path("deletes")) \
+        ``vis``, or None when no live delete write exists."""
+        live = self._write_dirs("deletes", runs)[0]
+        return None if not live else self._read_stage("deletes", wids=live) \
             .join(vis, RUN_ID_COL).select("url", F.col(SEQ_COL).alias("_dseq"))
 
-    def _visibility(self, as_of=None, branch: Optional[str] = None):
+    def _visibility(self, as_of=None, branch: Optional[str] = None,
+                    runs: Optional[list] = None):
         """(visible runs, delete keys): the inputs of the visibility rule,
-        resolved from one manifest read.  (None, None) when there is no
-        manifest."""
-        vis = self._visible_runs(as_of, branch)
-        return vis, (None if vis is None else self._delete_keys(vis))
+        resolved from one manifest read (``runs``, read here when None).
+        The visible runs are (``_run_id``, ``_seq``): committed at or
+        before ``as_of``, plus the runs staged on ``branch`` (null
+        ``_seq``: a staged run publishes after every existing delete).
+        (None, None) when there is no manifest."""
+        runs = self._runs() if runs is None else runs
+        if not runs:
+            return None, None
+        vis = _committed_seqs(self._runs_df(runs),
+                              self._as_of_seq(as_of, runs))
+        if branch is not None:
+            vis = vis.unionByName(self._runs_df(_staged(runs, branch)).select(
+                F.col("run_id").alias(RUN_ID_COL),
+                F.lit(None).cast("long").alias(SEQ_COL)))
+        return vis, self._delete_keys(vis, runs)
 
     def _filter_committed(self, df: DataFrame, as_of=None,
                           branch: Optional[str] = None,
@@ -269,20 +332,18 @@ class CheckpointedRun:
         return df.drop(RUN_ID_COL, SEQ_COL)
 
     def snapshots(self) -> Optional[DataFrame]:
-        """The snapshot log: committed manifest rows ordered by ``seq``
-        (run id, commit timestamp, rows processed, config lineage) — the
-        Iceberg ``snapshots`` metadata-table analogue, and the argument
-        source for ``as_of`` time travel."""
+        """The snapshot log: committed, unexpired manifest rows ordered by
+        ``seq`` (run id, commit timestamp, rows processed, config lineage)
+        — the Iceberg ``snapshots`` metadata-table analogue, and the
+        argument source for ``as_of`` time travel."""
         runs = self._runs()
-        if runs is None:
-            return None
-        return runs.where(F.col("status") == "committed").orderBy("seq")
+        return self._runs_df(runs).where((F.col("status") == "committed") & (
+            F.col("seq") >= _expired_below(runs))).orderBy("seq") if runs \
+            else None
 
     def _next_seq(self) -> int:
-        runs = self._runs()
-        if runs is None:
-            return 1
-        return int(runs.agg(F.max("seq")).collect()[0][0] or 0) + 1
+        return max((int(r["seq"]) for r in self._runs()
+                    if r.get("seq") is not None), default=0) + 1
 
     # ------------------------------------------------- row-level deletes
 
@@ -299,48 +360,52 @@ class CheckpointedRun:
         if not urls:
             return 0
         run_id = uuid.uuid4().hex
-        self.spark.createDataFrame(
-            [(u, run_id) for u in urls],
-            f"url string, {RUN_ID_COL} string",
-        ).write.mode("append").parquet(self._path("deletes"))
+        self.spark.createDataFrame([(u, run_id) for u in urls],
+                                   f"url string, {RUN_ID_COL} string") \
+            .write.parquet(self._write_path("deletes", run_id))
         self._manifest(run_id, len(urls), 0.0, kind="delete")
         return len(urls)
 
     def rewrite_deletes(self) -> dict:
         """Physically apply committed equality deletes to the data files
         (the ``rewrite_data_files``-with-delete-application maintenance
-        pass) and drop the delete files.  Invariants, pinned by the
-        parity tests:
+        pass): one replace commit (:meth:`_replace`) whose new writes hold
+        the rows of each url-keyed table's committed writes minus the
+        deleted ones, and which supersedes those writes and the delete
+        writes (a staged run's writes are left as they are: a delete
+        never hides a staged row).
+        Invariants, pinned by the parity tests:
 
         * CURRENT reads are identical before and after the rewrite;
         * ``as_of`` at-or-after the newest applied delete still works;
         * time travel to snapshots OLDER than the newest applied delete
-          is retired loudly (status ``expired`` — the parquet stand-in
-          keeps no old file versions, and silently returning a state
-          missing its deleted rows would un-pin lineage; real Iceberg
-          keeps old snapshots until ``expire_snapshots``).
+          is retired loudly: the replace row carries ``expire_below`` =
+          that delete's seq, so the rewrite and the expiry commit together
+          (the rewritten files no longer hold the deleted rows, and
+          silently returning a state missing them would un-pin lineage).
 
         Returns ``{"applied_deletes": n, "removed_rows": total}``."""
-        none = {"applied_deletes": 0, "removed_rows": 0}
-        vis, dkeys = self._visibility()
-        if dkeys is None:
-            return none
-        n_dels = dkeys.count()
-        if n_dels == 0:
-            return none
-
-        def keep(df):
-            if "url" not in df.columns:
-                return df
-            # left join: rows of staged or uncommitted runs keep a null
-            # seq and survive — this pass applies deletes, nothing else
-            seqd = df.join(F.broadcast(vis), RUN_ID_COL, "left")
-            return _drop_deleted(seqd, dkeys).drop(SEQ_COL)
-
-        removed = sum(self._rewrite_stages(keep).values())
+        runs = self._runs()
+        vis, dkeys = self._visibility(runs=runs)
+        if dkeys is None or (n_dels := dkeys.count()) == 0:
+            return {"applied_deletes": 0, "removed_rows": 0}
+        writes, removed = {}, 0
+        supersedes = [f"deletes/{w}" for w in
+                      self._write_dirs("deletes", runs, False)[0]]
+        for stage in STAGES + LINK_STAGES:
+            live = self._write_dirs(stage, runs, False)[0]
+            df = self._read_stage(stage, wids=live) if live else None
+            if df is None or "url" not in df.columns:
+                continue
+            kept = _drop_deleted(df.join(F.broadcast(vis), RUN_ID_COL),
+                                 dkeys).drop(SEQ_COL)
+            n_gone = df.count() - kept.count()
+            if n_gone:
+                removed += n_gone
+                writes[stage] = _stage_writer(kept, stage, "overwrite")
+                supersedes += [f"{stage}/{w}" for w in live]
         max_dseq = dkeys.agg(F.max("_dseq")).collect()[0][0]
-        shutil.rmtree(self._path("deletes"), ignore_errors=True)
-        self._expire_manifest_below(int(max_dseq))
+        self._replace(writes, supersedes, expire_below=int(max_dseq))
         return {"applied_deletes": n_dels, "removed_rows": removed}
 
     # ------------------------------------------------- WAP branching
@@ -351,7 +416,7 @@ class CheckpointedRun:
         plus the branch's staged runs (Iceberg: reading from the
         branch ref).  Main readers (`nodes()`, `extracted()`, ...)
         never see staged rows."""
-        return self._filter_committed(self._read_stage(stage), branch=branch)
+        return self._visible(stage, branch=branch)
 
     def publish_branch(self, branch: str) -> int:
         """Fast-forward publish (Iceberg: main ⇐ branch): every run
@@ -361,30 +426,22 @@ class CheckpointedRun:
         test pins by listing the stage directories before and after.
         Time travel to any pre-publish snapshot still excludes the
         branch.  Returns the number of runs published."""
-        staged = self._staged_runs(branch)
-        if staged is None:
-            return 0
-        # replay in staging order, carrying each run's processed count onto
-        # the publish row so the snapshot log stays meaningful
-        rows = staged.orderBy("seq").select("run_id", "processed_docs") \
-            .collect()
-        for r in rows:
-            self._manifest(r.run_id, int(r.processed_docs or 0), 0.0,
-                           kind="publish")
-        return len(rows)
+        staged = _staged(self._runs(), branch)
+        # carry each run's processed count onto the publish row so the
+        # snapshot log stays meaningful
+        for r in staged:
+            self._manifest(r["run_id"], int(r.get("processed_docs") or 0),
+                           0.0, kind="publish")
+        return len(staged)
 
     def drop_branch(self, branch: str) -> int:
-        """Abandon ``branch``: staged runs become aborted (their data
-        rows remain as invisible orphans, exactly like a crashed run's,
-        until `compact` rewrites them away).  Returns the number of runs
-        dropped."""
-        staged = self._staged_runs(branch)
-        if staged is None:
-            return 0
-        rids = [r.run_id for r in staged.select("run_id").collect()]
-        for rid in rids:
-            self._manifest(rid, 0, 0.0, kind="drop", status="aborted")
-        return len(rids)
+        """Abandon ``branch``: staged runs become aborted (their writes
+        remain as dead directories, exactly like a crashed run's, until
+        `compact` sweeps them).  Returns the number of runs dropped."""
+        staged = _staged(self._runs(), branch)
+        for r in staged:
+            self._manifest(r["run_id"], 0, 0.0, kind="drop", status="aborted")
+        return len(staged)
 
     # ---------------------------------------------------------------- run
 
@@ -392,14 +449,16 @@ class CheckpointedRun:
                    stage: str = "extracted") -> Optional[DataFrame]:
         """Resume anti-join build side: the visible urls of ``stage``
         (main, plus ``branch``'s staged runs); None before the first
-        commit, when nothing is visible — even if a crashed first run left
-        a partial append behind.  Equality deletes apply — a deleted url is
-        pending again, so re-ingesting it commits a fresh (visible)
-        snapshot.  The join prunes the scan to (url, run id)."""
-        df = self._stage_or_none(stage) if self._exists("runs") else None
-        if df is None:
-            return None
-        return self._filter_committed(df, branch=branch) \
+        commit or while the stage has no live write, when nothing is
+        visible — even if a crashed first run left a partial append
+        behind.  Equality deletes apply — a deleted url is pending again,
+        so re-ingesting it commits a fresh (visible) snapshot.  The join
+        prunes the scan to (url, run id)."""
+        runs = self._runs()
+        live = self._write_dirs(stage, runs)[0] if runs else []
+        return None if not live else self._filter_committed(
+            self._read_stage(stage, wids=live),
+            visibility=self._visibility(branch=branch, runs=runs)) \
             .select("url").distinct()
 
     def pending(self, inputs: DataFrame, stage: str = "extracted",
@@ -453,8 +512,12 @@ class CheckpointedRun:
         finally:
             res.unpersist()
         # the appends ran the observed extraction relation: its counter is
-        # the size of `extracted` without a count job
-        processed = res.run_counters["docs_extracted"]
+        # the size of `extracted` without a count job.  When no document
+        # was extractable, AQE prunes the empty observed stage from the
+        # plan of the write that finishes first, and the observation
+        # completes with an empty row: nothing was extracted
+        processed = res.run_counters["docs_extracted"] \
+            if res.observation._jo.getRow().length() else 0
         # the commit point: a run is visible if and only if this row landed
         # (for a branch run: visible to the BRANCH if and only if)
         self._manifest(run_id, processed, time.perf_counter() - t0,
@@ -465,15 +528,16 @@ class CheckpointedRun:
     def _append_stages(self, res: PipelineResult, run_id: str,
                        **extra: DataFrame) -> None:
         """The data-file half of the commit: the four stages of ``res``
-        and the ``extra`` named relations, no graph, stamped with
-        ``run_id``, invisible until `_manifest` records the run as
-        committed.  The appends run concurrently, one thread per stage:
-        each is a latency-bound job on small data, and tasks that reach a
-        persisted partition another job is computing wait on its block
-        lock and read it instead of recomputing.  Returns only after every
-        append has finished; then the first failure, in stage order, is
-        raised.  Split out so tests can simulate a crash between the
-        appends and the commit."""
+        and the ``extra`` named relations, no graph, each written to its
+        table's write directory for ``run_id`` and stamped with it,
+        invisible until `_manifest` records the run as committed.  The
+        appends run concurrently, one thread per stage: each is a
+        latency-bound job on small data, and tasks that reach a persisted
+        partition another job is computing wait on its block lock and read
+        it instead of recomputing.  Returns only after every append has
+        finished; then the first failure, in stage order, is raised.
+        Split out so tests can simulate a crash between the appends and
+        the commit."""
         extracted = res.extracted.withColumn(
             "bucket", host_bucket(F.col("url"), self.n_buckets))
         stages = [*zip(STAGES, (extracted, res.chunks, res.doc_mentions,
@@ -481,7 +545,7 @@ class CheckpointedRun:
 
         def append(name: str, df: DataFrame) -> None:
             _stage_writer(df.withColumn(RUN_ID_COL, F.lit(run_id)), name,
-                          "append").parquet(self._path(name))
+                          "append").parquet(self._write_path(name, run_id))
 
         # leaving the block waits for every append; each thread gets its
         # own copy of the caller's job group, scheduler pool and tags
@@ -495,48 +559,81 @@ class CheckpointedRun:
 
     # ------------------------------------------------------------ readers
 
-    def _read_stage(self, stage: str) -> DataFrame:
-        """Stage-table read with SCHEMA EVOLUTION semantics: parquet
-        footers are merged across data files, so batches appended by a
-        newer pipeline version with added columns coexist with old
-        files — old rows surface NULL in the new columns, exactly what
-        an Iceberg add-column gives (column adds never rewrite data).
-        Without mergeSchema, Spark samples one footer and the visible
-        schema would depend on file listing order.  A table without the
-        run stamp raises ``ValueError``: no manifest row can commit its
-        rows."""
-        df = self.spark.read.option("mergeSchema", "true").parquet(
-            self._path(stage))
-        if RUN_ID_COL not in df.columns:
-            raise ValueError(
-                f"stage table {stage!r} under {self.root} has no "
-                f"{RUN_ID_COL} column: it was written without a commit "
-                "(the unstamped stream layout); re-ingest the input into "
-                "a fresh root")
-        return df
+    def _write_dirs(self, table: str, runs: list,
+                    staged: bool = True) -> "tuple[list, list]":
+        """(live, dead) write ids of ``table`` under the live-write rule
+        (module docstring), from the manifest rows ``runs`` and one
+        listing of the table directory.  Without ``staged``, only the
+        writes of committed runs count as live: what a rewrite reads and
+        supersedes, so a staged run's writes stay its own and a drop of
+        its branch leaves them whole for `compact` to sweep.  Raises
+        ``ValueError`` naming the table when it holds data outside a
+        write directory."""
+        fs, jpath = _fs_path(self.spark, self._path(table))
+        gone, lost = _replaces(runs)
+        statuses = ("committed", "staged") if staged else ("committed",)
+        ok = {rid for rid, r in _latest(runs).items()
+              if rid not in lost and r.get("status") in statuses}
+        live, dead = [], []
+        for st in fs.listStatus(jpath) if fs.exists(jpath) else []:
+            name = st.getPath().getName()
+            if name.startswith(WRITE_DIR):
+                wid = name[len(WRITE_DIR):]
+                (live if wid in ok and f"{table}/{wid}" not in gone
+                 else dead).append(wid)
+            elif name[0] not in "_.":
+                raise ValueError(f"stage table {table!r} under {self.root} "
+                                 "holds data outside a write directory (an "
+                                 "earlier layout): re-ingest the input")
+        return live, dead
 
-    def _stage_or_none(self, stage: str) -> Optional[DataFrame]:
-        """:meth:`_read_stage`, or None while the stage has no data file:
-        never written, or holding only the temp files of a crash inside
-        its first append."""
-        if not self._exists(stage):
-            return None
+    def _empty_stage(self, table: str) -> DataFrame:
+        """A stamped relation with no rows and the columns ``table``'s
+        writes carry: the pipeline's columns over no pages for a stage,
+        `TABLE_COLUMNS` for any other table."""
+        df = getattr(run_pipeline(self.spark.createDataFrame([], WEB_PAGES),
+                                  replace(self.config, materialize=False)),
+                     table) if table in STAGES \
+            else self.spark.createDataFrame([], TABLE_COLUMNS[table])
+        return (df.withColumn("bucket", F.lit(0)) if table == "extracted"
+                else df).withColumn(RUN_ID_COL, F.lit(None).cast("string"))
+
+    def _read_stage(self, stage: str, runs: Optional[list] = None,
+                    wids: Optional[list] = None) -> DataFrame:
+        """The stamped rows of ``stage``'s writes ``wids`` (by default its
+        live writes under the manifest rows ``runs``, read here when
+        None), with SCHEMA EVOLUTION semantics: parquet footers are merged
+        across data files, so batches appended by a newer pipeline version
+        with added columns coexist with old files — old rows surface NULL
+        in the new columns, exactly what an Iceberg add-column gives
+        (column adds never rewrite data).  Without mergeSchema, Spark
+        samples one footer and the visible schema would depend on file
+        listing order.  An empty relation when no write holds a data file
+        (none given, or only empty appends)."""
+        if wids is None:
+            wids = self._write_dirs(
+                stage, self._runs() if runs is None else runs)[0]
         try:
-            return self._read_stage(stage)
+            if wids:
+                return self.spark.read.options(
+                    mergeSchema=True, basePath=self._path(stage)).parquet(
+                    *(self._write_path(stage, w) for w in wids)).drop("_write")
         except AnalysisException as e:
             if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
                 raise
-            return None
+        return self._empty_stage(stage)
 
     def graph(self, as_of=None) -> "tuple[DataFrame, DataFrame]":
         """(nodes, edges): `build_web_graph` over the committed
         ``extracted``, ``chunks`` and ``doc_mentions`` rows as of ``as_of``
         (snapshot seq or run id).  Ids and reverse edges follow this
         reader's ``id_mode`` and ``add_reverse_edges``.  The three stages
-        share one resolution of the visible runs and delete keys."""
-        visibility = self._visibility(as_of)
+        share one manifest read and one resolution of the visible runs
+        and delete keys."""
+        runs = self._runs()
+        visibility = self._visibility(as_of, runs=runs)
         extracted, chunks, doc_mentions = (
-            self._filter_committed(self._read_stage(s),
+            self._filter_committed(self._read_stage(s, runs),
                                    visibility=visibility)
             for s in ("extracted", "chunks", "doc_mentions"))
         return build_web_graph(extracted.drop("bucket"), chunks,
@@ -551,7 +648,15 @@ class CheckpointedRun:
     def committed(self, stage: str, as_of=None) -> DataFrame:
         """The visible rows of ``stage`` as of ``as_of``, without the run
         stamp."""
-        return self._filter_committed(self._read_stage(stage), as_of=as_of)
+        return self._visible(stage, as_of)
+
+    def _visible(self, stage: str, as_of=None, branch=None) -> DataFrame:
+        """`_filter_committed` over ``stage``'s live writes, both resolved
+        from one manifest read."""
+        runs = self._runs()
+        return self._filter_committed(
+            self._read_stage(stage, runs),
+            visibility=self._visibility(as_of, branch, runs))
 
     def extracted(self, as_of=None) -> DataFrame:
         """Extracted text across committed runs.  HIDDEN PARTITIONING:
@@ -566,13 +671,8 @@ class CheckpointedRun:
         """Every bucket-count spec data was ever committed (or staged)
         under, from the manifest — Iceberg's partition-spec registry
         analogue — plus the CURRENT spec."""
-        specs = {self.n_buckets}
-        runs = self._runs()
-        if runs is not None:
-            specs.update(int(r.n_buckets) for r in
-                         runs.where(F.col("n_buckets").isNotNull())
-                         .select("n_buckets").distinct().collect())
-        return specs
+        return {self.n_buckets} | {int(r["n_buckets"]) for r in self._runs()
+                                   if r.get("n_buckets") is not None}
 
     def extracted_for_hosts(self, hosts, as_of=None) -> DataFrame:
         """Pruned read of :meth:`extracted` for a host set: the reader
@@ -592,29 +692,57 @@ class CheckpointedRun:
         hosts = list(hosts)
         if not hosts:
             return self.extracted(as_of=as_of).limit(0)
-        hdf = self.spark.createDataFrame([(h,) for h in hosts],
-                                         "h string")
-        buckets: "set[int]" = set()
-        for spec in sorted(self._bucket_specs()):
-            buckets.update(
-                r[0] for r in hdf.select(
-                    F.pmod(F.xxhash64("h"), F.lit(spec))).collect())
-        df = self._read_stage("extracted").where(
-            F.col("bucket").isin(sorted(buckets)))
-        df = self._filter_committed(df, as_of=as_of)
-        return df.where(
-            F.parse_url(F.col("url"), F.lit("HOST")).isin(hosts)
+        hdf = self.spark.createDataFrame([(h,) for h in hosts], "h string")
+        buckets = {r[0] for spec in self._bucket_specs() for r in hdf.select(
+            F.pmod(F.xxhash64("h"), F.lit(spec))).collect()}
+        # the bucket filter sits above the visibility joins; the optimizer
+        # pushes it into the scan as a partition filter
+        return self.committed("extracted", as_of).where(
+            F.col("bucket").isin(sorted(buckets))
+            & F.parse_url(F.col("url"), F.lit("HOST")).isin(hosts)
         ).drop("bucket")
 
     # -------------------------------------------------------- maintenance
 
+    def _replace(self, writes: dict, supersedes: list,
+                 expire_below: Optional[int] = None) -> str:
+        """The one rewrite commit (Iceberg's ``replace`` snapshot): save
+        each ``{table: writer}`` as a parquet write under a fresh id,
+        commit one ``kind="replace"`` manifest row naming ``supersedes``
+        (``<table>/<write id>``, exactly the writes the rewrite read) and
+        ``expire_below``, and only then delete the superseded
+        directories.  A crash before the row leaves the new writes dead; a
+        crash after it leaves the superseded ones dead; `compact` sweeps
+        either.  A replace that loses a race with another over one of its
+        writes (`_replaces`) is dead: it deletes nothing and raises, and
+        the caller may retry.  Returns the new write id."""
+        rid = uuid.uuid4().hex
+        for table, writer in writes.items():
+            writer.format("parquet").save(self._write_path(table, rid))
+        self._manifest(rid, 0, 0.0, kind="replace", supersedes=supersedes,
+                       expire_below=expire_below)
+        if rid in _replaces(self._runs())[1]:
+            raise RuntimeError("a concurrent rewrite replaced the same "
+                               "writes first; this one committed nothing")
+        self._drop_writes(supersedes)
+        return rid
+
+    def _drop_writes(self, keys: list) -> None:
+        """Delete the write directories ``keys`` (``<table>/<write id>``),
+        then each of their tables' directories left with no write."""
+        for key in keys:
+            _delete(self.spark, self._write_path(*key.split("/", 1)))
+        for table in {key.split("/", 1)[0] for key in keys}:
+            if not any(self._write_dirs(table, [])):  # ([], every write)
+                _delete(self.spark, self._path(table))
+
     def compact_files(self, target_bytes: int = 128 << 20) -> dict:
-        """Bin-pack each stage table's data files toward ``target_bytes``
-        (Iceberg ``rewrite_data_files`` analogue) — the other half of
-        checkpoint maintenance next to :meth:`compact`.
+        """Bin-pack each stage table's committed data files toward
+        ``target_bytes`` (Iceberg ``rewrite_data_files`` analogue) — the
+        other half of checkpoint maintenance next to :meth:`compact`.
 
         Every resumed run and every streaming micro-batch *appends*, so a
-        long-lived checkpoint accumulates one small file per task per run:
+        long-lived checkpoint accumulates small files run after run:
         after 10k micro-batches a 100 TB table is millions of kilobyte
         files, and the planner pays per-file open/footer costs that dwarf
         the scan.  This rewrites any stage whose files are far smaller than
@@ -626,89 +754,71 @@ class CheckpointedRun:
         rewrite what compaction cannot improve — at 100 TB the rewrite IS
         the expensive operation).
 
-        Run it between ingestion runs, not concurrently with one: the
-        rewrite snapshots the table then swaps, so rows appended after the
-        snapshot would be lost (Iceberg's optimistic commit retry is the
-        production answer; plain parquet has no commit protocol to race).
+        The rewrite is the identity, committed through :meth:`_replace`:
+        it supersedes exactly the writes it read, so a run that commits
+        while it runs is neither lost nor duplicated, a concurrent rewrite
+        of the same writes makes one of the two raise, and a crash
+        anywhere leaves every read unchanged.  A staged run's writes are
+        not rewritten (see `_write_dirs`).
         """
-        rewritten: dict = {}
+        runs = self._runs()
+        writes, supersedes, before = {}, [], {}
         for stage in STAGES + LINK_STAGES:
-            path = self._path(stage)
-            stats = _data_file_stats(self.spark, path)
+            live = self._write_dirs(stage, runs, False)[0]
+            stats = _data_file_stats(
+                self.spark, *(self._write_path(stage, w) for w in live))
             if stats is None:
                 continue
-            n_files, total_bytes, n_dirs = stats
+            n_files, total_bytes, n_buckets = stats
             ideal = max(1, -(-total_bytes // target_bytes))  # ceil
             # a hive-partitioned table cannot go below one file per
-            # populated partition directory — that's the achievable floor
+            # populated bucket value — that's the achievable floor
             if stage == "extracted":
-                ideal = max(ideal, n_dirs)
+                ideal = max(ideal, n_buckets)
             # hysteresis: only rewrite when the table is fragmented well
             # past the ideal layout, so repeated maintenance is idempotent
             if n_files <= max(ideal * 2, ideal + 4):
                 continue
             # mergeSchema: a rewrite must never drop columns added by
             # schema evolution after some files were written
-            df = self._read_stage(stage)
-            if stage == "extracted":
-                writer = _stage_writer(df, stage, "overwrite")
-            else:
-                writer = df.repartition(int(ideal)).write.mode("overwrite")
+            df = self._read_stage(stage, wids=live)
+            writer = _stage_writer(df, stage, "overwrite") \
+                if stage == "extracted" \
+                else df.repartition(int(ideal)).write.mode("overwrite")
             # cap file size from the observed bytes/row so one fat bucket
             # cannot produce a single outsized file
-            n_rows = df.count()
-            if n_rows and total_bytes:
-                rows_per_file = max(1, int(n_rows * target_bytes
-                                           / total_bytes))
-                writer = writer.option("maxRecordsPerFile", rows_per_file)
-            _atomic_rewrite(path, writer.format("parquet"))
-            after = _data_file_stats(self.spark, path)
-            rewritten[stage] = (n_files, after[0] if after else 0)
-        return rewritten
-
-    def _rewrite_stages(self, keep) -> dict:
-        """Rewrite each stage table to ``keep(df)`` and swap it in
-        (:func:`_atomic_rewrite`); ``keep`` returning ``df`` itself skips
-        the stage.  Returns ``{stage: rows_removed}``."""
-        removed: dict = {}
-        for stage in STAGES + LINK_STAGES:
-            df = self._stage_or_none(stage)
-            if df is None:
-                continue  # never written, or no data file
-            kept = keep(df)
-            if kept is df:
-                continue
-            n_total = df.count()
-            n_keep = kept.count()
-            removed[stage] = n_total - n_keep
-            if n_total == n_keep:
-                continue
-            _atomic_rewrite(self._path(stage),
-                            _stage_writer(kept, stage, "overwrite")
-                            .format("parquet"))
-        return removed
+            writes[stage] = writer.option("maxRecordsPerFile", max(
+                1, int(df.count() * target_bytes / total_bytes)))
+            supersedes += [f"{stage}/{w}" for w in live]
+            before[stage] = n_files
+        rid = self._replace(writes, supersedes) if writes else ""
+        return {stage: (n, _data_file_stats(self.spark, self._write_path(
+            stage, rid))[0]) for stage, n in before.items()}
 
     def compact(self) -> dict:
-        """Expire orphan rows left by crashed (uncommitted) runs — the
-        parquet stand-in for Iceberg's ``expire_snapshots`` + data-file
-        rewrite.  Each stage table is rewritten keeping only the rows of
-        committed runs and of runs still staged on a branch (a branch ref
-        keeps its snapshots alive until it is published or dropped),
-        swapped in with a rename (readers in flight keep their
-        already-planned file list; new readers see the compacted table).
+        """The sweep — the parquet stand-in for Iceberg's orphan-file
+        removal: delete every write directory that is not live (module
+        docstring) — crashed runs' orphans, dropped branches' runs and
+        superseded writes — and a table directory left with no write.
+        Writes of runs still staged on a branch are live (a branch ref
+        keeps its snapshots alive until it is published or dropped).  Only
+        dead directories are deleted, so a crash mid-sweep changes no
+        read.  Run it when no run and no rewrite is in flight: their
+        writes are dead until their manifest row lands.
 
-        Returns ``{stage: rows_reclaimed}``.  No-op (zero reclaimed) when
-        every appended run committed — compaction is maintenance, never a
-        correctness requirement, because readers filter to committed runs
-        anyway."""
+        Returns ``{table: rows_reclaimed}`` for every table holding a
+        write.  No-op (zero reclaimed) when every write is live —
+        compaction is maintenance, never a correctness requirement,
+        because readers read only live writes anyway."""
         runs = self._runs()
-        if runs is None:
-            return self._rewrite_stages(lambda df: df.where(F.lit(False)))
-        live = _committed_seqs(runs).select(RUN_ID_COL).unionByName(
-            self._staged_runs(None, runs).select(
-                F.col("run_id").alias(RUN_ID_COL)))
-        return self._rewrite_stages(lambda df: df.join(
-            F.broadcast(live), RUN_ID_COL, "left_semi"))
+        reclaimed = {}
+        for table in STAGES + LINK_STAGES + ("deletes",):
+            live, dead = self._write_dirs(table, runs)
+            if live or dead:
+                reclaimed[table] = self._read_stage(
+                    table, wids=dead).count() if dead else 0
+            self._drop_writes([f"{table}/{w}" for w in dead])
+        return reclaimed
 
     def expire_snapshots(self, keep_last: int = 1) -> dict:
         """Retire time travel to all but the newest ``keep_last``
@@ -722,38 +832,28 @@ class CheckpointedRun:
         * ``as_of`` an expired snapshot raises loudly instead of
           silently un-pinning to some other state.
 
-        Orphan rows from crashed (never-committed) runs are the parquet
-        analogue of files referenced by NO retained snapshot, so they
-        are reclaimed here via :meth:`compact` — together the two halves
-        are the full expire pass.  ``keep_last`` must be at least 1, as
-        Iceberg's ``retain_last``.
+        The expiry is one appended, seq-less manifest record carrying
+        ``expire_below`` (``runs/expire-<cutoff>.json``); no manifest row
+        is rewritten.  Dead writes (crashed runs' orphans: files
+        referenced by NO retained snapshot) are reclaimed here via
+        :meth:`compact` — together the two halves are the full expire
+        pass.  ``keep_last`` must be at least 1, as Iceberg's
+        ``retain_last``.
 
         Returns ``{"expired": n_snapshots, "reclaimed_rows": total}``."""
         if keep_last < 1:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         snaps = self.snapshots()
-        if snaps is None:
-            return {"expired": 0, "reclaimed_rows": 0}
-        seqs = sorted(r.seq for r in snaps.select("seq").collect())
-        cutoff = seqs[-keep_last] if keep_last <= len(seqs) else 0
-        expired_n = self._expire_manifest_below(cutoff)
-        reclaimed = sum(self.compact().values())
-        return {"expired": expired_n, "reclaimed_rows": reclaimed}
-
-    def _expire_manifest_below(self, cutoff: int) -> int:
-        """Mark committed manifest rows with ``seq < cutoff`` as
-        ``expired`` (atomic json swap); returns the count."""
-        runs = self._runs()
-        old = (F.col("status") == "committed") & (F.col("seq") < cutoff)
-        expired_n = runs.where(old).count()
-        if expired_n:
-            updated = runs.withColumn(
-                "status",
-                F.when(old, F.lit("expired")).otherwise(F.col("status")))
-            _atomic_rewrite(self._path("runs"),
-                            updated.coalesce(1).write.mode("overwrite")
-                            .format("json"))
-        return expired_n
+        seqs = sorted(r.seq for r in snaps.select("seq").collect()) \
+            if snaps else []
+        if len(seqs) > keep_last:  # no seq: an expiry is no snapshot
+            cutoff = seqs[-keep_last]
+            record = {"kind": "expire", "expire_below": cutoff}
+            _create_exclusive(self.spark, f"{self._path('runs')}/expire-"
+                              f"{cutoff:020d}.json",
+                              json.dumps(record).encode() + b"\n")
+        return {"expired": max(0, len(seqs) - keep_last),
+                "reclaimed_rows": sum(self.compact().values())}
 
     def added_between(self, stage: str, since: int,
                       until=None) -> DataFrame:
@@ -762,27 +862,26 @@ class CheckpointedRun:
         incremental-scan (``start-snapshot-id``/``end-snapshot-id``)
         analogue; a downstream consumer processes exactly the delta
         between two checkpoints instead of rescanning the table."""
-        df = self._read_stage(stage)
         runs = self._runs()
-        if runs is None:
-            return df.where(F.lit(False)).drop(RUN_ID_COL)
-        pin = None if until is None else int(until)
-        rids = _committed_seqs(runs, pin) \
+        rids = _committed_seqs(self._runs_df(runs),
+                               None if until is None else int(until)) \
             .where(F.col(SEQ_COL) > int(since)).select(RUN_ID_COL)
-        return df.join(F.broadcast(rids), RUN_ID_COL, "left_semi") \
-            .drop(RUN_ID_COL)
+        return self._read_stage(stage, runs).join(
+            F.broadcast(rids), RUN_ID_COL, "left_semi").drop(RUN_ID_COL)
 
     def _manifest(self, run_id: str, processed: int,
                   wall_seconds: float, kind: str = "append",
                   status: str = "committed",
-                  branch: Optional[str] = None) -> None:
+                  branch: Optional[str] = None, **extra) -> None:
         """S12 run-manifest row (`orchestrator.py:149-240` analogue); doubles
         as the atomic commit record for ``run_id``'s appends (or its
-        staging record, for a WAP branch run).  The row is one file,
-        ``runs/<seq>.json``, created exclusively: a writer that finds its
-        seq taken retries at a strictly greater seq, so two writers never
-        share one and an unreadable file at a seq never blocks the next
-        commit.  No Spark job runs."""
+        staging record, for a WAP branch run, or a rewrite's replace
+        record, whose ``extra`` carries ``supersedes`` and
+        ``expire_below``).  The row is one file, ``runs/<seq>.json``,
+        created exclusively: a writer that finds its seq taken retries at
+        a strictly greater seq, so two writers never share one and an
+        unreadable file at a seq never blocks the next commit.  No Spark
+        job runs."""
         row = {
             "run_id": run_id,
             "kind": kind,
@@ -794,6 +893,7 @@ class CheckpointedRun:
             "run_ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
             "processed_docs": int(processed),
             "wall_seconds": float(round(wall_seconds, 3)),
+            **extra,
             **{f"cfg_{k}": str(v) for k, v in asdict(self.config).items()},
         }
         # monotone snapshot sequence — the time-travel axis (run_ts has
@@ -826,6 +926,12 @@ def _fs_path(spark: SparkSession, path: str):
             jpath)
 
 
+def _delete(spark: SparkSession, path: str) -> None:
+    """Recursively delete ``path`` (no-op when it is absent)."""
+    fs, jpath = _fs_path(spark, path)
+    fs.delete(jpath, True)
+
+
 def _create_exclusive(spark: SparkSession, path: str, data: bytes) -> bool:
     """Create the file ``path`` holding ``data``; False, leaving the file
     untouched, when it already exists.  Hadoop's ``create(path,
@@ -837,11 +943,10 @@ def _create_exclusive(spark: SparkSession, path: str, data: bytes) -> bool:
         local = fs.makeQualified(jpath).toUri().getPath()
         os.makedirs(os.path.dirname(local), exist_ok=True)
         try:
-            fd = os.open(local, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
+            with open(local, "xb") as fh:  # O_CREAT | O_EXCL
+                fh.write(data)
         except FileExistsError:
             return False
-        with os.fdopen(fd, "wb") as fh:
-            fh.write(data)
         return True
     try:
         out = fs.create(jpath, False)
@@ -862,39 +967,42 @@ def _is_local(fs) -> bool:
     return fs.getScheme() == "file"
 
 
-def _data_file_stats(spark: SparkSession, path: str):
-    """(file_count, total_bytes, partition_dirs) of a table's parquet data
-    files, or None when the table does not exist.  Uses the Hadoop
-    FileSystem API — the same listing the scan planner performs."""
+def _read_files(spark: SparkSession, path: str) -> list:
+    """The contents of the files directly under the directory ``path``
+    whose names start with neither ``_`` nor ``.``; none when ``path`` is
+    absent.  Python reads them on the local filesystem: a Hadoop read
+    costs several Py4J round trips per file, which a manifest of
+    thousands of commits would pay on every read."""
     fs, jpath = _fs_path(spark, path)
-    if not fs.exists(jpath):
-        return None
-    it = fs.listFiles(jpath, True)  # recursive: descends bucket=N dirs
-    n_files = 0
-    total = 0
-    parents = set()
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath()
-        if p.getName().endswith(".parquet"):
-            n_files += 1
-            total += st.getLen()
-            parents.add(p.getParent().toString())
-    if n_files == 0:
-        return None
-    return n_files, total, len(parents)
+    if _is_local(fs):
+        local = Path(fs.makeQualified(jpath).toUri().getPath())
+        return [f.read_bytes() for f in local.glob("[!_.]*") if f.is_file()]
+    out = []
+    for st in fs.listStatus(jpath) if fs.exists(jpath) else []:
+        if st.isFile() and st.getPath().getName()[0] not in "_.":
+            stream = fs.open(st.getPath())
+            try:
+                out.append(bytes(stream.readAllBytes()))
+            finally:
+                stream.close()
+    return out
 
 
-def _atomic_rewrite(path: str, writer) -> None:
-    """Materialize ``writer`` (its format already set) at a sibling temp
-    dir, then swap it into ``path`` — readers in flight keep their
-    already-planned file list, new readers see the rewritten table (the
-    parquet stand-in for an Iceberg rewrite commit; on object stores the
-    swap is the table-format's metadata pointer update, which is why
-    production uses Iceberg)."""
-    tmp = f"{path}.compacting"
-    writer.save(tmp)
-    old = f"{path}.old"
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old)
+def _data_file_stats(spark: SparkSession, *paths: str):
+    """(file_count, total_bytes, partition_dirs) of the parquet data files
+    under ``paths`` (a table, or some of its write directories), or None
+    when there is none.  ``partition_dirs`` counts distinct parent
+    directory names: for the ``extracted`` stage, the populated ``bucket``
+    values, however many writes hold each.  Uses the Hadoop FileSystem
+    API — the same listing the scan planner performs."""
+    sizes, parents = [], set()
+    for path in paths:
+        fs, jpath = _fs_path(spark, path)
+        # recursive: descends bucket=N dirs
+        it = fs.listFiles(jpath, True) if fs.exists(jpath) else None
+        while it is not None and it.hasNext():
+            st = it.next()
+            if st.getPath().getName().endswith(".parquet"):
+                sizes.append(st.getLen())
+                parents.add(st.getPath().getParent().getName())
+    return (len(sizes), sum(sizes), len(parents)) if sizes else None

@@ -81,7 +81,7 @@ NOFOLLOW_TAG_RE = '<a[^>]* rel="[^"]*nofollow[^"]*"[^>]*>'
 def extract_outlinks(pages: DataFrame, url_col: str = "url",
                      html_col: str = "html",
                      skip_nofollow: bool = False) -> DataFrame:
-    """(url, html) -> (src_host, dst_host, href), one row per anchor.
+    """(url, html) -> (url, src_host, dst_host, href), one row per anchor.
 
     Relative hrefs resolve to the page's own host; absolute http(s) hrefs
     to their own host.  Non-HTML payloads (e.g. PDF bytes) simply match no
@@ -99,13 +99,13 @@ def extract_outlinks(pages: DataFrame, url_col: str = "url",
         payload = (f"regexp_replace({payload}, "
                    f"'{NOFOLLOW_TAG_RE}', '<a>')")
     hrefs = F.expr(f"regexp_extract_all({payload}, '{HREF_RE}', 1)")
-    out = pages.select(src_host.alias("src_host"),
+    out = pages.select(url_col, src_host.alias("src_host"),
                        F.explode(hrefs).alias("href"))
     dst = F.when(
         F.col("href").rlike("^https?://"),
         F.regexp_extract("href", HOST_RE, 1),
     ).otherwise(F.col("src_host"))
-    return out.select("src_host", dst.alias("dst_host"), "href")
+    return out.select(url_col, "src_host", dst.alias("dst_host"), "href")
 
 
 def host_link_graph(pages: DataFrame, url_col: str = "url",

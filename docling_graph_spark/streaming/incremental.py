@@ -92,13 +92,16 @@ def run_incremental(spark: SparkSession, input_dir: str, output_root: str,
     from executors, before the commit) — continuous WET production from a
     raw crawl stream.
 
-    ``link_edges``: the run also commits the host-level outlink edge list
-    (partial counts) of its new urls as ``host_edges``, and those urls as
-    the ``host_edges_urls`` ledger; :func:`finalize_link_graph` re-sums
-    and ranks downstream.  The edges are exactly-once per url through the
-    ledger, not through ``extracted``: a url whose extraction fails the
-    extractable filter has still contributed edges, and a recapture must
-    not double them.
+    ``link_edges``: the run also commits the host-level outlink edge
+    partials of its new urls, ``(url, src_host, dst_host, n_links)``, as
+    ``host_edges``; :func:`finalize_link_graph` re-sums them by host pair
+    and ranks downstream.  The edges are exactly-once per url through
+    ``host_edges`` itself, not through ``extracted``: a url whose
+    extraction fails the extractable filter has still contributed edges,
+    and a recapture must not double them.  A delete hides a url's
+    partials like its other rows, so its recapture contributes them
+    afresh; a url with no outlinks has no partial and re-runs to zero
+    rows.
     """
     cfg = config or PipelineConfig()
     ck = CheckpointedRun(spark, output_root, cfg)
@@ -116,12 +119,14 @@ def run_incremental(spark: SparkSession, input_dir: str, output_root: str,
         todo = ck.pending(newest).localCheckpoint(eager=True)
         extra = {}
         if link_edges:
-            new_urls = ck.pending(newest, "host_edges_urls") \
-                .localCheckpoint(eager=True)
-            # per-batch partial counts: integer add is associative, so
-            # batch boundaries cannot change the finalized weights
-            extra = {"host_edges": op_lg.host_link_graph(new_urls),
-                     "host_edges_urls": new_urls.select("url")}
+            # per-url partial counts: a url is pending for edges until one
+            # of its captures committed them, and a delete hides them;
+            # integer add is associative, so batch boundaries cannot
+            # change the finalized weights
+            extra = {"host_edges": op_lg.extract_outlinks(
+                ck.pending(newest, "host_edges").localCheckpoint(eager=True))
+                .groupBy("url", "src_host", "dst_host")
+                .agg(F.count("*").alias("n_links"))}
         res = run_pipeline(todo, dataclasses.replace(
             cfg, run_id=f"{cfg.run_id}-b{batch_id}", materialize=True))
         if wet_dir:
@@ -201,10 +206,10 @@ def assemble_accumulated_graph(spark: SparkSession, output_root: str,
 def finalize_link_graph(spark: SparkSession, output_root: str,
                         write: bool = True) -> "tuple[DataFrame, DataFrame]":
     """Corpus-global host link graph + integer PageRank over the committed
-    ``host_edges`` partial counts of a stream's runs (read through the
-    visibility rule, so a crashed batch's partials stay out):
-    re-aggregate (sum of per-batch n_links — exact, since integer
-    addition is associative across any batch split) and rank.  Returns
+    per-url ``host_edges`` partial counts of a stream's runs (read through
+    the visibility rule, so a crashed batch's or a deleted url's partials
+    stay out): re-aggregate by host pair (sum of n_links — exact, since
+    integer addition is associative across any batch split) and rank.  Returns
     (edges, ranks); with ``write`` they land as ``host_edges_final`` /
     ``host_ranks`` snapshots (overwrite — finalize rebuilds the global
     view, the committed partials remain the source of truth)."""

@@ -22,7 +22,7 @@ Modes:
   resume  — CheckpointedRun: left_anti restart over the output tables
   stream  — Structured-Streaming availableNow drain with offset checkpoints;
             each micro-batch commits as one CheckpointedRun run
-  compact — checkpoint maintenance: orphan expiry (+ file bin-packing)
+  compact — checkpoint maintenance: sweep dead writes (+ file bin-packing)
   graph   — corpus-global graph finalize over accumulated stage tables
             (committed rows only)
   shards  — training-shard export: token-budget packing of the extracted
@@ -444,8 +444,11 @@ def main() -> int:
         # the wide shards table just for the summary line
         processed = sum(r["n_docs"] for r in rows)
     elif args.mode == "compact":
-        # expire crashed-run orphan rows from a resume checkpoint
-        # (Iceberg expire_snapshots analogue; see checkpointing.compact)
+        # sweep the write directories no committed run reads (crashed
+        # runs, dropped branches, superseded writes), then optionally
+        # bin-pack, which commits through the run manifest: no directory
+        # is renamed, so any Hadoop filesystem works (see
+        # checkpointing.compact / compact_files)
         from docling_graph_spark.checkpointing import CheckpointedRun
         ckpt_run = CheckpointedRun(spark, args.output, cfg)
         reclaimed = ckpt_run.compact()

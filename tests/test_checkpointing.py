@@ -8,7 +8,8 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from docling_graph_spark.checkpointing import CheckpointedRun, pending_inputs
+from docling_graph_spark.checkpointing import (STAGES, CheckpointedRun,
+                                               pending_inputs)
 from docling_graph_spark.pipeline import PipelineConfig, run_pipeline
 from docling_graph_spark.sources.web_pages import synthesize_web_pages
 
@@ -417,9 +418,8 @@ def test_failed_append_leaves_run_uncommitted(spark, pages, tmp_path,
 @pytest.mark.slow
 def test_part_file_manifest_stays_readable(spark, pages, tmp_path):
     """A manifest written as a Spark ``part-*.json`` (the earlier commit
-    layout, and the layout expire_snapshots rewrites to) reads next to
-    seq-named files: snapshots order them all by seq, and a commit after
-    the rewrite takes a fresh seq."""
+    layout) reads next to seq-named files: snapshots order them all by
+    seq, and a commit after an expiry takes a fresh seq."""
     from docling_graph_spark.checkpointing import MANIFEST_SCHEMA
 
     root = str(tmp_path / "ckpt_legacy")
@@ -439,7 +439,7 @@ def test_part_file_manifest_stays_readable(spark, pages, tmp_path):
     assert snaps[0].run_id == "legacy"
 
     assert run.expire_snapshots(keep_last=1)["expired"] == 2
-    assert not list((tmp_path / "ckpt_legacy" / "runs").glob("0*.json"))
+    assert (tmp_path / "ckpt_legacy/runs" / f"expire-{3:020d}.json").exists()
     n3 = run.run(third[2])
     assert n3 > 0
     assert _seqs(run) == [3, 4]
@@ -634,3 +634,295 @@ def test_old_layout_graph_stages_are_ignored(spark, pages, tmp_path):
     assert run.compact_files() == {}
     assert {n: sorted(p.name for p in (root / n).iterdir())
             for n in ("nodes", "edges")} == listing
+
+
+def _urls(df):
+    return sorted(r.url for r in df.select("url").collect())
+
+
+def test_manifest_through_the_hadoop_filesystem(spark, pages, tmp_path,
+                                                monkeypatch):
+    """Off the local filesystem the manifest is created and read through
+    the Hadoop FileSystem: a run commits and reads back, and a second run
+    finds nothing pending."""
+    from docling_graph_spark import checkpointing
+
+    monkeypatch.setattr(checkpointing, "_is_local", lambda fs: False)
+    run = CheckpointedRun(spark, str(tmp_path / "ckpt_hadoop"), CFG)
+    part = _slice(pages, 0, 20)
+    assert run.run(part) > 0
+    assert _seqs(run) == [1]
+    assert _urls(run.extracted()) == _urls(
+        run_pipeline(part, CFG).extracted)
+    assert run.run(part) == 0
+
+
+def _crash_append(run, part):
+    """Append every stage of ``part`` as a run that never commits."""
+    res = run_pipeline(part.localCheckpoint(eager=True), CFG).persist()
+    run._append_stages(res, "deadbeef-crashed")
+    res.unpersist()
+
+
+@pytest.fixture(scope="module")
+def maintained_root(spark, pages, tmp_path_factory):
+    """A root ready for every maintenance call: four committed writes per
+    table (fragmented), a crashed run's orphans and a committed delete.
+    Returns (root, seq of the last append, seq of the delete)."""
+    root = tmp_path_factory.mktemp("maint") / "ck"
+    run = CheckpointedRun(spark, str(root), CFG, n_buckets=4)
+    for k in range(4):
+        assert run.run(_slice(pages, k, 20))
+    _crash_append(run, _slice(pages, 4, 20))
+    run.delete_urls(_urls(run.extracted())[:2])
+    return root, 4, 5
+
+
+def _copy_root(spark, maintained_root, tmp_path, uri: bool = False):
+    """A private copy of the maintained root, opened by path or as a
+    ``file://`` URI."""
+    root = tmp_path / "ck"
+    shutil.copytree(maintained_root[0], root)
+    return root, CheckpointedRun(
+        spark, f"file://{root}" if uri else str(root), CFG, n_buckets=4)
+
+
+@pytest.mark.slow
+def test_maintenance_on_a_file_uri_root(spark, maintained_root, tmp_path):
+    """compact, compact_files, rewrite_deletes and expire_snapshots commit
+    through the manifest and delete with the Hadoop FileSystem, so a
+    ``file://`` root (like an ``hdfs://`` or ``s3a://`` one) works: reads
+    are unchanged, deletes are applied, and only the stage tables and the
+    manifest are left in the root."""
+    root, run = _copy_root(spark, maintained_root, tmp_path, uri=True)
+    urls = _urls(run.extracted())
+
+    assert run.compact()["extracted"] > 0
+    assert "extracted" in run.compact_files(target_bytes=1 << 20)
+    assert run.rewrite_deletes()["applied_deletes"] == 2
+    assert run.expire_snapshots(keep_last=1)["expired"] > 0
+    assert _urls(run.extracted()) == urls
+    assert sorted(p.name for p in root.iterdir()) == sorted(
+        ["runs", *STAGES])
+
+
+@pytest.mark.slow
+def test_run_job_compact_on_a_file_uri_output(spark, maintained_root,
+                                              tmp_path, capsys):
+    """``run_job.py --mode compact --target-file-mb 1`` on a ``file://``
+    output sweeps a crashed run's orphans and leaves the committed rows
+    readable."""
+    import json
+    import sys
+
+    import run_job
+
+    _, run = _copy_root(spark, maintained_root, tmp_path, uri=True)
+    urls = _urls(run.extracted())
+    argv = sys.argv
+    sys.argv = ["run_job.py", "--mode", "compact", "--output", run.root,
+                "--target-file-mb", "1"]
+    try:
+        rc = run_job.main()
+    finally:
+        sys.argv = argv
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 0 and out["processed_docs"] > 0  # the reclaimed rows
+    assert _urls(run.extracted()) == urls
+    assert set(run.compact().values()) == {0}
+
+
+@pytest.mark.slow
+def test_concurrent_runs_on_one_root_keep_every_row(spark, pages,
+                                                    tmp_path):
+    """Two runs appending to one root at once: each write stages its task
+    files under its own directory, so neither job commit deletes the
+    other's files, and every url either run processed is visible once."""
+    import threading
+
+    root = str(tmp_path / "ckpt_two")
+    half = F.pmod(F.xxhash64("url"), F.lit(2)) == 0
+    start = threading.Barrier(2)
+    counts, errors = [], []
+
+    def run_half(part):
+        try:
+            start.wait()
+            counts.append(CheckpointedRun(spark, root, CFG).run(part))
+        except Exception as e:  # reported below, with the other thread's
+            errors.append(e)
+
+    threads = [threading.Thread(target=run_half, args=(part,))
+               for part in (pages.filter(half), pages.filter(~half))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors, errors
+    run = CheckpointedRun(spark, root, CFG)
+    assert _urls(run.extracted()) == _urls(pages)
+    assert sum(counts) == pages.count()
+    assert _seqs(run) == [1, 2]
+
+
+@pytest.mark.slow
+def test_numeric_looking_run_id_stays_visible(spark, pages, maintained_root,
+                                              tmp_path):
+    """A run id that Spark's partition inference would read as a number
+    (this one as double infinity) names a write directory like any other:
+    its rows stay visible before and after compact_files rewrites them."""
+    _, run = _copy_root(spark, maintained_root, tmp_path)
+    rid = "0123456789e12345678901234567890"
+    part = _slice(pages, 5, 20)
+    res = run_pipeline(part.localCheckpoint(eager=True), CFG).persist()
+    run._append_stages(res, rid)
+    res.unpersist()
+    run._manifest(rid, part.count(), 0.0)
+    want = sorted(_urls(run.extracted(as_of=maintained_root[2]))
+                  + _urls(part))
+
+    assert _urls(run.extracted()) == want
+    assert _urls(run.extracted(as_of=rid)) == want
+    assert "extracted" in run.compact_files(target_bytes=1 << 20)
+    assert _urls(run.extracted()) == want
+    assert run.run(part) == 0
+
+
+@pytest.mark.slow
+def test_overlapping_rewrites_take_effect_once(spark, maintained_root,
+                                               tmp_path):
+    """Two rewrites that read the same writes both commit a replace row.
+    The replace rows apply in seq order, so the second lost the race: it
+    raises, deletes none of the writes it named (not even one the first
+    left live), and its own write is dead: every row stays visible once
+    and `compact` reclaims the dead copy."""
+    _, run = _copy_root(spark, maintained_root, tmp_path)
+    run.compact()
+    runs = run._runs()
+    chunks = run._write_dirs("chunks", runs, False)[0]
+    extracted = run._write_dirs("extracted", runs, False)[0]
+    copy = run._read_stage("chunks", wids=chunks).localCheckpoint(eager=True)
+    before = (_urls(run.extracted()), run.committed("chunks").count())
+
+    run._replace({"chunks": copy.write.mode("overwrite")},
+                 [f"chunks/{w}" for w in chunks])
+    with pytest.raises(RuntimeError, match="concurrent rewrite"):
+        run._replace({"chunks": copy.write.mode("overwrite")},
+                     [f"chunks/{w}" for w in chunks]
+                     + [f"extracted/{w}" for w in extracted])
+    assert (_urls(run.extracted()), run.committed("chunks").count()) \
+        == before
+    assert run.compact()["chunks"] == copy.count()
+    assert (_urls(run.extracted()), run.committed("chunks").count()) \
+        == before
+
+
+@pytest.mark.slow
+def test_rewrites_leave_staged_writes_to_their_branch(spark, pages,
+                                                      maintained_root,
+                                                      tmp_path):
+    """compact_files and rewrite_deletes rewrite only committed runs'
+    writes: a run staged on a branch keeps its own, so its branch still
+    previews it, and once the branch is dropped `compact` reclaims every
+    row it staged."""
+    _, run = _copy_root(spark, maintained_root, tmp_path)
+    run.compact()
+    part = _slice(pages, 5, 20)
+    staged = run.run(part, branch="audit")
+    assert staged > 0
+    main = _urls(run.extracted())
+
+    assert "extracted" in run.compact_files(target_bytes=1 << 20)
+    assert run.rewrite_deletes()["applied_deletes"] == 2
+    assert _urls(run.extracted()) == main
+    assert _urls(run.branch_preview("extracted", "audit")) == sorted(
+        main + _urls(run_pipeline(part, CFG).extracted))
+    assert run.drop_branch("audit") == 1
+    assert run.compact()["extracted"] == staged
+    assert _urls(run.extracted()) == main
+
+
+MAINTENANCE = {
+    "compact": lambda run: run.compact(),
+    "compact_files": lambda run: run.compact_files(target_bytes=1 << 20),
+    "rewrite_deletes": lambda run: run.rewrite_deletes(),
+    "expire_snapshots": lambda run: run.expire_snapshots(keep_last=1),
+}
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("call,crash", [
+    (call, crash) for call in sorted(MAINTENANCE)
+    for crash in ("commit", "sweep")
+    if (call, crash) != ("compact", "commit")])  # compact commits nothing
+def test_crashed_maintenance_changes_no_read(spark, maintained_root,
+                                            tmp_path, monkeypatch, call,
+                                            crash):
+    """A maintenance call that dies while committing (the replace row's or
+    the expiry record's create raises) or midway through deleting
+    directories leaves current and ``as_of`` reads as they were, and a
+    retry completes."""
+    from docling_graph_spark import checkpointing
+
+    # a committed rewrite_deletes or expiry retires the snapshots before
+    # the delete: the sweep after it must keep the others readable
+    pins = maintained_root[1:] if crash == "commit" or call in (
+        "compact", "compact_files") else maintained_root[2:]
+    _, run = _copy_root(spark, maintained_root, tmp_path)
+
+    def reads(pins=pins):
+        return ([_urls(run.extracted(as_of=pin)) for pin in pins],
+                _urls(run.extracted()), run.committed("chunks").count())
+
+    before = reads()
+    if crash == "commit":
+        create = checkpointing._create_exclusive
+
+        def failing_create(spark, path, data):
+            if b'"replace"' in data or b'"expire"' in data:
+                raise OSError("injected crash at the commit")
+            return create(spark, path, data)
+
+        monkeypatch.setattr(checkpointing, "_create_exclusive",
+                            failing_create)
+    else:
+        delete = checkpointing._delete
+        calls = []
+
+        def failing_delete(spark, path):
+            calls.append(path)
+            if len(calls) == 2:
+                raise OSError("injected crash in the sweep")
+            delete(spark, path)
+
+        monkeypatch.setattr(checkpointing, "_delete", failing_delete)
+    with pytest.raises(OSError, match="injected"):
+        MAINTENANCE[call](run)
+    assert reads() == before
+
+    monkeypatch.undo()
+    MAINTENANCE[call](run)
+    run.compact()
+    assert reads(pins=())[1:] == before[1:]
+
+
+def test_empty_committed_stage_reads_as_empty(spark, tmp_path):
+    """Runs whose pages all fail the extractable filter commit an empty
+    ``extracted`` write (the bucketed append writes no data file): the
+    committed stages read as empty relations and the graph is empty."""
+    import datetime
+
+    from docling_graph_spark import schemas
+
+    ts = datetime.datetime(2024, 1, 1)
+    pages = spark.createDataFrame([
+        ("https://a.example.com/pdfjunk", ts, b"%PDF-1.4 garbage", None,
+         "en"),
+        ("https://a.example.com/blank", ts,
+         b"<html><body><p>  \n\t  </p></body></html>", None, "en"),
+    ], schema=schemas.WEB_PAGES)
+    run = CheckpointedRun(spark, str(tmp_path / "ckpt_empty_stage"), CFG)
+    assert run.run(pages) == 0
+    assert run.extracted().count() == 0
+    nodes, edges = run.graph()
+    assert nodes.count() == 0 and edges.count() == 0

@@ -174,7 +174,7 @@ def test_schema_evolution_add_column(spark, pages, tmp_path):
         .withColumn("_run_id", F.lit(rid))
     )
     evolved.write.mode("append").partitionBy("bucket").parquet(
-        run._path("extracted"))
+        run._write_path("extracted", rid))
     run._manifest(rid, 1, 0.0)
 
     cur = run.extracted()
@@ -222,8 +222,8 @@ def test_hidden_partitioning_never_leaks_and_prunes(spark, pages,
     # the transform is the writer's: physical layout really is bucketed
     import os
 
-    dirs = [d for d in os.listdir(str(tmp_path / "ck" / "extracted"))
-            if d.startswith("bucket=")]
+    dirs = [d for w in os.scandir(str(tmp_path / "ck" / "extracted"))
+            for d in os.listdir(w.path) if d.startswith("bucket=")]
     assert len(dirs) > 1
 
     # empty host set: empty result, same schema

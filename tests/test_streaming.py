@@ -291,21 +291,49 @@ def test_link_edges_exactly_once_despite_failed_extraction(spark,
     assert got == {("src.example.com", "t.example.com"): 1}
 
 
+@pytest.mark.slow
+def test_deleted_url_recaptured_counts_its_links_once(spark, tmp_path):
+    """A delete hides a url's host-edge partials with its other rows: after
+    drain, delete, recapture and drain, the url's link counts once."""
+    import datetime
+
+    html = (b'<html><body><p>' + b"plenty of words here " * 10
+            + b'<a href="https://t.example.com/">x</a></p></body></html>')
+    url = "https://s.example.com/a"
+    inbox = str(tmp_path / "inbox")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    schema = "url string, html binary, text string, lang string"
+    for day in (1, 2):  # the first capture, then its recapture
+        spark.createDataFrame([(url, html, None, "en")], schema).withColumn(
+            "warc_ts", F.lit(datetime.datetime(2024, 1, day))
+        ).write.mode("append").parquet(inbox)
+        assert run_incremental(spark, inbox, out, ckpt, CFG,
+                               link_edges=True) == 1
+        if day == 1:
+            CheckpointedRun(spark, out, CFG).delete_urls([url])
+
+    edges, _ = finalize_link_graph(spark, out, write=False)
+    assert [tuple(r) for r in edges.collect()] == [
+        ("s.example.com", "t.example.com", 1)]
+
+
 def _graph_rows(df):
     """Every row of a node or edge relation, ``properties`` included."""
     return sorted(tuple(sorted(v.items()) if isinstance(v, dict) else v
                         for v in r) for r in df.collect())
 
 
-@pytest.mark.parametrize("blocked", ["chunks", "host_edges_urls"])
+@pytest.mark.parametrize("blocked", ["chunks", "host_edges"])
 def test_crashed_batch_replays_exactly_once(spark, sf_smoke_dir, tmp_path,
                                             blocked):
     """A drain that fails in one stage append of its micro-batch (the
-    path is a plain file) commits nothing.  Draining again with the same
-    checkpoint replays the batch, and every url then has exactly one
-    extracted row with its chunk and mention rows: the graph equals the
-    one-shot graph, the finalized host edges equal the batch link graph,
-    and compact() leaves every read unchanged."""
+    path is a plain file) commits nothing, and the graph and link graph
+    read empty.  Draining again with the same checkpoint replays the
+    batch, and every url then has exactly one extracted row with its
+    chunk and mention rows: the graph equals the one-shot graph, the
+    finalized host edges equal the batch link graph, and compact()
+    leaves every read unchanged."""
     from docling_graph_spark.operators import linkgraph as op_lg
 
     pages = synthesize_web_pages(spark, sf_smoke_dir).filter(
@@ -320,6 +348,11 @@ def test_crashed_batch_replays_exactly_once(spark, sf_smoke_dir, tmp_path,
     with pytest.raises(StreamingQueryException):
         run_incremental(spark, inbox, out, ckpt, CFG, link_edges=True)
     os.remove(f"{out}/{blocked}")
+    # before the replay nothing is committed, whether or not the crashed
+    # batch left a host_edges write behind: graph mode reads empty tables
+    nodes, _ = assemble_accumulated_graph(spark, out, CFG, write=False)
+    assert nodes.count() == 0
+    assert finalize_link_graph(spark, out, write=False)[0].count() == 0
     n = run_incremental(spark, inbox, out, ckpt, CFG, link_edges=True)
 
     ck = CheckpointedRun(spark, out, CFG)
