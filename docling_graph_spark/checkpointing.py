@@ -20,14 +20,17 @@ swap).  Citations: reference metadata sink
 `/root/reference/docling_graph/pipeline/orchestrator.py:149-240` (the run
 manifest), resume protocol per SURVEY §2.9.
 
-Layout: every write owns a directory, ``<table>/_write=run-<id>/`` (the
-bucketed ``extracted`` stage keeps ``bucket=N/`` beneath it), so each
-Spark job stages its task files under its own output path and concurrent
-runs on one root never touch each other's files.  A write is a run's stage
-append (its id is the run id), a delete file, or a rewrite.  The ``run-``
-prefix keeps the directory value from ever parsing as a number.  A table
-with data files outside a write directory (the flat layout of earlier
-roots) is refused with a ``ValueError`` naming it: re-ingest such a root.
+Layout: every write owns a directory, ``<table>/_write=run-<id>/``, so
+each Spark job stages its task files under its own output path and
+concurrent runs on one root never touch each other's files.  A write is a
+run's stage append (its id is the run id), a delete file, or a rewrite.
+The ``run-`` prefix keeps the directory value from ever parsing as a
+number.  A write is read by listing its directory recursively, with no
+partition discovery, so the writes of earlier roots that partitioned
+``extracted`` by url host into subdirectories read alongside flat ones,
+and a rewrite lands them flat.  A table with data files outside a write
+directory (the flat layout of earlier roots) is refused with a
+``ValueError`` naming it: re-ingest such a root.
 
 One commit protocol.  Every commit — an append, a delete, a publish, a
 stream micro-batch, a rewrite — is one exclusive create of the file
@@ -78,19 +81,15 @@ during its first commit leaves only invisible orphans.  The resume
 anti-join and every reader go through that one function.
 
 Scale notes: the anti-join's build side is only the key column of the done
-set (column pruning keeps it narrow); with Iceberg the done-keys scan prunes
-to the partitions the restart touches.  Appends are partitioned by url-host
-bucket so a resumed run's writes land in the same layout.  The visible
-run set is one tiny relation (one row per run) broadcast into the
-`_run_id` join.
+set (column pruning keeps it narrow).  No table is partitioned: no reader
+scans by a partition value, and a partitioned write costs a file per
+populated value on every commit.  The visible run set is one tiny relation
+(one row per run) broadcast into the `_run_id` join.
 
-The write rule, applied by `_stage_writer` to every append and rewrite:
-an AQE rebalance before the write (the optimized-write shuffle), so files
-follow the data, not the task count.  The bucketed ``extracted`` stage
-rebalances by ``bucket``, so each write lands one file per ``bucket=``
-directory; only a bucket past the advisory size is split, so a hot bucket
-never pins one task.  The other stages land a few advisory-sized files
-per commit.
+The write rule, applied by `_stage_writer` to every stage append and
+delete rewrite: an AQE rebalance before the write (the optimized-write
+shuffle), so each write lands a few advisory-sized files, following the
+data, not the task count.
 """
 
 from __future__ import annotations
@@ -135,7 +134,6 @@ MANIFEST_SCHEMA = StructType(
      StructField("kind", StringType()),
      StructField("status", StringType()),
      StructField("branch", StringType()),
-     StructField("n_buckets", LongType()),
      StructField("seq", LongType()),
      StructField("run_ts", StringType()),
      StructField("processed_docs", LongType()),
@@ -152,12 +150,6 @@ def pending_inputs(inputs: DataFrame, done: Optional[DataFrame],
     if done is None:
         return inputs
     return inputs.join(done, key, "left_anti")
-
-
-def host_bucket(url_col, n_buckets: int = 64):
-    """Stable url-host bucket used as the write partition column."""
-    return F.pmod(F.xxhash64(F.parse_url(url_col, F.lit("HOST"))),
-                  F.lit(n_buckets))
 
 
 def _committed_seqs(runs: DataFrame, pin: Optional[int] = None) -> DataFrame:
@@ -234,12 +226,10 @@ class CheckpointedRun:
     """
 
     def __init__(self, spark: SparkSession, root: str,
-                 config: Optional[PipelineConfig] = None,
-                 n_buckets: int = 64):
+                 config: Optional[PipelineConfig] = None):
         self.spark = spark
         self.root = root.rstrip("/")
         self.config = config or PipelineConfig()
-        self.n_buckets = n_buckets
 
     def _path(self, stage: str) -> str:
         return f"{self.root}/{stage}"
@@ -335,11 +325,16 @@ class CheckpointedRun:
         """The snapshot log: committed, unexpired manifest rows ordered by
         ``seq`` (run id, commit timestamp, rows processed, config lineage)
         — the Iceberg ``snapshots`` metadata-table analogue, and the
-        argument source for ``as_of`` time travel."""
+        argument source for ``as_of`` time travel.  A replace that lost a
+        race (`_replaces`) changed nothing, so it is no snapshot."""
         runs = self._runs()
-        return self._runs_df(runs).where((F.col("status") == "committed") & (
-            F.col("seq") >= _expired_below(runs))).orderBy("seq") if runs \
-            else None
+        if not runs:
+            return None
+        lost = _replaces(runs)[1]
+        kept = [r for r in runs if r.get("run_id") not in lost]
+        return self._runs_df(kept).where(
+            (F.col("status") == "committed")
+            & (F.col("seq") >= _expired_below(runs))).orderBy("seq")
 
     def _next_seq(self) -> int:
         return max((int(r["seq"]) for r in self._runs()
@@ -402,7 +397,7 @@ class CheckpointedRun:
             n_gone = df.count() - kept.count()
             if n_gone:
                 removed += n_gone
-                writes[stage] = _stage_writer(kept, stage, "overwrite")
+                writes[stage] = _stage_writer(kept, "overwrite")
                 supersedes += [f"{stage}/{w}" for w in live]
         max_dseq = dkeys.agg(F.max("_dseq")).collect()[0][0]
         self._replace(writes, supersedes, expire_below=int(max_dseq))
@@ -538,13 +533,11 @@ class CheckpointedRun:
         finished; then the first failure, in stage order, is raised.
         Split out so tests can simulate a crash between the appends and
         the commit."""
-        extracted = res.extracted.withColumn(
-            "bucket", host_bucket(F.col("url"), self.n_buckets))
-        stages = [*zip(STAGES, (extracted, res.chunks, res.doc_mentions,
+        stages = [*zip(STAGES, (res.extracted, res.chunks, res.doc_mentions,
                                 res.metrics)), *extra.items()]
 
         def append(name: str, df: DataFrame) -> None:
-            _stage_writer(df.withColumn(RUN_ID_COL, F.lit(run_id)), name,
+            _stage_writer(df.withColumn(RUN_ID_COL, F.lit(run_id)),
                           "append").parquet(self._write_path(name, run_id))
 
         # leaving the block waits for every append; each thread gets its
@@ -595,8 +588,7 @@ class CheckpointedRun:
                                   replace(self.config, materialize=False)),
                      table) if table in STAGES \
             else self.spark.createDataFrame([], TABLE_COLUMNS[table])
-        return (df.withColumn("bucket", F.lit(0)) if table == "extracted"
-                else df).withColumn(RUN_ID_COL, F.lit(None).cast("string"))
+        return df.withColumn(RUN_ID_COL, F.lit(None).cast("string"))
 
     def _read_stage(self, stage: str, runs: Optional[list] = None,
                     wids: Optional[list] = None) -> DataFrame:
@@ -608,20 +600,19 @@ class CheckpointedRun:
         in the new columns, exactly what an Iceberg add-column gives
         (column adds never rewrite data).  Without mergeSchema, Spark
         samples one footer and the visible schema would depend on file
-        listing order.  An empty relation when no write holds a data file
-        (none given, or only empty appends)."""
+        listing order.  Each write directory is listed recursively, with no
+        partition discovery, so a write holding subdirectories (the url-host
+        partitions of earlier roots) reads like a flat one and adds no
+        column.  Every committed write holds a data file, an empty append
+        included; an empty relation when no write is given."""
         if wids is None:
             wids = self._write_dirs(
                 stage, self._runs() if runs is None else runs)[0]
-        try:
-            if wids:
-                return self.spark.read.options(
-                    mergeSchema=True, basePath=self._path(stage)).parquet(
-                    *(self._write_path(stage, w) for w in wids)).drop("_write")
-        except AnalysisException as e:
-            if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
-                raise
-        return self._empty_stage(stage)
+        if not wids:
+            return self._empty_stage(stage)
+        return self.spark.read.options(
+            mergeSchema=True, recursiveFileLookup=True).parquet(
+            *(self._write_path(stage, w) for w in wids))
 
     def graph(self, as_of=None) -> "tuple[DataFrame, DataFrame]":
         """(nodes, edges): `build_web_graph` over the committed
@@ -636,8 +627,7 @@ class CheckpointedRun:
             self._filter_committed(self._read_stage(s, runs),
                                    visibility=visibility)
             for s in ("extracted", "chunks", "doc_mentions"))
-        return build_web_graph(extracted.drop("bucket"), chunks,
-                               doc_mentions, self.config)
+        return build_web_graph(extracted, chunks, doc_mentions, self.config)
 
     def nodes(self, as_of=None) -> DataFrame:
         return self.graph(as_of)[0]
@@ -659,48 +649,8 @@ class CheckpointedRun:
             visibility=self._visibility(as_of, branch, runs))
 
     def extracted(self, as_of=None) -> DataFrame:
-        """Extracted text across committed runs.  HIDDEN PARTITIONING:
-        the physical ``bucket=`` layout (a url-host hash transform,
-        :func:`host_bucket`) never leaks into the logical schema —
-        callers see exactly the pipeline's columns, as with an Iceberg
-        partition-spec transform.  Use :meth:`extracted_for_hosts` for
-        transform-aware pruned reads."""
-        return self.committed("extracted", as_of).drop("bucket")
-
-    def _bucket_specs(self) -> "set[int]":
-        """Every bucket-count spec data was ever committed (or staged)
-        under, from the manifest — Iceberg's partition-spec registry
-        analogue — plus the CURRENT spec."""
-        return {self.n_buckets} | {int(r["n_buckets"]) for r in self._runs()
-                                   if r.get("n_buckets") is not None}
-
-    def extracted_for_hosts(self, hosts, as_of=None) -> DataFrame:
-        """Pruned read of :meth:`extracted` for a host set: the reader
-        applies the SAME hidden transform the writer used (Iceberg's
-        partition-spec evaluation) — host -> bucket on the driver
-        (O(#hosts) tiny job), a partition filter on the physical
-        ``bucket`` column so only matching directories are scanned,
-        then the exact host predicate; the transform column still never
-        leaks out.
-
-        PARTITION SPEC EVOLUTION (Iceberg: spec-id per data file): if
-        the table accumulated runs under different ``n_buckets``
-        settings, the bucket IN-list is the UNION of each spec's
-        transform of the host set — files written under any historical
-        spec still prune correctly, and the exact host predicate keeps
-        the result identical to the unpruned read."""
-        hosts = list(hosts)
-        if not hosts:
-            return self.extracted(as_of=as_of).limit(0)
-        hdf = self.spark.createDataFrame([(h,) for h in hosts], "h string")
-        buckets = {r[0] for spec in self._bucket_specs() for r in hdf.select(
-            F.pmod(F.xxhash64("h"), F.lit(spec))).collect()}
-        # the bucket filter sits above the visibility joins; the optimizer
-        # pushes it into the scan as a partition filter
-        return self.committed("extracted", as_of).where(
-            F.col("bucket").isin(sorted(buckets))
-            & F.parse_url(F.col("url"), F.lit("HOST")).isin(hosts)
-        ).drop("bucket")
+        """Extracted text across committed runs."""
+        return self.committed("extracted", as_of)
 
     # -------------------------------------------------------- maintenance
 
@@ -746,8 +696,7 @@ class CheckpointedRun:
         after 10k micro-batches a 100 TB table is millions of kilobyte
         files, and the planner pays per-file open/footer costs that dwarf
         the scan.  This rewrites any stage whose files are far smaller than
-        the target into ~``total_bytes / target_bytes`` files, keeping the
-        ``bucket`` partition layout of the ``extracted`` stage.
+        the target into ~``total_bytes / target_bytes`` files.
 
         Returns ``{stage: (files_before, files_after)}`` for the rewritten
         stages; stages already near the target are left untouched (never
@@ -769,26 +718,16 @@ class CheckpointedRun:
                 self.spark, *(self._write_path(stage, w) for w in live))
             if stats is None:
                 continue
-            n_files, total_bytes, n_buckets = stats
+            n_files, total_bytes = stats
             ideal = max(1, -(-total_bytes // target_bytes))  # ceil
-            # a hive-partitioned table cannot go below one file per
-            # populated bucket value — that's the achievable floor
-            if stage == "extracted":
-                ideal = max(ideal, n_buckets)
             # hysteresis: only rewrite when the table is fragmented well
             # past the ideal layout, so repeated maintenance is idempotent
             if n_files <= max(ideal * 2, ideal + 4):
                 continue
             # mergeSchema: a rewrite must never drop columns added by
             # schema evolution after some files were written
-            df = self._read_stage(stage, wids=live)
-            writer = _stage_writer(df, stage, "overwrite") \
-                if stage == "extracted" \
-                else df.repartition(int(ideal)).write.mode("overwrite")
-            # cap file size from the observed bytes/row so one fat bucket
-            # cannot produce a single outsized file
-            writes[stage] = writer.option("maxRecordsPerFile", max(
-                1, int(df.count() * target_bytes / total_bytes)))
+            writes[stage] = self._read_stage(stage, wids=live) \
+                .repartition(int(ideal)).write.mode("overwrite")
             supersedes += [f"{stage}/{w}" for w in live]
             before[stage] = n_files
         rid = self._replace(writes, supersedes) if writes else ""
@@ -809,14 +748,23 @@ class CheckpointedRun:
         Returns ``{table: rows_reclaimed}`` for every table holding a
         write.  No-op (zero reclaimed) when every write is live —
         compaction is maintenance, never a correctness requirement,
-        because readers read only live writes anyway."""
+        because readers read only live writes anyway.  Dead writes are
+        the one read that may find no data file: a run that crashed
+        mid-write can leave nothing but ``_temporary/``, which counts as
+        zero rows."""
         runs = self._runs()
         reclaimed = {}
         for table in STAGES + LINK_STAGES + ("deletes",):
             live, dead = self._write_dirs(table, runs)
             if live or dead:
-                reclaimed[table] = self._read_stage(
-                    table, wids=dead).count() if dead else 0
+                reclaimed[table] = 0
+            if dead:
+                try:
+                    reclaimed[table] = self._read_stage(
+                        table, wids=dead).count()
+                except AnalysisException as e:
+                    if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+                        raise
             self._drop_writes([f"{table}/{w}" for w in dead])
         return reclaimed
 
@@ -887,9 +835,6 @@ class CheckpointedRun:
             "kind": kind,
             "status": status,
             "branch": branch or "",
-            # the partition spec this run's data files were written
-            # under (Iceberg: spec-id); readers union specs for pruning
-            "n_buckets": self.n_buckets,
             "run_ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
             "processed_docs": int(processed),
             "wall_seconds": float(round(wall_seconds, 3)),
@@ -907,14 +852,10 @@ class CheckpointedRun:
 
 # ------------------------------------------------------- file maintenance
 
-def _stage_writer(df: DataFrame, stage: str, mode: str):
-    """Writer of ``stage`` under the write rule (module docstring): an
-    AQE rebalance before the write, by ``bucket`` for the bucket-
-    partitioned ``extracted`` stage.  Appends, delete rewrites and the
-    bucketed `compact_files` rewrite all write through it."""
-    if stage == "extracted":
-        return df.hint("rebalance", "bucket").write.mode(mode) \
-            .partitionBy("bucket")
+def _stage_writer(df: DataFrame, mode: str):
+    """Writer of ``df`` under the write rule (module docstring): an AQE
+    rebalance before the write.  Stage appends and delete rewrites write
+    through it."""
     return df.hint("rebalance").write.mode(mode)
 
 
@@ -989,20 +930,16 @@ def _read_files(spark: SparkSession, path: str) -> list:
 
 
 def _data_file_stats(spark: SparkSession, *paths: str):
-    """(file_count, total_bytes, partition_dirs) of the parquet data files
-    under ``paths`` (a table, or some of its write directories), or None
-    when there is none.  ``partition_dirs`` counts distinct parent
-    directory names: for the ``extracted`` stage, the populated ``bucket``
-    values, however many writes hold each.  Uses the Hadoop FileSystem
-    API — the same listing the scan planner performs."""
-    sizes, parents = [], set()
+    """(file_count, total_bytes) of the parquet data files under ``paths``
+    (a table, or some of its write directories), or None when there is
+    none.  Uses the Hadoop FileSystem API, listing recursively as the
+    stage reads do."""
+    sizes = []
     for path in paths:
         fs, jpath = _fs_path(spark, path)
-        # recursive: descends bucket=N dirs
         it = fs.listFiles(jpath, True) if fs.exists(jpath) else None
         while it is not None and it.hasNext():
             st = it.next()
             if st.getPath().getName().endswith(".parquet"):
                 sizes.append(st.getLen())
-                parents.add(st.getPath().getParent().getName())
-    return (len(sizes), sum(sizes), len(parents)) if sizes else None
+    return (len(sizes), sum(sizes)) if sizes else None

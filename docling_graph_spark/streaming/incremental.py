@@ -147,8 +147,7 @@ def run_incremental(spark: SparkSession, input_dir: str, output_root: str,
 
 def assemble_accumulated_graph(spark: SparkSession, output_root: str,
                                config: Optional[PipelineConfig] = None,
-                               write: bool = True,
-                               check_unique: bool = True):
+                               write: bool = True):
     """The downstream batch job the streaming docstring promises: build the
     document/chunk/term graph over the stage tables a stream (or many
     resumed runs) accumulated under ``output_root``.
@@ -181,12 +180,8 @@ def assemble_accumulated_graph(spark: SparkSession, output_root: str,
     ck = CheckpointedRun(spark, root, config)
     extracted = ck.extracted()
 
-    # the guard is one aggregation over the url column; at full corpus
-    # scale a caller whose inputs never repeat a url within one run can
-    # skip it with check_unique=False
-    dup = (extracted.groupBy("url").count().filter(F.col("count") > 1)
-           if check_unique else None)
-    if dup is not None and not dup.limit(1).isEmpty():
+    dup = extracted.groupBy("url").count().filter(F.col("count") > 1)
+    if not dup.limit(1).isEmpty():
         raise ValueError(
             "extracted table holds multiple captures of the same url — "
             "graph finalize needs one capture per url (a run's input "

@@ -184,52 +184,51 @@ def test_compact_reclaims_only_orphans(spark, pages, tmp_path):
 
 def test_commit_writes_right_sized_files(spark, pages, tmp_path):
     """One commit writes files sized by its data, not by the shuffle
-    width: the bucketed stage lands one file per bucket directory, and
-    the chunk and grouped stages no more files than the session's
+    width: every stage lands no more files than the session's
     parallelism (a persisted shuffle output is coalesced like any
-    other)."""
+    other), in one flat write directory."""
+    import os
+
     from docling_graph_spark.checkpointing import _data_file_stats
 
     root = str(tmp_path / "ckpt_layout")
     CheckpointedRun(spark, root, CFG).run(pages)
-    # every populated bucket= directory holds exactly one parquet file
-    n_files, _, n_dirs = _data_file_stats(spark, f"{root}/extracted")
-    assert n_files == n_dirs
     cap = spark.sparkContext.defaultParallelism
-    for stage in ("chunks", "doc_mentions"):
+    for stage in STAGES:
         assert _data_file_stats(spark, f"{root}/{stage}")[0] <= cap, stage
+        for w in os.scandir(f"{root}/{stage}"):
+            assert all(f.is_file() for f in os.scandir(w.path)), w.path
 
 
 @pytest.mark.slow
 def test_compact_files_binpacks_fragmented_table(spark, pages, tmp_path):
-    """Many small incremental runs fragment the stage tables into one file
-    per task per run; compact_files rewrites them toward the target size
-    (file count drops, rows/values unchanged, partition layout kept)."""
+    """Many small incremental runs fragment the stage tables into at
+    least one file per run; compact_files rewrites them toward the target
+    size (file count drops, rows/values unchanged, no partition column)."""
     from docling_graph_spark.checkpointing import _data_file_stats
 
     root = str(tmp_path / "ckpt_files")
     run = CheckpointedRun(spark, root, CFG)
-    # four tiny runs -> at least 4 data files per stage table
-    urls = pages.select("url")
-    for k in range(4):
-        part = pages.filter(F.crc32(F.col("url")) % 4 == k)
-        run.run(part)
+    # six tiny runs -> at least 6 data files per stage table, past
+    # compact_files' threshold for a one-file target
+    for k in range(6):
+        run.run(_slice(pages, k, 6))
 
     before_rows = run.extracted().count()
     before_chunks = spark.read.parquet(f"{root}/chunks").count()
     n_before = _data_file_stats(spark, f"{root}/extracted")[0]
-    assert n_before >= 4
+    assert n_before >= 6
 
     packed = run.compact_files(target_bytes=256 << 20)
     assert "extracted" in packed  # fragmented table got rewritten
     n_after = _data_file_stats(spark, f"{root}/extracted")[0]
     assert n_after < n_before
 
-    # content unchanged, bucket partition layout preserved
+    # content unchanged, and no partition column appears
     assert run.extracted().count() == before_rows
     assert spark.read.parquet(f"{root}/chunks").count() == before_chunks
-    ext = spark.read.parquet(f"{root}/extracted")
-    assert "bucket" in ext.columns
+    assert "bucket" not in run.extracted().columns
+    assert "bucket" not in spark.read.parquet(f"{root}/extracted").columns
     # resume protocol still sees everything as done
     assert run.run(pages) == 0
     # idempotent: a second pass finds nothing fragmented enough to rewrite
@@ -376,22 +375,25 @@ def test_failed_append_leaves_run_uncommitted(spark, pages, tmp_path,
     """One stage append fails: run() raises only after every other append
     finished, writes no manifest row, and a retry once the path is fixed
     commits every page exactly once."""
+    import os
+
     from docling_graph_spark import checkpointing
 
     finished = []
     stage_writer = checkpointing._stage_writer
 
     class Tracked:
-        def __init__(self, writer, stage):
-            self.writer, self.stage = writer, stage
+        def __init__(self, writer):
+            self.writer = writer
 
         def parquet(self, path):
             self.writer.parquet(path)
-            finished.append(self.stage)
+            # the table of the write directory ``<table>/_write=run-<id>``
+            finished.append(os.path.basename(os.path.dirname(path)))
 
     monkeypatch.setattr(
         checkpointing, "_stage_writer",
-        lambda df, stage, mode: Tracked(stage_writer(df, stage, mode), stage))
+        lambda df, mode: Tracked(stage_writer(df, mode)))
 
     root = tmp_path / "ckpt_fail"
     root.mkdir()
@@ -427,7 +429,7 @@ def test_part_file_manifest_stays_readable(spark, pages, tmp_path):
     blank = {f.name: None for f in MANIFEST_SCHEMA}
     spark.createDataFrame([{
         **blank, "run_id": "legacy", "kind": "append",
-        "status": "committed", "branch": "", "n_buckets": 64, "seq": 1,
+        "status": "committed", "branch": "", "seq": 1,
         "processed_docs": 0, "wall_seconds": 0.0,
     }], MANIFEST_SCHEMA).write.mode("append").json(f"{root}/runs")
 
@@ -666,16 +668,17 @@ def _crash_append(run, part):
 
 @pytest.fixture(scope="module")
 def maintained_root(spark, pages, tmp_path_factory):
-    """A root ready for every maintenance call: four committed writes per
-    table (fragmented), a crashed run's orphans and a committed delete.
-    Returns (root, seq of the last append, seq of the delete)."""
+    """A root ready for every maintenance call: six committed writes per
+    table (fragmented past compact_files' threshold for a one-file
+    target), a crashed run's orphans and a committed delete.  Returns
+    (root, seq of the last append, seq of the delete)."""
     root = tmp_path_factory.mktemp("maint") / "ck"
-    run = CheckpointedRun(spark, str(root), CFG, n_buckets=4)
-    for k in range(4):
+    run = CheckpointedRun(spark, str(root), CFG)
+    for k in range(6):
         assert run.run(_slice(pages, k, 20))
-    _crash_append(run, _slice(pages, 4, 20))
+    _crash_append(run, _slice(pages, 6, 20))
     run.delete_urls(_urls(run.extracted())[:2])
-    return root, 4, 5
+    return root, 6, 7
 
 
 def _copy_root(spark, maintained_root, tmp_path, uri: bool = False):
@@ -684,7 +687,7 @@ def _copy_root(spark, maintained_root, tmp_path, uri: bool = False):
     root = tmp_path / "ck"
     shutil.copytree(maintained_root[0], root)
     return root, CheckpointedRun(
-        spark, f"file://{root}" if uri else str(root), CFG, n_buckets=4)
+        spark, f"file://{root}" if uri else str(root), CFG)
 
 
 @pytest.mark.slow
@@ -773,7 +776,7 @@ def test_numeric_looking_run_id_stays_visible(spark, pages, maintained_root,
     its rows stay visible before and after compact_files rewrites them."""
     _, run = _copy_root(spark, maintained_root, tmp_path)
     rid = "0123456789e12345678901234567890"
-    part = _slice(pages, 5, 20)
+    part = _slice(pages, 7, 20)
     res = run_pipeline(part.localCheckpoint(eager=True), CFG).persist()
     run._append_stages(res, rid)
     res.unpersist()
@@ -827,7 +830,7 @@ def test_rewrites_leave_staged_writes_to_their_branch(spark, pages,
     row it staged."""
     _, run = _copy_root(spark, maintained_root, tmp_path)
     run.compact()
-    part = _slice(pages, 5, 20)
+    part = _slice(pages, 7, 20)
     staged = run.run(part, branch="audit")
     assert staged > 0
     main = _urls(run.extracted())
@@ -908,8 +911,9 @@ def test_crashed_maintenance_changes_no_read(spark, maintained_root,
 
 def test_empty_committed_stage_reads_as_empty(spark, tmp_path):
     """Runs whose pages all fail the extractable filter commit an empty
-    ``extracted`` write (the bucketed append writes no data file): the
-    committed stages read as empty relations and the graph is empty."""
+    ``extracted`` write, which still holds one data file carrying the
+    schema: the committed stages read as empty relations with the columns
+    of a non-empty run, and the graph is empty."""
     import datetime
 
     from docling_graph_spark import schemas
@@ -920,9 +924,99 @@ def test_empty_committed_stage_reads_as_empty(spark, tmp_path):
          "en"),
         ("https://a.example.com/blank", ts,
          b"<html><body><p>  \n\t  </p></body></html>", None, "en"),
+        ("https://a.example.com/ok", ts,
+         b"<html><body><p>" + b"good content here " * 20
+         + b"</p></body></html>", None, "en"),
     ], schema=schemas.WEB_PAGES)
-    run = CheckpointedRun(spark, str(tmp_path / "ckpt_empty_stage"), CFG)
-    assert run.run(pages) == 0
+    root = tmp_path / "ckpt_empty_stage"
+    run = CheckpointedRun(spark, str(root), CFG)
+    ok = F.col("url").endswith("/ok")
+    assert run.run(pages.where(~ok)) == 0
+    assert list((root / "extracted").glob("_write=run-*/*.parquet"))
     assert run.extracted().count() == 0
     nodes, edges = run.graph()
     assert nodes.count() == 0 and edges.count() == 0
+
+    full = CheckpointedRun(spark, str(tmp_path / "ckpt_one_page"), CFG)
+    assert full.run(pages.where(ok)) == 1
+    assert run.extracted().columns == full.extracted().columns
+
+
+def test_lost_replace_is_no_snapshot(spark, tmp_path):
+    """A replace that lost a race with an earlier one over the same write
+    (`_replaces`) changed nothing: it is no snapshot in `snapshots()` and
+    does not count toward `expire_snapshots(keep_last)`."""
+    import json
+
+    runs = tmp_path / "ckpt_lost" / "runs"
+    runs.mkdir(parents=True)
+    rows = [{"run_id": "a", "kind": "append"},
+            {"run_id": "r1", "kind": "replace",
+             "supersedes": ["extracted/a"]},
+            {"run_id": "r2", "kind": "replace",
+             "supersedes": ["extracted/a"]}]
+    for seq, row in enumerate(rows, 1):
+        (runs / f"{seq:020d}.json").write_text(json.dumps({
+            **row, "status": "committed", "branch": "", "seq": seq,
+            "processed_docs": 0, "wall_seconds": 0.0}) + "\n")
+    run = CheckpointedRun(spark, str(runs.parent), CFG)
+    assert _seqs(run) == [1, 2]
+    assert run.expire_snapshots(keep_last=2)["expired"] == 0
+    assert _seqs(run) == [1, 2]
+    assert run.expire_snapshots(keep_last=1)["expired"] == 1
+    assert _seqs(run) == [2]
+
+
+@pytest.mark.slow
+def test_url_host_partitioned_write_reads_and_compacts_flat(spark, pages,
+                                                            tmp_path):
+    """A root whose ``extracted`` write an earlier layout partitioned by
+    url-host bucket (``_write=run-<id>/bucket=N/``), next to a run written
+    flat: reads see every row once and no ``bucket`` column, resume finds
+    nothing pending, the graph equals the one-shot graph, and
+    compact_files lands the old write flat with reads unchanged."""
+    from docling_graph_spark import checkpointing
+
+    root = tmp_path / "ckpt_bucketed"
+    run = CheckpointedRun(spark, str(root), CFG)
+    old = _slice(pages, 0, 2).localCheckpoint(eager=True)
+    rid = "0a1b2c3d"
+    res = run_pipeline(old, CFG).persist()
+    try:
+        for stage in STAGES:
+            df = getattr(res, stage).withColumn(
+                checkpointing.RUN_ID_COL, F.lit(rid))
+            path = run._write_path(stage, rid)
+            if stage == "extracted":
+                df.repartition(8).withColumn("bucket", F.pmod(
+                    F.xxhash64(F.parse_url("url", F.lit("HOST"))), F.lit(64))
+                ).write.partitionBy("bucket").parquet(path)
+            else:
+                df.write.parquet(path)
+        n_old = res.extracted.count()
+    finally:
+        res.unpersist()
+    run._manifest(rid, n_old, 0.0)
+    assert list(root.glob("extracted/*/bucket=*"))
+    assert run.run(pages) == pages.count() - n_old
+
+    want = run_pipeline(pages, CFG)
+    try:
+        want_counts = (want.nodes.count(), want.edges.count())
+        want_urls = _urls(want.extracted)
+    finally:
+        want.unpersist()
+
+    def reads():
+        ext = run.extracted()
+        assert "bucket" not in ext.columns
+        nodes, edges = run.graph()
+        return (_urls(ext), run.committed("chunks").count(),
+                (nodes.count(), edges.count()))
+
+    before = reads()
+    assert before[0] == want_urls and before[2] == want_counts
+    assert run.run(pages) == 0
+    assert "extracted" in run.compact_files(target_bytes=1 << 20)
+    assert reads() == before
+    assert not list(root.glob("extracted/*/bucket=*"))

@@ -29,12 +29,7 @@ production deployment can replace CheckpointedRun' internals with
    readers and the snapshot log, auditable through a branch read,
    idempotent against re-staging, published by a METADATA-ONLY
    fast-forward (no data file moves; pre-publish time travel excludes
-   the branch), or dropped leaving only compactable orphans;
-7. (round 5) PARTITION SPEC EVOLUTION: runs committed under different
-   bucket counts coexist — the manifest records each run's spec
-   (Iceberg: spec-id per data file) and pruned host reads union every
-   historical spec's transform, so old-spec files never vanish from a
-   pruned scan while the partition filter keeps pruning.
+   the branch), or dropped leaving only compactable orphans.
 """
 
 from __future__ import annotations
@@ -66,16 +61,22 @@ def _runs(spark, tmp_path, pages):
 
 
 def test_time_travel_stable_across_compaction(spark, pages, tmp_path):
-    run, n1, n2 = _runs(spark, tmp_path, pages)
+    run = CheckpointedRun(spark, str(tmp_path / "ck"),
+                          PipelineConfig(max_tokens=40))
+    # six runs of a few pages each: six writes, fragmented past
+    # compact_files' threshold for a one-file target
+    assert run.run(pages.limit(25)) == 25
+    for n in range(28, 41, 3):
+        assert run.run(pages.limit(n)) == 3
     before = {r.url for r in run.extracted(as_of=1).select("url").collect()}
-    assert len(before) == n1
+    assert len(before) == 25
     # rewrite data files (bin-packing) then re-read the SAME snapshot:
     # byte-identical membership — compaction is invisible to lineage
-    run.compact_files(target_bytes=1 << 30)
+    assert "extracted" in run.compact_files(target_bytes=1 << 30)
     run.compact()
     after = {r.url for r in run.extracted(as_of=1).select("url").collect()}
     assert after == before
-    assert run.extracted().count() == n1 + n2
+    assert run.extracted().count() == 40
 
 
 def test_expire_snapshots_keeps_current_state(spark, pages, tmp_path):
@@ -166,20 +167,20 @@ def test_schema_evolution_add_column(spark, pages, tmp_path):
     rid = _uuid.uuid4().hex
     evolved = (
         spark.createDataFrame(
-            [("https://host999.example.com/new1", "fresh text", "v2")],
+            [(f"https://host999.example.com/new{i}", "fresh text", "v2")
+             for i in range(1, 7)],
             "url string, text string, extractor_version string")
-        .withColumn("bucket",
-                    F.pmod(F.xxhash64(F.parse_url("url", F.lit("HOST"))),
-                           F.lit(run.n_buckets)))
         .withColumn("_run_id", F.lit(rid))
     )
-    evolved.write.mode("append").partitionBy("bucket").parquet(
+    # one file per row, so the table is fragmented enough for
+    # compact_files to rewrite it
+    evolved.write.mode("append").option("maxRecordsPerFile", 1).parquet(
         run._write_path("extracted", rid))
-    run._manifest(rid, 1, 0.0)
+    run._manifest(rid, 6, 0.0)
 
     cur = run.extracted()
     assert "extractor_version" in cur.columns
-    assert "bucket" not in cur.columns          # still hidden
+    assert "bucket" not in cur.columns
     rows = {r.url: (r.text, r.extractor_version)
             for r in cur.select("url", "text",
                                 "extractor_version").collect()}
@@ -188,46 +189,20 @@ def test_schema_evolution_add_column(spark, pages, tmp_path):
     for url, text in before.items():
         assert rows[url] == (text, None)
     # maintenance rewrite keeps the evolved column's data
-    run.compact_files(target_bytes=1 << 30)
+    assert "extracted" in run.compact_files(target_bytes=1 << 30)
     after = {r.url: (r.text, r.extractor_version)
              for r in run.extracted()
              .select("url", "text", "extractor_version").collect()}
     assert after == rows
 
 
-def test_hidden_partitioning_never_leaks_and_prunes(spark, pages,
-                                                    tmp_path):
-    """Iceberg hidden-partitioning semantics: the url-host bucket
-    transform is invisible in every logical schema, and a host-scoped
-    read applies the transform READER-side so the scan carries a real
-    partition filter (directory pruning) while returning exactly what
-    the unpruned read filtered by host returns."""
-    from docling_graph_spark.plans import formatted_plan
-
+def test_physical_layout_never_leaks(spark, pages, tmp_path):
+    """The write layout is invisible in every logical schema: no
+    partition column (``bucket``) and no write-directory column
+    (``_write``) surfaces, current or time-travelled."""
     run, n1, n2 = _runs(spark, tmp_path, pages)
-    assert "bucket" not in run.extracted().columns
-    assert "bucket" not in run.extracted(as_of=1).columns
-
-    host = "host0.example.com"
-    pruned = run.extracted_for_hosts([host])
-    assert "bucket" not in pruned.columns
-    want = {r.url for r in run.extracted()
-            .where(F.parse_url("url", F.lit("HOST")) == host)
-            .select("url").collect()}
-    got = {r.url for r in pruned.select("url").collect()}
-    assert got == want and got
-    plan = formatted_plan(pruned)
-    assert "PartitionFilters" in plan and "bucket" in plan
-
-    # the transform is the writer's: physical layout really is bucketed
-    import os
-
-    dirs = [d for w in os.scandir(str(tmp_path / "ck" / "extracted"))
-            for d in os.listdir(w.path) if d.startswith("bucket=")]
-    assert len(dirs) > 1
-
-    # empty host set: empty result, same schema
-    assert run.extracted_for_hosts([]).count() == 0
+    for df in (run.extracted(), run.extracted(as_of=1)):
+        assert not {"bucket", "_write", "_run_id"} & set(df.columns)
 
 
 # ---------------------------------------------------------------------------
@@ -440,53 +415,3 @@ def test_wap_two_branches_are_independent(spark, pages, tmp_path):
     # fast-forward conflict); here we just drop b2
     assert run.drop_branch("b2") == 1
     assert run.extracted().count() == 32
-
-
-# --------------------------------------- partition spec evolution (round 5)
-
-def test_partition_spec_evolution_prunes_across_specs(spark, pages,
-                                                      tmp_path):
-    """7. A table that accumulated runs under DIFFERENT n_buckets
-    settings (Iceberg: partition spec evolution, spec-id per data
-    file) keeps pruned host reads IDENTICAL to the unpruned read: the
-    reader unions each historical spec's transform of the host set,
-    so files written under the old spec never vanish from a pruned
-    scan."""
-    run8 = CheckpointedRun(spark, str(tmp_path / "ck"),
-                           PipelineConfig(max_tokens=40), n_buckets=8)
-    assert run8.run(pages.limit(25)) == 25
-    # the table evolves: later runs bucket by 4
-    run4 = CheckpointedRun(spark, str(tmp_path / "ck"),
-                           PipelineConfig(max_tokens=40), n_buckets=4)
-    assert run4.run(pages) == 15
-    assert run4._bucket_specs() == {4, 8}
-
-    full = run4.extracted()
-    hosts = sorted({r.h for r in full.select(
-        F.parse_url("url", F.lit("HOST")).alias("h")).collect()})[:5]
-    want = {r.url for r in full.where(
-        F.parse_url("url", F.lit("HOST")).isin(hosts)).collect()}
-    got = {r.url for r in
-           run4.extracted_for_hosts(hosts).collect()}
-    assert got == want and len(got) > 0
-    # rows from BOTH specs' runs are present (the old spec's files
-    # did not vanish from the pruned read)
-    old_urls = {r.url for r in run8.extracted(as_of=1).collect()}
-    assert got & old_urls, "pruned read lost the old spec's files"
-    # and the plan still prunes: a partition filter on bucket exists
-    plan = run4.extracted_for_hosts(hosts)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "PartitionFilters" in plan and "bucket" in plan
-
-
-def test_partition_spec_single_spec_unchanged(spark, pages, tmp_path):
-    run = CheckpointedRun(spark, str(tmp_path / "ck"),
-                          PipelineConfig(max_tokens=40), n_buckets=16)
-    run.run(pages.limit(20))
-    assert run._bucket_specs() == {16}
-    full = run.extracted()
-    host = full.select(
-        F.parse_url("url", F.lit("HOST")).alias("h")).first().h
-    want = full.where(
-        F.parse_url("url", F.lit("HOST")) == host).count()
-    assert run.extracted_for_hosts([host]).count() == want
